@@ -47,72 +47,38 @@ object Bfs {
     require(maxHops >= 1, "maxHops must be >= 1")
     val a = edges.columns(0)
     val b = edges.columns(1)
-    val spark = edges.sparkSession
-    val scope = new CheckpointScope(spark.sparkContext)
     // symmetrize + dedup once under the caller's (adaptive) planning;
-    // the count sizes the static round partitioning (see [[StaticPlan]]).
-    // Canonical-orient then explode both orientations — one pass over
-    // the input (a two-projection union executes its upstream twice)
-    // and dedup at half the symmetric size.
-    // LAZY + count (setup fusion, r15): the sizing count() is the job
-    // that materializes the checkpoint — no separate persist job.
-    val canon = scope.ckptLazy(
-      edges.filter(col(a) =!= col(b))
-        .select(least(col(a).cast("long"), col(b).cast("long")).as("u"),
-          greatest(col(a).cast("long"), col(b).cast("long")).as("v"))
-        .distinct()
-        .select(explode(array(
-          struct(col("u").as("src"), col("v").as("dst")),
-          struct(col("v").as("src"), col("u").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val nEdges = canon.count()
-    // big-rung heap survival: round generations past the threshold pin
-    // serialized blocks (see StaticPlan.SER_CKPT_ROWS)
-    scope.serialized = nEdges > StaticPlan.SER_CKPT_ROWS
-    scope.guarded(StaticPlan.scoped(spark,
-        StaticPlan.roundPartitions(nEdges, spark,
-        StaticPlan.GRAPH_ROUND_ROWS)) {
-      runStatic(scope, canon, seeds, maxHops)
-    })
-  }
-
-  private def runStatic(scope: CheckpointScope, canon: DataFrame,
-      seeds: DataFrame, maxHops: Int): DataFrame = {
-    // LAZY setup checkpoints (setup fusion, see [[FusedRounds]]): the
-    // layout and dist₀ materialize inside the first eager round's job
-    val sym = scope.ckptLazy(canon.repartition(col("src"))
-      .sortWithinPartitions(col("src")))
-    val nodes = sym.select(col("src").as("node")).distinct()
-    val sd = seeds.select(col(seeds.columns(0)).cast("long").as("node"))
-      .distinct().withColumn("__seed", lit(true))
-    var distIds = List.empty[Int]
-    var dist = scope.ckptLazy(nodes.join(broadcast(sd), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__seed"), lit(0L)).otherwise(lit(null).cast("long")).as("dist")))
-    distIds = scope.last
-    // fused hop rounds (see [[FusedRounds]] / [[StaticPlan.fuseDepth]])
-    val fused = new FusedRounds(scope, maxHops,
-      StaticPlan.fuseDepth(scope.serialized, maxHops))
-    for (k <- 1 to maxHops) {
-      // frontier: nodes first reached in round k-1 — a narrow filter
-      // over the checkpointed table, already node-partitioned
-      val frontier = dist.filter(col("dist") === lit(k - 1L))
-        .select(col("node").as("src"))
-      // co-partitioned join (src = src); the dst dedup is the round's
-      // one exchange
-      val reached = sym.join(frontier, Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .withColumn("__new", lit(true))
-      val next = fused.ckptRound(dist.join(reached, Seq("node"), "left")
+    // the count sizes the static round partitioning
+    val canon = GraphRounds.symmetric(
+      edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")))
+    GraphRounds.run(canon) { (scope, pinned, _) =>
+      // LAZY setup checkpoints (setup fusion): the layout and dist₀
+      // materialize inside the first eager round's job
+      val sym = scope.ckptLazy(pinned.repartition(col("src"))
+        .sortWithinPartitions(col("src")))
+      val nodes = sym.select(col("src").as("node")).distinct()
+      val sd = seeds.select(col(seeds.columns(0)).cast("long").as("node"))
+        .distinct().withColumn("__seed", lit(true))
+      val dist0 = scope.ckptLazy(nodes.join(broadcast(sd), Seq("node"), "left")
         .select(col("node"),
-          when(col("dist").isNotNull, col("dist"))
-            .when(col("__new"), lit(k.toLong))
-            .otherwise(lit(null).cast("long")).as("dist")),
-        distIds)
-      dist = next
-      distIds = fused.last
+          when(col("__seed"), lit(0L)).otherwise(lit(null).cast("long")).as("dist")))
+      // fused hop rounds ([[GraphRounds.iterate]])
+      GraphRounds.iterate(scope, dist0, maxHops) { (dist, k) =>
+        // frontier: nodes first reached in round k-1 — a narrow filter
+        // over the checkpointed table, already node-partitioned
+        val frontier = dist.filter(col("dist") === lit(k - 1L))
+          .select(col("node").as("src"))
+        // co-partitioned join (src = src); the dst dedup is the round's
+        // one exchange
+        val reached = sym.join(frontier, Seq("src"))
+          .select(col("dst").as("node")).distinct()
+          .withColumn("__new", lit(true))
+        dist.join(reached, Seq("node"), "left")
+          .select(col("node"),
+            when(col("dist").isNotNull, col("dist"))
+              .when(col("__new"), lit(k.toLong))
+              .otherwise(lit(null).cast("long")).as("dist"))
+      }
     }
-    scope.freeAllBut(distIds)
-    dist
   }
 }

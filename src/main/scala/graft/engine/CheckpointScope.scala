@@ -4,30 +4,6 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /**
- * Storage hygiene for iterative algorithms built on eager
- * `localCheckpoint` ([[PageRank]], [[ConnectedComponents]]): each
- * checkpoint pins its partitions in executor storage, and the Dataset
- * API offers no way to free them — `Dataset.unpersist` only touches the
- * cache manager, not the checkpoint's backing RDD. A loop that
- * checkpoints per round therefore leaks one RDD's worth of storage per
- * round PER CALL, which on a long-lived session (a bench loop, a
- * scheduled re-rank, a notebook) accumulates until memory pressure
- * evicts live blocks (measured: PageRank at sf0.1 degraded 2.6s → 8.7s
- * over six calls purely from dead checkpoint blocks).
- *
- * The scope reads each checkpoint's pinned RDD id EXACTLY from the
- * returned Dataset's own plan (the LogicalRDD leaf wraps the persisted
- * RDD), so concurrent scopes in one SparkContext cannot mis-attribute
- * or free each other's live checkpoints; a global id-set diff remains
- * only as a fallback for unexpected plan shapes. The scope frees the
- * intermediates once the loop's result no longer references them.
- * IMPORTANT: a localCheckpoint's lineage is TRUNCATED — unpersisting
- * one makes it unrecomputable — so only ids provably dead may be freed:
- * a returned plan that still references a checkpoint lazily (e.g. a
- * final projection over the node table) must keep it via `keep`.
- *
- */
-/**
  * Static-planning scope for ITERATIVE algorithm bodies. Two reasons a
  * per-round loop wants AQE off and an explicit partition count:
  *
@@ -203,78 +179,33 @@ private[graft] object StaticPlan {
     * Still capped at the session's shuffle-partition setting, so
     * cluster-scale graphs keep the caller's full width. */
   val GRAPH_ROUND_ROWS = 131072L
-
-  /** Round-fusion depth for [[FusedRounds]], sized from the engine's
-    * materialized row count like everything else: BELOW the serialized-
-    * checkpoint threshold every round stays lazy until the last, so the
-    * whole loop materializes in ONE scheduled job (JobProbe r15: the
-    * graph engines' sf-scale cost is per-job latency — job-time sum ≈
-    * wall over 12-20 jobs of 0.1-0.5 s); ABOVE it, keep the measured
-    * 2-round pairing — fusion defers the freeing of dead generations
-    * until the next EAGER round, so deep fusion of ~10⁸-row generations
-    * would pin `rounds` edge-sized tables at once against the heap the
-    * serialized level exists to protect (the k-core 16 g survival,
-    * r14). The depth only changes WHEN checkpoints materialize and
-    * dead rounds free, never what any round computes. `big` is the
-    * engine's existing size gate (`nRows > SER_CKPT_ROWS`, i.e.
-    * `scope.serialized`) — the same predicate that already decides the
-    * checkpoint storage level. */
-  def fuseDepth(big: Boolean, rounds: Int): Int =
-    if (big) 2 else math.max(2, rounds)
 }
 
 /**
- * Round-FUSION helper for the iterative engines: checkpoint every 2nd
- * round LAZILY ([[CheckpointScope.ckptLazy]]) so two narrow rounds
- * materialize inside ONE scheduled job. JobProbe (round 10) measured
- * the sf-scale cost of the graph engines as pure iteration latency —
- * job-time sum ≈ wall, one job per round checkpoint — so halving the
- * scheduled jobs halves the floor; at real scale the fused job does
- * the same stages' work, just with one fewer driver round-trip. The
- * LAST round is always eager (the caller consumes the result), and
- * freeing a lazy round's inputs is DEFERRED until the next eager
- * materialization: a localCheckpoint is unrecomputable once freed, so
- * an input a not-yet-run lazy plan still references must stay pinned.
+ * Storage hygiene for iterative algorithms built on
+ * `localCheckpoint` (the graph engines, via [[GraphRounds]]): each
+ * checkpoint pins its partitions in executor storage, and the Dataset
+ * API offers no way to free them — `Dataset.unpersist` only touches the
+ * cache manager, not the checkpoint's backing RDD. A loop that
+ * checkpoints per round therefore leaks one RDD's worth of storage per
+ * round PER CALL, which on a long-lived session (a bench loop, a
+ * scheduled re-rank, a notebook) accumulates until memory pressure
+ * evicts live blocks (measured: PageRank at sf0.1 degraded 2.6s → 8.7s
+ * over six calls purely from dead checkpoint blocks).
  *
- * The deferred free additionally requires that the eager job TRUNCATES
- * the lazy round's lineage (not merely caches its blocks) — otherwise
- * losing those blocks later would recompute through the freed input.
- * [[CheckpointScope]] guarantees this by setting the
- * `spark.checkpoint.checkpointAllMarkedAncestors` local property on
- * the engine's thread, so every marked lazy ancestor's checkpoint is
- * finalized inside the job that materializes the eager round.
+ * The scope reads each checkpoint's pinned RDD id EXACTLY from the
+ * returned Dataset's own plan (the LogicalRDD leaf wraps the persisted
+ * RDD), so concurrent scopes in one SparkContext cannot mis-attribute
+ * or free each other's live checkpoints; a global id-set diff remains
+ * only as a fallback for unexpected plan shapes. The scope frees the
+ * intermediates once the loop's result no longer references them.
+ * IMPORTANT: a localCheckpoint's lineage is TRUNCATED — unpersisting
+ * one makes it unrecomputable — so only ids provably dead may be freed:
+ * a returned plan that still references a checkpoint lazily (e.g. a
+ * final projection over the node table) must keep it via `keep`.
  */
-private[graft] final class FusedRounds(scope: CheckpointScope, rounds: Int,
-    fuse: Int = 2) {
-  private var r = 0
-  private var deferred: List[Int] = Nil
-
-  /** Checkpoint round state (lazy except every `fuse`-th round and the
-    * last — [[StaticPlan.fuseDepth]] sizes `fuse` from the engine's row
-    * count: whole loop in one job when small, pairs when generation
-    * size is what matters);
-    * `dead` = the ids this round's input frame pins, freed as soon as
-    * this round (and any deferred lazy predecessor) has materialized. */
-  def ckptRound(df: DataFrame, dead: List[Int]): DataFrame = {
-    r += 1
-    if (r % fuse != 0 && r < rounds) {
-      val out = scope.ckptLazy(df)
-      deferred = dead ::: deferred
-      out
-    } else {
-      val out = scope.ckpt(df)
-      scope.free(dead ::: deferred)
-      deferred = Nil
-      out
-    }
-  }
-
-  /** Ids pinned by the most recent [[ckptRound]]. */
-  def last: List[Int] = scope.last
-}
-
 private[graft] final class CheckpointScope(sc: SparkContext) {
-  // FAULT-TOLERANCE of the lazy/eager round mix ([[FusedRounds]]):
+  // FAULT-TOLERANCE of the lazy/eager round mix ([[GraphRounds.iterate]]):
   // freeing a lazy round's inputs once the NEXT eager round
   // materializes is only safe if the lazy round's own lineage was
   // truncated during that job — otherwise a later block loss (executor
@@ -305,13 +236,13 @@ private[graft] final class CheckpointScope(sc: SparkContext) {
         "checkpointAllMarkedAncestors thread-local) belongs to '" +
         owner.getName + "'; off-thread rounds lose lineage truncation")
   private var seen = sc.getPersistentRDDs.keySet.toSet
-  private var owned = List.empty[Int]
+  private var ownedIds = List.empty[Int]
   private var lastIds = List.empty[Int]
 
   /** When true, subsequent [[ckpt]]/[[ckptLazy]] pin SERIALIZED blocks
-    * (StaticPlan.localCkpt's big-table level). Engines set it from
-    * their materialized edge count — `scope.serialized = nEdges >
-    * StaticPlan.SER_CKPT_ROWS` — right after the setup checkpoint's
+    * (StaticPlan.localCkpt's big-table level). [[GraphRounds.run]]
+    * sets it from the engine's materialized edge count (`n >
+    * StaticPlan.SER_CKPT_ROWS`) right after the setup checkpoint's
     * count: the repeated ROUND generations are what OOM a fixed heap
     * at big-rung volume, while gate-SF rounds stay on the fast
     * deserialized level (the serialized read-back measured +40-50% on
@@ -346,12 +277,10 @@ private[graft] final class CheckpointScope(sc: SparkContext) {
     // so two scopes running in one SparkContext can never mis-attribute
     // (and later free) each other's live checkpoints. Global diffing
     // remains only as a fallback for an unexpected plan shape.
-    val exact = out.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toList
+    val exact = Checkpoints.pinnedIds(out).toList
     val now = sc.getPersistentRDDs.keySet.toSet
     lastIds = if (exact.nonEmpty) exact else (now -- seen).toList
-    owned = lastIds ::: owned
+    ownedIds = lastIds ::: ownedIds
     seen = now
     out
   }
@@ -359,22 +288,25 @@ private[graft] final class CheckpointScope(sc: SparkContext) {
   /** Ids pinned by the most recent [[ckpt]] call. */
   def last: List[Int] = lastIds
 
+  /** Ids this scope has pinned and not yet freed, newest first. */
+  def owned: List[Int] = ownedIds
+
   /** Unpersist the given owned ids now (they must be dead). */
   def free(ids: List[Int]): Unit = {
     assertOwner("free")
     val rdds = sc.getPersistentRDDs
     ids.foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-    owned = owned.filterNot(ids.contains)
+    ownedIds = ownedIds.filterNot(ids.contains)
   }
 
   /** Unpersist every checkpoint this scope made except `keep`. */
-  def freeAllBut(keep: List[Int]): Unit = free(owned.filterNot(keep.contains))
+  def freeAllBut(keep: List[Int]): Unit = free(ownedIds.filterNot(keep.contains))
 
   /** Run an engine body; if it throws, free EVERY checkpoint this scope
     * pinned before rethrowing. An exception escaping an engine (e.g. a
     * failed `require` after the input layouts were already pinned)
     * must not leak them — exactly the long-lived-session storage leak
-    * this scope exists to prevent. On success the body's own
+    * this scope exists to prevent. On success the caller's own
     * `freeAllBut(keep)` remains responsible for the cleanup. NonFatal
     * only: a non-local `return` (ControlThrowable) must pass through
     * without freeing the result it returns. */

@@ -94,32 +94,17 @@ object Hits {
   def run(edges: DataFrame, srcCol: String, dstCol: String,
           iters: Int, scale: Long = 0L): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val spark = edges.sparkSession
-    val scope = new CheckpointScope(spark.sparkContext)
     // Canonicalize ONCE under the caller's (adaptive) planning — the
     // only pass over the raw input; its row count sizes the static
-    // round partitioning (see [[StaticPlan]]).
-    // LAZY + count (setup fusion, r15): the sizing count() is the job
-    // that materializes the checkpoint — no separate persist job.
-    val canon = scope.ckptLazy(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .dropDuplicates("src", "dst"))
-    val nEdges = canon.count()
-    // big-rung heap survival: round generations past the threshold pin
-    // serialized blocks (see StaticPlan.SER_CKPT_ROWS)
-    scope.serialized = nEdges > StaticPlan.SER_CKPT_ROWS
-    // no edges: no nodes either — every score table is empty
-    if (nEdges == 0) {
-      val out = scope.ckpt(canon
+    // round partitioning (see [[GraphRounds.run]]).
+    val canon = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).dropDuplicates("src", "dst")
+    GraphRounds.run(canon) { (scope, pinned, nEdges) =>
+      // no edges: no nodes either — every score table is empty
+      if (nEdges == 0) scope.ckpt(pinned
         .select(col("src").as("node"), lit(0L).as("hub"), lit(0L).as("auth")))
-      scope.freeAllBut(scope.last)
-      return out
+      else runStatic(scope, pinned, iters, scale)
     }
-    scope.guarded(StaticPlan.scoped(spark,
-        StaticPlan.roundPartitions(nEdges, spark,
-        StaticPlan.GRAPH_ROUND_ROWS)) {
-      runStatic(scope, canon, iters, scale)
-    })
   }
 
   /** Iteration body — runs under [[StaticPlan.scoped]] so the pinned
@@ -132,10 +117,9 @@ object Hits {
     // under static planning, so every round's sort-merge join skips
     // re-sorting the edge side (the big side) — only the node-sized
     // rank tables sort per round
-    // LAZY setup checkpoints (setup fusion, see [[FusedRounds]]): the
-    // two edge layouts materialize inside the node-count action / the
-    // first eager round's job with their pinned layouts intact; nodes
-    // stays eager because its count() gates the scale precondition
+    // LAZY setup checkpoints (setup fusion): the two edge layouts
+    // materialize inside the node-count action / the first eager
+    // round's job with their pinned layouts intact
     val e = scope.ckptLazy(canon.repartition(col("src"))
       .sortWithinPartitions(col("src")))
     val eByDst = scope.ckptLazy(e.repartition(col("dst"))
@@ -163,79 +147,62 @@ object Hits {
     // absent from it have hub 0 and contribute nothing to any sum, so
     // the inner contribution join is exact without them) — the full
     // (node, hub, auth) rebase is assembled ONCE after the last round,
-    // not materialized per round. Per round that leaves exactly ONE
-    // scheduled action: the auth raw table is a LAZY checkpoint that
-    // materializes inside the hub raw table's eager-checkpoint job (its
-    // L1-sum broadcast subquery computes every authRaw partition first,
-    // persisting it; the main path then reads the persisted blocks) —
-    // computed once, lineage-cut, no extra barrier.
+    // not materialized per round. Each round's checkpointed state is
+    // the raw hub table; the next round (and the final rebase) reads
+    // it L1-normalized. L1 sums stay IN-PLAN as broadcast 1-row
+    // scalars over the checkpointed raw tables — no per-round driver
+    // head(); the engine's `div` on positive Longs is the same floor
+    // the old driver-literal form applied.
+    def hubN(hubRaw: DataFrame): DataFrame = {
+      val hSumDf = hubRaw.agg(coalesce(sum(col("hraw")), lit(0L)).as("__hsum"))
+      hubRaw.crossJoin(broadcast(hSumDf))
+        .select(col("src").as("node"), expr(s"(hraw * $sc) div __hsum").as("hub"))
+    }
     // uniform 1 per node, NOT `scale`: floor division is invariant
     // under a uniform rescaling of the start mass, so the normalized
     // rounds are bit-identical either way (the PropertySpec reference
     // still inits at `scale` and matches) — and round 1's raw sums stay
     // degree-sized, keeping every normalization product ≤ scale²
-    var hub = scope.ckptLazy(nodes.withColumn("hub", lit(1L)))
-    var prevIds = scope.last
+    val hub0 = scope.ckptLazy(nodes.withColumn("hub", lit(1L)))
     var auth: DataFrame = null
-    // fused hub/auth rounds (see [[FusedRounds]] /
-    // [[StaticPlan.fuseDepth]]): the hub-side checkpoint is the round's
-    // one action; lazy rounds materialize inside the next eager round's
-    // job — the whole loop in ONE job below the big-table gate
-    val fused = new FusedRounds(scope, iters,
-      StaticPlan.fuseDepth(scope.serialized, iters))
-    for (_ <- 1 to iters) {
+    // fused hub/auth rounds ([[GraphRounds.iterate]]): the hub-side
+    // checkpoint is the round's one action; lazy rounds materialize
+    // inside the next eager round's job — the whole loop in ONE job
+    // below the big-table gate
+    val hubRaw = GraphRounds.iterate(scope, hub0, iters) { (prev, r) =>
+      val hub = if (r == 1) prev else hubN(prev)
       // with ≥1 edge, hub mass crosses it, so aSum/hSum are ≥ 1 and the
-      // floor divisions below are safe. Raw aggregates are node-sized,
-      // and their groupBy partitioning (hash(dst) / hash(src)) is
-      // exactly what the NEXT consumer joins on — a rollup same-shuffle
-      // total was measured and rejected: its (key, gid) exchange key
-      // broke that co-partitioning and re-shuffled every round. The
-      // auth side is a LAZY checkpoint: it materializes inside the hub
-      // side's eager-checkpoint job (its L1-sum broadcast subquery
-      // computes every authRaw partition first, persisting it; the
-      // main path reads the persisted blocks), so each round schedules
-      // ONE action, not two.
+      // floor divisions are safe. Raw aggregates are node-sized, and
+      // their groupBy partitioning (hash(dst) / hash(src)) is exactly
+      // what the NEXT consumer joins on — a rollup same-shuffle total
+      // was measured and rejected: its (key, gid) exchange key broke
+      // that co-partitioning and re-shuffled every round. The auth side
+      // is a LAZY checkpoint: it materializes inside the hub side's
+      // eager-checkpoint job (its L1-sum broadcast subquery computes
+      // every authRaw partition first, persisting it; the main path
+      // reads the persisted blocks), so each round schedules ONE
+      // action, not two — computed once, lineage-cut, no extra barrier.
       val authRaw = scope.ckptLazy(hub.join(e, col("node") === col("src"))
         .groupBy(col("dst")).agg(sum(col("hub")).as("araw")))
-      val authRawIds = scope.last
-      // L1 sums stay IN-PLAN as broadcast 1-row scalars over the
-      // checkpointed raw tables — no per-round driver head(); the
-      // engine's `div` on positive Longs is the same floor the old
-      // driver-literal form applied
       val aSumDf = authRaw.agg(coalesce(sum(col("araw")), lit(0L)).as("__asum"))
-      val authN = authRaw.crossJoin(broadcast(aSumDf))
+      auth = authRaw.crossJoin(broadcast(aSumDf))
         .select(col("dst").as("anode"),
           expr(s"(araw * $sc) div __asum").as("auth"))
-      val hubRaw = fused.ckptRound(
-        authN.join(eByDst, col("anode") === col("dst"))
-          .select(col("src"), col("auth"))
-          .groupBy(col("src")).agg(sum(col("auth")).as("hraw")),
-        prevIds)
-      val hubRawIds = fused.last
-      val hSumDf = hubRaw.agg(coalesce(sum(col("hraw")), lit(0L)).as("__hsum"))
-      val hubN = hubRaw.crossJoin(broadcast(hSumDf))
-        .select(col("src").as("node"),
-          expr(s"(hraw * $sc) div __hsum").as("hub"))
-      // the previous round's tables die once this round's raw
-      // aggregates are materialized — ckptRound frees them then
-      // (deferred across lazy rounds; see [[FusedRounds]])
-      hub = hubN; auth = authN
-      prevIds = authRawIds ::: hubRawIds
+      auth.join(eByDst, col("anode") === col("dst"))
+        .select(col("src"), col("auth"))
+        .groupBy(col("src")).agg(sum(col("auth")).as("hraw"))
     }
     // Materialize the final (node, hub, auth) rebase as ONE checkpoint
-    // and free every intermediate — node-sized joins over already-
-    // materialized tables, so the extra action is cheap, and the
-    // returned plan pins exactly one node-sized RDD instead of the
-    // final round's raws + node table (which callers had no way to
-    // release; a long-lived session running many Hits calls accumulated
-    // pinned executor storage).
-    val out = scope.ckpt(nodes
+    // — node-sized joins over already-materialized tables, so the extra
+    // action is cheap, and the returned plan pins exactly one
+    // node-sized RDD instead of the final round's raws + node table
+    // (which callers had no way to release; a long-lived session
+    // running many Hits calls accumulated pinned executor storage).
+    scope.ckpt(nodes
       .join(auth.withColumnRenamed("anode", "node"), Seq("node"), "left")
-      .join(hub, Seq("node"), "left")
+      .join(hubN(hubRaw), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth")))
-    scope.freeAllBut(scope.last)
-    out
   }
 }

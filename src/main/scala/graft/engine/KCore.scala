@@ -48,70 +48,33 @@ object KCore {
     require(rounds >= 1, "rounds must be >= 1")
     val a = edges.columns(0)
     val b = edges.columns(1)
-    val spark = edges.sparkSession
-    val scope = new CheckpointScope(spark.sparkContext)
     // symmetrize + dedup once under the caller's (adaptive) planning;
-    // the count sizes the static round partitioning (see [[StaticPlan]]).
-    // Canonical-orient THEN explode both orientations: a union of two
-    // projections would execute whatever join built `edges` TWICE and
-    // dedup at full symmetric size — this reads the input once and
-    // dedups at half size, then the explode is free.
-    // LAZY + count (setup fusion, r15): the sizing count() is the job
-    // that materializes the checkpoint — the eager form scheduled a
-    // separate persist job before an identically-shaped count.
-    val canon = scope.ckptLazy(
-      edges.filter(col(a) =!= col(b))
-        .select(least(col(a).cast("long"), col(b).cast("long")).as("u"),
-          greatest(col(a).cast("long"), col(b).cast("long")).as("v"))
-        .distinct()
-        .select(explode(array(
-          struct(col("u").as("src"), col("v").as("dst")),
-          struct(col("v").as("src"), col("u").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val canonIds = scope.last
-    val nEdges = canon.count()
-    // big-rung heap survival: round generations past the threshold pin
-    // serialized blocks (see StaticPlan.SER_CKPT_ROWS)
-    scope.serialized = nEdges > StaticPlan.SER_CKPT_ROWS
-    scope.guarded(StaticPlan.scoped(spark,
-        StaticPlan.roundPartitions(nEdges, spark,
-        StaticPlan.GRAPH_ROUND_ROWS)) {
-      runStatic(scope, canon, canonIds, k, rounds)
-    })
-  }
-
-  private def runStatic(scope: CheckpointScope, canon: DataFrame,
-      canonIds: List[Int], k: Int, rounds: Int): DataFrame = {
-    // LAZY layout checkpoint (setup fusion): it materializes inside the
-    // first eager round's job with its pinned layout intact
-    var e = scope.ckptLazy(canon.repartition(col("src"))
-      .sortWithinPartitions(col("src")))
-    // canon's only consumer is the layout table above — once that
-    // materializes, the full-size DESERIALIZED canon generation is
-    // dead; folding its ids into the first round's dead list frees it
-    // at the first eager materialization instead of scope end (at the
-    // sf10 rung that is ~5 GB of object-form edges not held across the
-    // whole peel)
-    var eIds = canonIds ::: scope.last
-    // fused peel rounds (see [[FusedRounds]]): the per-round checkpoint
-    // job IS the engine's sf-scale cost — below the big-table gate the
-    // whole peel materializes in ONE job, above it rounds pair up
-    val fused = new FusedRounds(scope, rounds,
-      StaticPlan.fuseDepth(scope.serialized, rounds))
-    for (_ <- 1 to rounds) {
-      // degree in the CURRENT surviving subgraph (symmetrized edges:
-      // count per src IS the undirected degree)
-      val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select(col("src").as("node"))
-      val next = fused.ckptRound(e
-        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst"),
-        eIds)
-      e = next
-      eIds = fused.last
+    // the count sizes the static round partitioning
+    val canon = GraphRounds.symmetric(
+      edges.select(col(a).cast("long").as("a"), col(b).cast("long").as("b")))
+    GraphRounds.run(canon) { (scope, pinned, _) =>
+      // The peel's state IS the surviving edge table, starting from the
+      // pinned canon. Fused peel rounds ([[GraphRounds.iterate]]): the
+      // per-round checkpoint job IS the engine's sf-scale cost — below
+      // the big-table gate the whole peel materializes in ONE job,
+      // above it rounds pair up.
+      GraphRounds.iterate(scope, pinned, rounds) { (cur, r) =>
+        // round 1 first pins canon's src-partitioned layout (LAZY, setup
+        // fusion: it materializes inside the first eager round's job).
+        // canon's only consumer is that layout, so as the init state the
+        // full-size DESERIALIZED canon generation is freed at the first
+        // eager materialization instead of scope end (at the sf10 rung
+        // that is ~5 GB of object-form edges not held across the peel)
+        val e = if (r == 1) scope.ckptLazy(cur.repartition(col("src"))
+          .sortWithinPartitions(col("src"))) else cur
+        // degree in the CURRENT surviving subgraph (symmetrized edges:
+        // count per src IS the undirected degree)
+        val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
+        val keep = deg.filter(col("d") >= k).select(col("src").as("node"))
+        e.join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
+          .select("src", "dst")
+      }.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
     }
-    scope.freeAllBut(eIds)
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
   }
 }

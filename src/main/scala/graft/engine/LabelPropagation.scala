@@ -38,77 +38,40 @@ object LabelPropagation {
    */
   def run(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val a = edges.columns(0)
-    val b = edges.columns(1)
-    val spark = edges.sparkSession
-    val scope = new CheckpointScope(spark.sparkContext)
-    // symmetrize + dedup once under the caller's (adaptive) planning;
-    // the count sizes the static round partitioning (see [[StaticPlan]]).
-    // Canonical-orient then explode both orientations — one pass over
-    // the input (a two-projection union executes its upstream twice)
-    // and dedup at half the symmetric size.
-    // LAZY + count (setup fusion, r15): the sizing count() is the job
-    // that materializes the checkpoint — no separate persist job.
-    val canon = scope.ckptLazy(
-      edges.filter(col(a) =!= col(b))
-        .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-        .distinct()
-        .select(explode(array(
-          struct(col("u").as("src"), col("v").as("dst")),
-          struct(col("v").as("src"), col("u").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val nEdges = canon.count()
-    // big-rung heap survival: round generations past the threshold pin
-    // serialized blocks (see StaticPlan.SER_CKPT_ROWS)
-    scope.serialized = nEdges > StaticPlan.SER_CKPT_ROWS
-    scope.guarded(StaticPlan.scoped(spark,
-        StaticPlan.roundPartitions(nEdges, spark,
-        StaticPlan.GRAPH_ROUND_ROWS)) {
-      runStatic(scope, canon, seeds, iters)
-    })
-  }
-
-  private def runStatic(scope: CheckpointScope, canon: DataFrame,
-      seeds: DataFrame, iters: Int): DataFrame = {
     val sn = seeds.columns(0)
     val sl = seeds.columns(1)
-    // LAZY setup checkpoints (setup fusion, see [[FusedRounds]]): the
-    // layout, base and lab₀ materialize inside the first eager round's
-    // job with their pinned layouts intact
-    val sym = scope.ckptLazy(canon.repartition(col("dst"))
-      .sortWithinPartitions(col("dst")))
-    val nodes = sym.select(col("src").as("node")).distinct()
-    // deterministic seed collapse: smallest label wins
-    val sd = seeds.groupBy(col(sn).as("node")).agg(min(col(sl)).as("__seed"))
-    val base = scope.ckptLazy(nodes.join(sd, Seq("node"), "left"))
-    var labIds = List.empty[Int]
-    var lab = scope.ckptLazy(base.withColumn("label", col("__seed"))
-      .select("node", "label"))
-    labIds = scope.last
-    // fused vote rounds (see [[FusedRounds]] / [[StaticPlan.fuseDepth]])
-    val fused = new FusedRounds(scope, iters,
-      StaticPlan.fuseDepth(scope.serialized, iters))
-    for (_ <- 1 to iters) {
-      // one explicit shuffle by the adopting node: the (node, label)
-      // count AND the per-node rank window are then both satisfied by
-      // the same layout (subset rule / alias-aware partitioning)
-      val votes = sym.join(lab.filter(col("label").isNotNull)
-          .select(col("node").as("dst"), col("label")), Seq("dst"))
-        .repartition(col("src"))
-        .groupBy(col("src").as("node"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-      val pick = votes.withColumn("__rk", row_number().over(
-          Window.partitionBy(col("node"))
-            .orderBy(col("__c").desc, col("label").asc)))
-        .filter(col("__rk") === 1)
-        .select(col("node"), col("label").as("__adopt"))
-      val next = fused.ckptRound(base.join(pick, Seq("node"), "left")
-        .select(col("node"), coalesce(col("__seed"), col("__adopt")).as("label")),
-        labIds)
-      lab = next
-      labIds = fused.last
+    // symmetrize + dedup once under the caller's (adaptive) planning;
+    // the count sizes the static round partitioning
+    GraphRounds.run(GraphRounds.symmetric(edges)) { (scope, canon, _) =>
+      // LAZY setup checkpoints (setup fusion): the layout, base and
+      // lab₀ materialize inside the first eager round's job with their
+      // pinned layouts intact
+      val sym = scope.ckptLazy(canon.repartition(col("dst"))
+        .sortWithinPartitions(col("dst")))
+      val nodes = sym.select(col("src").as("node")).distinct()
+      // deterministic seed collapse: smallest label wins
+      val sd = seeds.groupBy(col(sn).as("node")).agg(min(col(sl)).as("__seed"))
+      val base = scope.ckptLazy(nodes.join(sd, Seq("node"), "left"))
+      val lab0 = scope.ckptLazy(base.withColumn("label", col("__seed"))
+        .select("node", "label"))
+      // fused vote rounds ([[GraphRounds.iterate]])
+      GraphRounds.iterate(scope, lab0, iters) { (lab, _) =>
+        // one explicit shuffle by the adopting node: the (node, label)
+        // count AND the per-node rank window are then both satisfied by
+        // the same layout (subset rule / alias-aware partitioning)
+        val votes = sym.join(lab.filter(col("label").isNotNull)
+            .select(col("node").as("dst"), col("label")), Seq("dst"))
+          .repartition(col("src"))
+          .groupBy(col("src").as("node"), col("label"))
+          .agg(count(lit(1)).as("__c"))
+        val pick = votes.withColumn("__rk", row_number().over(
+            Window.partitionBy(col("node"))
+              .orderBy(col("__c").desc, col("label").asc)))
+          .filter(col("__rk") === 1)
+          .select(col("node"), col("label").as("__adopt"))
+        base.join(pick, Seq("node"), "left")
+          .select(col("node"), coalesce(col("__seed"), col("__adopt")).as("label"))
+      }
     }
-    scope.freeAllBut(labIds)
-    lab
   }
 }

@@ -81,18 +81,12 @@ object PageRank {
       seedsOpt: Option[DataFrame], weightOpt: Option[String],
       iters: Int, scale: Long): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val spark = edges.sparkSession
-    val scope = new CheckpointScope(spark.sparkContext)
-    // Canonicalize ONCE under the caller's (adaptive) planning; the row
-    // count sizes the static round partitioning. The iteration itself
-    // runs under [[StaticPlan.scoped]]: with AQE on, localCheckpoint
-    // captures the adaptive plan's UnknownPartitioning, so every round
-    // would re-shuffle both contribution-join sides — static plans keep
-    // the pinned layouts' partitioning, leaving the inflow groupBy(dst)
-    // as the round's only exchange, as designed.
-    // LAZY + count (setup fusion, r15): the sizing count() is the job
-    // that materializes the checkpoint — no separate persist job.
-    val canon = scope.ckptLazy(weightOpt match {
+    // The round loop runs static ([[GraphRounds.run]]): with AQE on,
+    // localCheckpoint captures the adaptive plan's UnknownPartitioning,
+    // so every round would re-shuffle both contribution-join sides —
+    // static plans keep the pinned layouts' partitioning, leaving the
+    // inflow groupBy(dst) as the round's only exchange, as designed.
+    val canon = weightOpt match {
       case Some(w) =>
         edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"), col(w).cast("long").as("w"))
@@ -102,28 +96,21 @@ object PageRank {
           col(dstCol).cast("long").as("dst"))
           .dropDuplicates("src", "dst")
           .withColumn("w", lit(1L))
-    })
-    val nEdges = canon.count()
-    // big-rung heap survival: round generations past the threshold pin
-    // serialized blocks (see StaticPlan.SER_CKPT_ROWS)
-    scope.serialized = nEdges > StaticPlan.SER_CKPT_ROWS
-    scope.guarded(StaticPlan.scoped(spark,
-        StaticPlan.roundPartitions(nEdges, spark,
-        StaticPlan.GRAPH_ROUND_ROWS)) {
-      coreStatic(scope, canon, seedsOpt, iters, scale)
-    })
+    }
+    GraphRounds.run(canon) { (scope, pinned, _) =>
+      coreStatic(scope, pinned, seedsOpt, iters, scale)
+    }
   }
 
   private def coreStatic(scope: CheckpointScope, canon: DataFrame,
       seedsOpt: Option[DataFrame], iters: Int, scale: Long): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame = scope.ckpt(df)
-    // setup checkpoints are LAZY (setup fusion, the [[FusedRounds]]
-    // idea applied to init): the edge layout, the base table and the
-    // initial ranks all materialize inside the two actions the setup
-    // already schedules (the scalar-count head() and the first eager
-    // round) — under a static scope a lazy localCheckpoint is genuinely
-    // lazy (no AQE stage materialization), so init goes from 4
-    // scheduled jobs to 1 with identical pinned layouts.
+    // setup checkpoints are LAZY (setup fusion): the edge layout, the
+    // base table and the initial ranks all materialize inside the two
+    // actions the setup already schedules (the scalar-count head() and
+    // the first eager round) — under a static scope a lazy
+    // localCheckpoint is genuinely lazy (no AQE stage materialization),
+    // so init goes from 4 scheduled jobs to 1 with identical pinned
+    // layouts.
     // src-partitioned AND src-sorted static edge layout: the checkpoint
     // carries both under static planning, so each round's sort-merge
     // contribution join neither exchanges nor re-sorts the edge side
@@ -153,11 +140,8 @@ object PageRank {
     val nSeed = cnts.getLong(1)
     // no nodes at all: vacuous (driver division by |S| would throw
     // where the old in-plan `div` simply never ran on zero rows)
-    if (cnts.getLong(0) == 0) {
-      val out = ckpt(base.select(col("node"), lit(0L).as("pr")))
-      scope.freeAllBut(scope.last)
-      return out
-    }
+    if (cnts.getLong(0) == 0)
+      return scope.ckpt(base.select(col("node"), lit(0L).as("pr")))
     require(nSeed > 0, "personalized PageRank needs at least one seed present in the graph")
     // Loud scale precondition (the Hits.scaleFor lesson, r14 sf10 rung):
     // below this the integer start mass floors to zero per seed and the
@@ -173,17 +157,12 @@ object PageRank {
       s"scale ($scale) must be >= seed/node count ($nSeed): integer " +
         "teleport mass needs at least one unit per seed")
 
-    var ranks = scope.ckptLazy(base.withColumn("pr",
+    val ranks0 = scope.ckptLazy(base.withColumn("pr",
       when(col("is_seed"), lit(scale / nSeed)).otherwise(lit(0L))))
-    var rankIds = scope.last
-    // fused rounds checkpoint LAZILY so one-shuffle rounds materialize
-    // in ONE scheduled job — the per-round job latency IS the engine's
-    // sf-scale cost (JobProbe r10: job-sum ≈ wall); see [[FusedRounds]]
-    // for the deferred-freeing discipline and [[StaticPlan.fuseDepth]]
-    // for the size gate (whole loop per job when small, pairs when big)
-    val fused = new FusedRounds(scope, iters,
-      StaticPlan.fuseDepth(scope.serialized, iters))
-    for (_ <- 1 to iters) {
+    // fused rounds ([[GraphRounds.iterate]]): one-shuffle rounds
+    // materialize in ONE scheduled job — the per-round job latency IS
+    // the engine's sf-scale cost (JobProbe r10: job-sum ≈ wall)
+    GraphRounds.iterate(scope, ranks0, iters) { (ranks, _) =>
       // dangling mass: 1-row agg over the materialized ranks table,
       // kept IN-PLAN as a broadcast scalar — the iteration schedules
       // ONE action (the checkpoint), not a separate driver head() per
@@ -199,20 +178,13 @@ object PageRank {
       // division (identical to the engine's `div`); floor(D/|S|) is the
       // engine's `div` on the broadcast dangling scalar — both landing
       // only on seeds; non-seeds keep inflow
-      ranks = fused.ckptRound(
-        base.join(inflow, col("node") === col("dst"), "left")
-          .crossJoin(broadcast(dangDf))
-          .select(col("node"), col("is_seed"), col("outw"),
-            (when(col("is_seed"), lit(scale * 15 / 100 / nSeed) +
-              expr(s"__dang div ${nSeed}L"))
-              .otherwise(lit(0L)) +
-              coalesce(col("inflow"), lit(0L))).as("pr")),
-        rankIds)
-      rankIds = fused.last
-    }
-    // the final ranks checkpoint is the return value; every other
-    // checkpoint (edges, base, intermediate rounds) is dead weight now
-    scope.freeAllBut(scope.last)
-    ranks.select("node", "pr")
+      base.join(inflow, col("node") === col("dst"), "left")
+        .crossJoin(broadcast(dangDf))
+        .select(col("node"), col("is_seed"), col("outw"),
+          (when(col("is_seed"), lit(scale * 15 / 100 / nSeed) +
+            expr(s"__dang div ${nSeed}L"))
+            .otherwise(lit(0L)) +
+            coalesce(col("inflow"), lit(0L))).as("pr"))
+    }.select("node", "pr")
   }
 }

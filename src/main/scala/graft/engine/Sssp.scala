@@ -44,64 +44,38 @@ object Sssp {
     val a = edges.columns(0)
     val b = edges.columns(1)
     val w = edges.columns(2)
-    val spark = edges.sparkSession
-    val scope = new CheckpointScope(spark.sparkContext)
     // canonicalize under the caller's (adaptive) planning — duplicate
     // edges keep their minimum weight; the count sizes the static round
-    // partitioning (see [[StaticPlan]]: AQE-era checkpoints lose their
-    // partitioning, re-shuffling every relaxation join otherwise)
-    // LAZY + count (setup fusion, r15): the sizing count() is the job
-    // that materializes the checkpoint — no separate persist job.
-    val canon = scope.ckptLazy(
-      edges.select(col(a).cast("long").as("src"), col(b).cast("long").as("dst"),
-        col(w).cast("long").as("w"))
-        .groupBy("src", "dst").agg(min(col("w")).as("w")))
-    val nEdges = canon.count()
-    // big-rung heap survival: round generations past the threshold pin
-    // serialized blocks (see StaticPlan.SER_CKPT_ROWS)
-    scope.serialized = nEdges > StaticPlan.SER_CKPT_ROWS
-    scope.guarded(StaticPlan.scoped(spark,
-        StaticPlan.roundPartitions(nEdges, spark,
-        StaticPlan.GRAPH_ROUND_ROWS)) {
-      runStatic(scope, canon, seeds, rounds)
-    })
-  }
-
-  private def runStatic(scope: CheckpointScope, canon: DataFrame,
-      seeds: DataFrame, rounds: Int): DataFrame = {
-    // src-partitioned, src-sorted pinned layout for the relaxation
-    // joins — LAZY, like dist₀ below (setup fusion): both materialize
-    // inside the first eager round's job
-    val e = scope.ckptLazy(canon.repartition(col("src"))
-      .sortWithinPartitions(col("src")))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val sd = seeds.select(col(seeds.columns(0)).cast("long").as("node"))
-      .distinct().withColumn("__seed", lit(true))
-    var distIds = List.empty[Int]
-    var dist = scope.ckptLazy(nodes.join(broadcast(sd), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__seed"), lit(0L)).otherwise(lit(null).cast("long")).as("dist")))
-    distIds = scope.last
-    // fused relaxation rounds (see [[FusedRounds]] /
-    // [[StaticPlan.fuseDepth]]): one job for the whole loop when small
-    val fused = new FusedRounds(scope, rounds,
-      StaticPlan.fuseDepth(scope.serialized, rounds))
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.filter(col("dist").isNotNull)
-        .join(e, col("node") === col("src"))
-        .groupBy(col("dst")).agg(min(col("dist") + col("w")).as("nd"))
-      val next = fused.ckptRound(dist
-        .join(relaxed, col("node") === col("dst"), "left")
+    // partitioning (AQE-era checkpoints lose their partitioning,
+    // re-shuffling every relaxation join otherwise)
+    val canon = edges.select(col(a).cast("long").as("src"),
+        col(b).cast("long").as("dst"), col(w).cast("long").as("w"))
+      .groupBy("src", "dst").agg(min(col("w")).as("w"))
+    GraphRounds.run(canon) { (scope, pinned, _) =>
+      // src-partitioned, src-sorted pinned layout for the relaxation
+      // joins — LAZY, like dist₀ below (setup fusion): both materialize
+      // inside the first eager round's job
+      val e = scope.ckptLazy(pinned.repartition(col("src"))
+        .sortWithinPartitions(col("src")))
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+      val sd = seeds.select(col(seeds.columns(0)).cast("long").as("node"))
+        .distinct().withColumn("__seed", lit(true))
+      val dist0 = scope.ckptLazy(nodes.join(broadcast(sd), Seq("node"), "left")
         .select(col("node"),
-          when(col("dist").isNull, col("nd"))
-            .when(col("nd").isNull, col("dist"))
-            .otherwise(least(col("dist"), col("nd"))).as("dist")),
-        distIds)
-      dist = next
-      distIds = fused.last
+          when(col("__seed"), lit(0L)).otherwise(lit(null).cast("long")).as("dist")))
+      // fused relaxation rounds ([[GraphRounds.iterate]]): one job for
+      // the whole loop when small
+      GraphRounds.iterate(scope, dist0, rounds) { (dist, _) =>
+        val relaxed = dist.filter(col("dist").isNotNull)
+          .join(e, col("node") === col("src"))
+          .groupBy(col("dst")).agg(min(col("dist") + col("w")).as("nd"))
+        dist.join(relaxed, col("node") === col("dst"), "left")
+          .select(col("node"),
+            when(col("dist").isNull, col("nd"))
+              .when(col("nd").isNull, col("dist"))
+              .otherwise(least(col("dist"), col("nd"))).as("dist"))
+      }
     }
-    scope.freeAllBut(distIds)
-    dist
   }
 }

@@ -40,30 +40,16 @@ object Triangles {
    */
   def perNode(edges: DataFrame,
       bcastClosureEdges: Long = BCAST_CLOSURE_EDGES): DataFrame = {
-    val a = edges.columns(0)
-    val b = edges.columns(1)
     // The shared subtrees (canonical edges, degrees, oriented edges) are
     // each consumed 2-3× downstream; Spark re-executes a DataFrame per
     // reference, so WITHOUT materialization the whole upstream chain —
     // including whatever join built `edges` — runs once per consumer
     // (measured: 87 static exchanges on the co-purchase graph vs 6
-    // after).
-    val spark = edges.sparkSession
-    val scope = new CheckpointScope(spark.sparkContext)
-    // canonicalize under the caller's adaptive planning; the edge count
-    // sizes the static partitioning for the wedge phase (wedge rows are
-    // O(m^1.5), so size by edges with a smaller per-task target).
-    // LAZY + count (setup fusion, r15): the sizing count() is the job
-    // that materializes the checkpoint — no separate persist job.
-    val canon = scope.ckptLazy(edges.filter(col(a) =!= col(b))
-      .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-      .distinct())
-    val m = canon.count()
-    scope.serialized = m > StaticPlan.SER_CKPT_ROWS
-    scope.guarded(StaticPlan.scoped(spark,
-      StaticPlan.roundPartitions(m, spark, rowsPerPart = 8192L)) {
-      perNodeStatic(scope, canon, m, bcastClosureEdges)
-    })
+    // after). The edge count sizes the static partitioning for the wedge
+    // phase (wedge rows are O(m^1.5), so size by edges with a smaller
+    // per-task target).
+    GraphRounds.run(GraphRounds.pairs(edges), rowsPerPart = 8192L)(
+      perNodeStatic(_, _, _, bcastClosureEdges))
   }
 
   /** Edge count up to which the closure join BROADCASTS the oriented
@@ -123,14 +109,12 @@ object Triangles {
     val corners = tris
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("tri"))
-    // Materialize the final per-node table as ONE checkpoint and free
-    // ed/deg/o: consumers then pay a node-sized scan (not a re-run of
+    // Materialize the final per-node table as ONE checkpoint (the driver
+    // frees ed/deg/o): consumers then pay a node-sized scan (not a re-run of
     // the wedge join per action), and the call pins exactly one small
     // RDD instead of three tables callers had no way to release.
-    val out = scope.ckpt(deg.join(corners, Seq("node"), "left")
+    scope.ckpt(deg.join(corners, Seq("node"), "left")
       .select(col("node"), col("d"), coalesce(col("tri"), lit(0L)).as("tri")))
-    scope.freeAllBut(scope.last)
-    out
   }
 
   /**

@@ -217,7 +217,9 @@ object CombineQueries {
 
     Q("q_sample",
       // At each daily tick (grid derived from the data), the latest event
-      // value per user at-or-before the tick.
+      // value per user at-or-before the tick. A span shorter than the first
+      // tick has no grid (`sequence` would run backwards and throw; the
+      // oracle's generate_series is empty there).
       (s, d) => {
         val base = ev(s, d)
         val mm = base.df.agg(
@@ -225,7 +227,8 @@ object CombineQueries {
         val ticks = base.df.select(col("user_id")).distinct()
           .crossJoin(broadcast(mm))
           .select(col("user_id"),
-            explode(expr("sequence(t0 + INTERVAL 1 DAY, t1, INTERVAL 1 DAY)")).as("ts"))
+            explode(expr("CASE WHEN t0 + INTERVAL 1 DAY <= t1 THEN " +
+              "sequence(t0 + INTERVAL 1 DAY, t1, INTERVAL 1 DAY) END")).as("ts"))
           .withColumn("seq", lit(Long.MaxValue))
         val timer = EventStream(ticks, keys = Seq("user_id"))
         base.sample(timer, Seq("cents"))

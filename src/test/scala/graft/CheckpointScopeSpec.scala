@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.engine.CheckpointScope
+import graft.engine._
 
 /** Exact checkpoint-id attribution and scope isolation — the storage
   * hygiene underneath every iterative graph engine. */
@@ -53,24 +54,87 @@ class CheckpointScopeSpec extends SparkSpec {
     scope.freeAllBut(Nil)
   }
 
+  /** Fixture for the per-entry-point tables: a 40-node functional graph
+    * plus short chords (triangles, a 2-core), with integer weights. */
+  private def fixture: DataFrame = {
+    val r = spark.range(40)
+    def chords(rem: Int, step: Int) = r.filter(col("id") % 5 === rem)
+      .select(col("id").as("src"), ((col("id") + step) % 40).as("dst"))
+    r.select(col("id").as("src"), ((col("id") * 7 + 1) % 40).as("dst"))
+      .union(chords(0, 1)).union(chords(0, 2)).union(chords(1, 1))
+      .withColumn("w", col("src") % 3 + 1)
+  }
+
+  /** Every graph-engine entry point over `edges`, with the number of
+    * scheduler jobs it ran (call + one `collect`) on [[fixture]] at the
+    * commit before the engines moved onto `GraphRounds`. */
+  private def entryPoints(edges: DataFrame): Seq[(String, Int, () => DataFrame)] = {
+    import spark.implicits._
+    val seeds = Seq(0L, 5L).toDF("node")
+    val labels = Seq((0L, 1L), (5L, 2L)).toDF("node", "label")
+    Seq(
+      ("PageRank.run", 14, () => PageRank.run(edges, "src", "dst", iters = 3)),
+      ("PageRank.runPersonalized", 15, () =>
+        PageRank.runPersonalized(edges, "src", "dst", seeds, iters = 3)),
+      ("PageRank.runWeighted", 14, () =>
+        PageRank.runWeighted(edges, "src", "dst", "w", iters = 3)),
+      ("Hits.run", 20, () => Hits.run(edges, "src", "dst", iters = 3)),
+      ("KCore.run", 11, () => KCore.run(edges, k = 2, rounds = 3)),
+      ("Sssp.run", 12, () => Sssp.run(edges, seeds, rounds = 3)),
+      ("Bfs.run", 12, () => Bfs.run(edges, seeds, maxHops = 3)),
+      ("LabelPropagation.run", 12, () => LabelPropagation.run(edges, labels, iters = 3)),
+      ("Triangles.perNode", 9, () => Triangles.perNode(edges)),
+      ("ConnectedComponents.run", 42, () => ConnectedComponents.run(edges)),
+      ("ConnectedComponents.runStar", 35, () => ConnectedComponents.runStar(edges)))
+  }
+
+  /** Scheduler jobs `body` ran, counted through a job group. Listener
+    * events arrive in order, so once a later fence job is visible every
+    * job of the group is too. */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    val fence = s"$group-fence"
+    sc.setJobGroup(fence, fence)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   test("Checkpoints.release: two sequential engine runs leave zero pinned RDDs") {
-    import org.apache.spark.sql.DataFrame
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    val edges: DataFrame = spark.range(40)
-      .select(col("id").as("src"), ((col("id") * 7 + 1) % 40).as("dst"))
-    val r1 = graft.engine.PageRank.run(edges, "src", "dst", iters = 2)
-    assert(r1.count() > 0)
-    assert(graft.engine.Checkpoints.pinnedIds(r1).nonEmpty)
-    graft.engine.Checkpoints.release(r1)
-    val r2 = graft.engine.PageRank.run(edges, "src", "dst", iters = 2)
-    assert(r2.count() > 0)
-    graft.engine.Checkpoints.release(r2)
-    assert(persistedIds.isEmpty,
-      s"released engine results still pin RDDs: $persistedIds")
+    val edges = fixture
+    entryPoints(edges).foreach { case (name, jobs, run) =>
+      Seq(1, 2).foreach { pass =>
+        var out: DataFrame = null
+        val ran = jobsOf(s"release-$name-$pass") { out = run(); out.collect() }
+        assert(ran === jobs, s"$name pass $pass scheduled $ran jobs, pinned $jobs")
+        assert(Checkpoints.pinnedIds(out).nonEmpty, s"$name result pins nothing")
+        Checkpoints.release(out)
+        assert(persistedIds.isEmpty,
+          s"$name: released engine result still pins RDDs: $persistedIds")
+      }
+    }
+  }
+
+  test("every engine on empty edges restores its thread-local and pins nothing") {
+    val key = "spark.checkpoint.checkpointAllMarkedAncestors"
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.values.foreach(_.unpersist(true))
+    entryPoints(fixture.filter(lit(false))).foreach { case (name, _, run) =>
+      sc.setLocalProperty(key, null)
+      val out = run()
+      assert(sc.getLocalProperty(key) === null, s"$name left $key set")
+      assert(out.count() === 0)
+      Checkpoints.release(out)
+      assert(persistedIds.isEmpty, s"$name on empty edges still pins $persistedIds")
+    }
   }
 
   test("engine failure path frees every pinned checkpoint (scope.guarded)") {
-    import org.apache.spark.sql.DataFrame
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     val edges: DataFrame = spark.range(30)
       .select(col("id").as("src"), ((col("id") * 7 + 1) % 30).as("dst"))
@@ -116,46 +180,71 @@ class CheckpointScopeSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
-  test("FusedRounds: odd rounds lazy, last round eager, deferred frees " +
-      "only flush after an eager materialization") {
-    import graft.engine.FusedRounds
+  test("GraphRounds.iterate: odd rounds lazy, last eager, frees deferred") {
     val scope = new CheckpointScope(spark.sparkContext)
-    val fused = new FusedRounds(scope, rounds = 3)
-    var cur = scope.ckpt(spark.range(50).toDF())   // state_0, eager
-    var curIds = scope.last
-    val state0Ids = curIds
-    // round 1: LAZY — state_0 must NOT be freed yet (the lazy plan
-    // still references it and a localCheckpoint is unrecomputable)
-    cur = fused.ckptRound(cur.withColumn("r", lit(1)), curIds)
-    curIds = fused.last
-    val r1Ids = curIds
-    assert(state0Ids.forall(persistedIds.contains),
-      "lazy round freed its not-yet-materialized input")
-    // round 2: EAGER — materializes round 1 inside its own job, then
-    // flushes both the round-1 input (deferred) and round-1 itself...
-    cur = fused.ckptRound(cur.withColumn("r", lit(2)), curIds)
-    curIds = fused.last
-    assert(state0Ids.forall(id => !persistedIds.contains(id)),
-      "deferred free of state_0 did not flush at the eager round")
-    assert(r1Ids.forall(id => !persistedIds.contains(id)),
-      "round-1 state should be dead after round 2 materializes")
+    val state0 = scope.ckpt(spark.range(50).toDF())
+    val state0Ids = scope.last
+    // serialized = the big-rung gate: rounds pair up (fuse depth 2)
+    scope.serialized = true
+    var r1Ids = List.empty[Int]
+    val out = GraphRounds.iterate(scope, state0, 3) { (cur, r) =>
+      r match {
+        case 2 =>
+          // round 1 was LAZY — state_0 must NOT be freed yet (the lazy
+          // plan still references it and a localCheckpoint is
+          // unrecomputable)
+          assert(state0Ids.forall(persistedIds.contains),
+            "lazy round freed its not-yet-materialized input")
+          r1Ids = Checkpoints.pinnedIds(cur).toList
+        case 3 =>
+          // round 2 was EAGER — it materialized round 1 inside its own
+          // job, then flushed the deferred state_0 and round 1 itself
+          assert(state0Ids.forall(id => !persistedIds.contains(id)),
+            "deferred free of state_0 did not flush at the eager round")
+          assert(r1Ids.forall(id => !persistedIds.contains(id)),
+            "round-1 state should be dead after round 2 materializes")
+        case _ =>
+      }
+      cur.withColumn("r", lit(r))
+    }
     // round 3 (the last): always EAGER even though 3 is odd
-    cur = fused.ckptRound(cur.withColumn("r", lit(3)), curIds)
-    assert(cur.count() === 50)
-    assert(cur.columns.count(_ == "r") === 1)
+    assert(r1Ids.nonEmpty)
+    assert(out.count() === 50)
+    assert(out.columns.count(_ == "r") === 1)
     scope.freeAllBut(Nil)
   }
 
-  test("FusedRounds: a single-round loop stays eager (the caller consumes it)") {
-    import graft.engine.FusedRounds
+  test("GraphRounds.iterate: a single-round loop stays eager") {
+    // the caller consumes the last round, so it is always materialized
     val scope = new CheckpointScope(spark.sparkContext)
-    val fused = new FusedRounds(scope, rounds = 1)
     val base = scope.ckpt(spark.range(10).toDF())
     val baseIds = scope.last
-    val out = fused.ckptRound(base.withColumn("r", lit(1)), baseIds)
+    val out = GraphRounds.iterate(scope, base, 1)((cur, r) => cur.withColumn("r", lit(r)))
     // eager: the round materialized and freed its input immediately
     assert(baseIds.forall(id => !persistedIds.contains(id)))
     assert(out.count() === 10)
+    scope.freeAllBut(Nil)
+  }
+
+  test("GraphRounds.iterate: a round's lazy side tables die with the round") {
+    // below the size gate the whole loop is one lazy chain
+    val scope = new CheckpointScope(spark.sparkContext)
+    val state0 = scope.ckpt(spark.range(20).toDF())
+    val state0Ids = scope.last
+    var sideIds = List.empty[List[Int]]
+    val out = GraphRounds.iterate(scope, state0, 3) { (cur, r) =>
+      // rounds 1 and 2 are lazy (fuse depth = rounds): nothing freed yet
+      if (r > 1) assert(state0Ids.forall(persistedIds.contains))
+      val side = scope.ckptLazy(cur.select((col("id") + r).as("s")))
+      sideIds :+= scope.last
+      cur.join(side, col("id") + r === col("s"), "left_semi")
+    }
+    assert(out.count() === 20)
+    // the last (eager) round freed state_0 and rounds 1-2 with their side
+    // tables; only round 3's state and side table stay pinned
+    val left = scope.owned.toSet
+    assert(left === (Checkpoints.pinnedIds(out).toSet ++ sideIds.last))
+    assert((state0Ids ++ sideIds.init.flatten).forall(id => !persistedIds.contains(id)))
     scope.freeAllBut(Nil)
   }
 }

@@ -17,6 +17,18 @@ class EntrySmokeSpec extends SparkSpec {
     assert(q.subsetOf(o), s"query without oracle: ${q.diff(o)}")
   }
 
+  test("q_sample: events spanning less than a day yield no ticks, not an error") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_qsample").toString
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 13:30:00")
+    Seq((1L, t0, 7L, "view", 1.25, "{}"), (2L, t1, 7L, "buy", 3.5, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    // the oracle's generate_series over a backwards grid is empty
+    assert(SparkEntry.queries("q_sample")(spark, dir).collect().isEmpty)
+  }
+
   test("pull-based iteration (aiter -> toLocalIterator)") {
     val it = seqStream(0 until 100).df.orderBy("seq").toLocalIterator()
     val first = it.next()
