@@ -232,11 +232,6 @@ object Aggregators {
   def throttleDynAdmit(tsUs: Column, maximum: Column, intervalUs: Column): Column =
     udaf(new ThrottleDynAgg).apply(tsUs, maximum, intervalUs)
 
-  // (The switch scan that lived here as a custom Aggregator reduced to
-  // built-in window expressions — see EventStream.switch: the holder
-  // only changes at steal rows, so `last(if(isFirst, src)) IGNORE NULLS`
-  // over the preceding frame replaces the O(1)-state udaf entirely.)
-
   /**
    * Bounded k-smallest collector: `collect_list` whose buffer can never
    * exceed `cap` elements — it keeps the `cap` SMALLEST longs seen (a

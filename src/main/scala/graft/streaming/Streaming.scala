@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.ScalaReflection
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
@@ -15,12 +17,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *  - `EventBus`   — the reference's `connect`/`emit` pub-sub surface
  *                   (`event.py:87-225`): injected rows flow through a
  *                   live query into per-batch listener callbacks.
- *  - `timer`      — the reference's `Timer` (`ops/create.py:100`) as a
- *                   rate source.
  *  - windowed aggregation with watermarks — `ChunkWith`/tumbling windows.
  *  - `debounceBursts` — the reference's `Debounce` (`ops/timing.py:67`)
  *                   as event-time-timeout keyed state: emits the last
  *                   row of a burst once the quiet gap elapses.
+ *  - keyed scans  — every other stateful operator (throttle, the
+ *                   combine family, the emap family, as-of, sketches,
+ *                   anomaly) is one [[KeyedScan]] step.
  *
  * All state is keyed (`groupByKey(user)`), so streaming state shards
  * across executors exactly like the batch windows do.
@@ -46,15 +49,6 @@ object Streaming {
     def events: DataFrame = mem.toDF()
       .select(col("user_id"), timestamp_micros(col("tsUs")).as("ts"), col("value"))
   }
-
-  /** Timer source: i-th tick carries i*intervalSec (i from 1, matching
-    * the reference loop — `ops/create.py:100-112`) at processing time. */
-  def timer(spark: SparkSession, intervalSec: Double): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", math.max(1, (1 / intervalSec).toInt).toString)
-      .load()
-      .select(col("value").as("seq"), col("timestamp").as("ts"),
-        ((col("value") + 1) * intervalSec).as("value"))
 
   /** Tumbling event-time window with watermark — ChunkWith's streaming
     * form (`ops/transform.py:179-211`). */
@@ -149,13 +143,6 @@ object Streaming {
       .agg(max_by(col("value"), col("ts")).as("value"))
       .select(col("window.end").as("ts"), col("user_id"), col("value"))
 
-  /** Streaming running aggregates (§2.4 in update mode): per-key count /
-    * sum / max maintained across micro-batches. */
-  def runningTotals(events: DataFrame): DataFrame =
-    events.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"),
-        max(col("value")).as("vmax"))
-
   /** The reference's `connect` surface (`event.py:87-140`): a listener
     * invoked per micro-batch of rows. Returns the started query; stop it
     * to disconnect. */
@@ -167,142 +154,93 @@ object Streaming {
       .start()
 
   /**
-   * Streaming Throttle (`ops/timing.py:104-184`) on the
-   * `transformWithState` API (Spark 4 stateful processor + RocksDB
-   * state store): values are never dropped; each row's timestamp is
-   * rewritten to when the per-key sliding-window rate limiter
-   * (`maximum` per `intervalSec`) admits it — the same semantics as the
-   * batch `EventStream.throttle` scan. State is the bounded list of the
-   * last `maximum` admitted times.
+   * The one keyed scan behind every `transformWithState` operator here —
+   * eventkit's `Op` shape (`ops/op.py:49-57`: `on_source` updates the
+   * operator's own state and emits), sharded by key. Per key and
+   * micro-batch it reads the single `ValueState` `name` (`zero` when
+   * absent), runs `step` over the batch's rows and writes the new state
+   * back. Each operator's state name and type are its checkpoint layout:
+   * changing either stops old checkpoints from restoring.
    *
    * Requires `spark.sql.streaming.stateStore.providerClass =
    * ...RocksDBStateStoreProvider` (transformWithState's backing store).
    */
-  class ThrottleProcessor(maximum: Int, intervalUs: Long)
-    extends StatefulProcessor[Long, Ev, Ev] {
+  private[streaming] final class KeyedScan[K, I, S, O](name: String, stateEnc: Encoder[S],
+      zero: S, step: (K, S, Iterator[I]) => (S, IterableOnce[O]))
+      extends StatefulProcessor[K, I, O] {
+    @transient private var st: ValueState[S] = _
 
-    @transient private var admitted: ValueState[Seq[Long]] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[S](name, stateEnc, TTLConfig.NONE)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      admitted = getHandle.getValueState[Seq[Long]](
-        "admitted", implicitly[org.apache.spark.sql.Encoder[Seq[Long]]], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[Ev], timers: TimerValues): Iterator[Ev] = {
-      var window = if (admitted.exists()) admitted.get() else Seq.empty[Long]
-      val out = rows.toSeq.sortBy(_.tsUs).map { ev =>
-        // Arrival order is FIFO (reference queue, ops/timing.py:119-121):
-        // an admit never precedes the previous one, so clamping to the
-        // last admitted time keeps `window` sorted ascending across
-        // micro-batches — which indexing the (size-maximum)-th element
-        // relies on.
-        val floor = window.lastOption.getOrElse(Long.MinValue)
-        val rateFloor =
-          if (window.size < maximum) Long.MinValue
-          else window(window.size - maximum) + intervalUs
-        val admitTs = math.max(ev.tsUs, math.max(floor, rateFloor))
-        window = (window :+ admitTs).takeRight(maximum)
-        Ev(ev.user_id, admitTs, ev.value)
-      }
-      admitted.update(window)
+    override def handleInputRows(key: K, rows: Iterator[I], timers: TimerValues): Iterator[O] = {
+      val (next, out) = step(key, if (st.exists()) st.get() else zero, rows)
+      st.update(next)
       out.iterator
     }
   }
 
-  /** Streaming throttle: ts-rewrite rate limiting with keyed RocksDB
-    * state via `transformWithState`. */
+  /** The encoder `spark.implicits` derives for `T`: an agnostic one,
+    * resolved where it is used. (A resolved `ExpressionEncoder` of a
+    * Seq-typed state fails in `init` once shipped to an executor.) */
+  private def enc[T: TypeTag]: Encoder[T] = ScalaReflection.encoderFor[T]
+
+  /** Keyed scan, per batch: `step` merges a key's whole micro-batch. */
+  private def scan[I, K: TypeTag, S: TypeTag, O: TypeTag](in: Dataset[I], name: String,
+      zero: S, mode: OutputMode)(key: I => K)(
+      step: (K, S, Iterator[I]) => (S, IterableOnce[O])): Dataset[O] =
+    in.groupByKey(key)(enc[K]).transformWithState(
+      new KeyedScan(name, enc[S], zero, step), TimeMode.None(), mode)(enc[O])
+
+  /** Keyed scan, per row, in append mode: `step` folds a key's rows in
+    * `order` within the micro-batch and emits at most one row each.
+    * Across micro-batches, per-key ordered delivery is assumed. */
+  private def scanRows[I, K: TypeTag, T: Ordering, S: TypeTag, O: TypeTag](
+      in: Dataset[I], name: String, zero: S)(key: I => K, order: I => T)(
+      step: (K, S, I) => (S, Option[O])): Dataset[O] =
+    scan(in, name, zero, OutputMode.Append())(key) { (k, s0, rows) =>
+      var s = s0
+      val out = rows.toSeq.sortBy(order).flatMap { r =>
+        val (next, o) = step(k, s, r); s = next; o }
+      (s, out)
+    }
+
+  /**
+   * Streaming Throttle (`ops/timing.py:104-184`): values are never
+   * dropped; each row's timestamp is rewritten to when the per-key
+   * sliding-window rate limiter (`maximum` per `intervalSec`) admits
+   * it — the same semantics as the batch `EventStream.throttle` scan.
+   * State is the bounded list of the last `maximum` admitted times.
+   */
   def throttleStream(events: Dataset[Ev], maximum: Int, intervalSec: Double): Dataset[Ev] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(
-        new ThrottleProcessor(maximum, math.round(intervalSec * 1e6)),
-        TimeMode.None(), OutputMode.Append())
+    val intervalUs = math.round(intervalSec * 1e6)
+    scanRows(events, "admitted", Seq.empty[Long])(_.user_id, _.tsUs) { (_, window, ev) =>
+      // Arrival order is FIFO (reference queue, ops/timing.py:119-121):
+      // an admit never precedes the previous one, so clamping to the
+      // last admitted time keeps `window` sorted ascending across
+      // micro-batches — which indexing the (size-maximum)-th element
+      // relies on.
+      val floor = window.lastOption.getOrElse(Long.MinValue)
+      val rateFloor =
+        if (window.size < maximum) Long.MinValue
+        else window(window.size - maximum) + intervalUs
+      val admitTs = math.max(ev.tsUs, math.max(floor, rateFloor))
+      ((window :+ admitTs).takeRight(maximum), Some(Ev(ev.user_id, admitTs, ev.value)))
+    }
   }
 
   case class TaggedEv(user_id: Long, tsUs: Long, value: Double, src: Int)
   case class ZipOut(user_id: Long, idx: Long, a: Double, b: Double)
   case class ZipLatestOut(user_id: Long, tsUs: Long, a: Option[Double], b: Option[Double])
 
-  /**
-   * Streaming Zip (`ops/combine.py:219-260`): pair the i-th event of
-   * source A with the i-th event of source B, per key — the reference's
-   * positional zip, sharded. State per key is the pair of pending
-   * queues plus the running pair index; each incoming event appends to
-   * its side's queue and every complete (head, head) pair is emitted
-   * immediately, across micro-batch boundaries. Like the reference,
-   * buffering is unbounded if one side stalls (zip's semantics require
-   * it); state size equals the inter-stream lag, not history.
-   */
-  class ZipProcessor extends StatefulProcessor[Long, TaggedEv, ZipOut] {
-    @transient private var st: ValueState[(Seq[Double], Seq[Double], Long)] = _
+  /** The sources as one stream, each row tagged with its source's position. */
+  private def tagged(sources: Seq[Dataset[Ev]]): Dataset[TaggedEv] =
+    sources.zipWithIndex
+      .map { case (s, i) => s.map(e => TaggedEv(e.user_id, e.tsUs, e.value, i))(enc[TaggedEv]) }
+      .reduce(_ union _)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[(Seq[Double], Seq[Double], Long)](
-        "zipq",
-        implicitly[org.apache.spark.sql.Encoder[(Seq[Double], Seq[Double], Long)]],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[TaggedEv], timers: TimerValues): Iterator[ZipOut] = {
-      var (qa, qb, idx) = if (st.exists()) st.get() else (Seq.empty[Double], Seq.empty[Double], 0L)
-      val out = Seq.newBuilder[ZipOut]
-      rows.toSeq.sortBy(r => (r.tsUs, r.src)).foreach { r =>
-        if (r.src == 0) qa = qa :+ r.value else qb = qb :+ r.value
-        if (qa.nonEmpty && qb.nonEmpty) {
-          out += ZipOut(key, idx, qa.head, qb.head)
-          qa = qa.tail; qb = qb.tail; idx += 1
-        }
-      }
-      st.update((qa, qb, idx))
-      out.result().iterator
-    }
-  }
-
-  /**
-   * Streaming Ziplatest (`ops/combine.py:262-302`): on every event from
-   * either source emit the latest value of both, `None` standing in for
-   * the reference's NO_VALUE until a side has emitted (`strict = true`
-   * suppresses rows until both sides have a value — the reference's
-   * `partial=False`). State per key is just the two latest values —
-   * bounded regardless of history.
-   */
-  class ZipLatestProcessor(strict: Boolean)
-    extends StatefulProcessor[Long, TaggedEv, ZipLatestOut] {
-    @transient private var st: ValueState[(Option[Double], Option[Double])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[(Option[Double], Option[Double])](
-        "latest",
-        implicitly[org.apache.spark.sql.Encoder[(Option[Double], Option[Double])]],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[TaggedEv], timers: TimerValues): Iterator[ZipLatestOut] = {
-      var (la, lb) = if (st.exists()) st.get() else (Option.empty[Double], Option.empty[Double])
-      val out = Seq.newBuilder[ZipLatestOut]
-      rows.toSeq.sortBy(r => (r.tsUs, r.src)).foreach { r =>
-        if (r.src == 0) la = Some(r.value) else lb = Some(r.value)
-        if (!strict || (la.isDefined && lb.isDefined))
-          out += ZipLatestOut(key, r.tsUs, la, lb)
-      }
-      st.update((la, lb))
-      out.result().iterator
-    }
-  }
-
-  private def taggedUnion(a: Dataset[Ev], b: Dataset[Ev]): Dataset[TaggedEv] = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.map(e => TaggedEv(e.user_id, e.tsUs, e.value, 0))
-      .union(b.map(e => TaggedEv(e.user_id, e.tsUs, e.value, 1)))
-  }
+  /** Scan order of the combine family: event time, then source. */
+  private def tsSrc(r: TaggedEv): (Long, Int) = (r.tsUs, r.src)
 
   /**
    * Streaming Merge (`ops/combine.py:97-102`): interleave N live
@@ -317,77 +255,66 @@ object Streaming {
   def mergeStream(sources: Seq[Dataset[Ev]]): Dataset[Ev] =
     sources.reduce(_ unionByName _)
 
-  /** Streaming positional zip of two live streams, keyed state via
-    * `transformWithState` (requires the RocksDB state-store provider,
-    * like [[throttleStream]]). */
-  def zipStream(a: Dataset[Ev], b: Dataset[Ev]): Dataset[ZipOut] = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    taggedUnion(a, b).groupByKey(_.user_id)
-      .transformWithState(new ZipProcessor, TimeMode.None(), OutputMode.Append())
-  }
-
-  /** Streaming ziplatest of two live streams (partial by default). */
-  def ziplatestStream(a: Dataset[Ev], b: Dataset[Ev],
-      strict: Boolean = false): Dataset[ZipLatestOut] = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    taggedUnion(a, b).groupByKey(_.user_id)
-      .transformWithState(new ZipLatestProcessor(strict), TimeMode.None(), OutputMode.Append())
-  }
-
   /**
-   * Streaming Switch (`ops/combine.py:104-139`): of N live sources,
-   * events pass only from the currently-active one; a source's FIRST
-   * emission steals activity, and the displaced source is removed
-   * permanently. Same reduction as the batch
-   * [[graft.functions.Aggregators.SwitchAgg]]: "src was never seen" ⇔
-   * "this emission un-removes it", so state per key is just the active
-   * source id plus the ever-seen set — O(#sources), independent of
-   * event count. Rows are processed in (event-time, src) order within a
-   * batch; per-key ordered delivery across micro-batches is assumed
-   * (as for [[AsofProcessor]]).
+   * Streaming Zip (`ops/combine.py:219-260`): pair the i-th event of
+   * source A with the i-th event of source B, per key — the reference's
+   * positional zip, sharded. State per key is the pair of pending
+   * queues plus the running pair index; each incoming event appends to
+   * its side's queue and every complete (head, head) pair is emitted
+   * immediately, across micro-batch boundaries. Like the reference,
+   * buffering is unbounded if one side stalls (zip's semantics require
+   * it); state size equals the inter-stream lag, not history.
    */
-  class SwitchProcessor extends StatefulProcessor[Long, TaggedEv, TaggedEv] {
-    @transient private var st: ValueState[(Long, Seq[Int])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[(Long, Seq[Int])](
-        "switch", implicitly[org.apache.spark.sql.Encoder[(Long, Seq[Int])]],
-        TTLConfig.NONE)
+  def zipStream(a: Dataset[Ev], b: Dataset[Ev]): Dataset[ZipOut] =
+    scanRows(tagged(Seq(a, b)), "zipq", (Seq.empty[Double], Seq.empty[Double], 0L))(
+        _.user_id, tsSrc) { case (key, (qa0, qb0, idx), r) =>
+      val (qa, qb) = if (r.src == 0) (qa0 :+ r.value, qb0) else (qa0, qb0 :+ r.value)
+      if (qa.nonEmpty && qb.nonEmpty)
+        ((qa.tail, qb.tail, idx + 1), Some(ZipOut(key, idx, qa.head, qb.head)))
+      else ((qa, qb, idx), None)
     }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[TaggedEv], timers: TimerValues): Iterator[TaggedEv] = {
-      var (active, seen) =
-        if (st.exists()) st.get() else (Long.MinValue, Seq.empty[Int])
-      val out = Seq.newBuilder[TaggedEv]
-      rows.toSeq.sortBy(r => (r.tsUs, r.src)).foreach { r =>
-        val pass = r.src == active || !seen.contains(r.src)
-        if (!seen.contains(r.src)) seen = seen :+ r.src
-        if (pass) { active = r.src; out += r }
-      }
-      st.update((active, seen))
-      out.result().iterator
-    }
-  }
-
-  /** Streaming switch over N live streams (source index = position). */
-  def switchStream(sources: Seq[Dataset[Ev]]): Dataset[TaggedEv] = {
-    val spark = sources.head.sparkSession
-    import spark.implicits._
-    sources.zipWithIndex
-      .map { case (s, i) => s.map(e => TaggedEv(e.user_id, e.tsUs, e.value, i)) }
-      .reduce(_ union _)
-      .groupByKey(_.user_id)
-      .transformWithState(new SwitchProcessor, TimeMode.None(), OutputMode.Append())
-  }
 
   /**
-   * Streaming Concat (`ops/combine.py:142-174`): when a later source
-   * emits its first event, every earlier source is disconnected
-   * permanently. Live form of the batch kill-boundary encoding
+   * Streaming Ziplatest (`ops/combine.py:262-302`): on every event from
+   * either source emit the latest value of both, `None` standing in for
+   * the reference's NO_VALUE until a side has emitted (`strict = true`
+   * suppresses rows until both sides have a value — the reference's
+   * `partial=False`). State per key is just the two latest values —
+   * bounded regardless of history. Partial by default.
+   */
+  def ziplatestStream(a: Dataset[Ev], b: Dataset[Ev],
+      strict: Boolean = false): Dataset[ZipLatestOut] =
+    scanRows(tagged(Seq(a, b)), "latest", (Option.empty[Double], Option.empty[Double]))(
+        _.user_id, tsSrc) { case (key, (la0, lb0), r) =>
+      val (la, lb) = if (r.src == 0) (Some(r.value), lb0) else (la0, Some(r.value))
+      ((la, lb), Option.when(!strict || (la.isDefined && lb.isDefined))(
+        ZipLatestOut(key, r.tsUs, la, lb)))
+    }
+
+  /**
+   * Streaming Switch (`ops/combine.py:104-139`) over N live sources
+   * (source index = position): events pass only from the
+   * currently-active one; a source's FIRST emission steals activity,
+   * and the displaced source is removed permanently. Same reduction as
+   * the batch [[graft.engine.EventStream.switch]]: "src was never seen"
+   * ⇔ "this emission un-removes it", so state per key is just the
+   * active source id plus the ever-seen set — O(#sources), independent
+   * of event count.
+   */
+  def switchStream(sources: Seq[Dataset[Ev]]): Dataset[TaggedEv] =
+    scanRows(tagged(sources), "switch", (Long.MinValue, Seq.empty[Int]))(_.user_id, tsSrc) {
+      case (_, (active, seen), r) =>
+        val unseen = !seen.contains(r.src)
+        if (r.src == active || unseen)
+          ((r.src.toLong, if (unseen) seen :+ r.src else seen), Some(r))
+        else ((active, seen), None)
+    }
+
+  /**
+   * Streaming Concat (`ops/combine.py:142-174`) over N live sources
+   * (source index = position): when a later source emits its first
+   * event, every earlier source is disconnected permanently. Live form
+   * of the batch kill-boundary encoding
    * ([[graft.engine.EventStream.concat]]): state per key is the
    * first-emission event time of each source seen so far (bounded by
    * the source count, not history), and a row of source i passes iff
@@ -400,31 +327,20 @@ object Streaming {
    * retracted if a killer's true first emission itself arrives late
    * with a smaller event time than anything seen before.
    */
-  class ConcatProcessor extends StatefulProcessor[Long, TaggedEv, TaggedEv] {
-    @transient private var st: ValueState[Seq[(Int, Long)]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[Seq[(Int, Long)]](
-        "concat", implicitly[org.apache.spark.sql.Encoder[Seq[(Int, Long)]]],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[TaggedEv], timers: TimerValues): Iterator[TaggedEv] = {
-      var firsts = if (st.exists()) st.get().toMap else Map.empty[Int, Long]
-      val out = Seq.newBuilder[TaggedEv]
-      rows.toSeq.sortBy(r => (r.tsUs, r.src)).foreach { r =>
+  def concatStream(sources: Seq[Dataset[Ev]]): Dataset[TaggedEv] =
+    scanRows(tagged(sources), "concat", Seq.empty[(Int, Long)])(_.user_id, tsSrc) {
+      (_, firsts, r) =>
         val kill = firsts.collect { case (s, t) if s > r.src => t }
-        val pass = kill.isEmpty || r.tsUs <= kill.min
-        firsts = firsts.updated(r.src,
-          math.min(firsts.getOrElse(r.src, Long.MaxValue), r.tsUs))
-        if (pass) out += r
-      }
-      st.update(firsts.toSeq)
-      out.result().iterator
+        (firstAt(firsts, r.src, r.tsUs), Option.when(kill.isEmpty || r.tsUs <= kill.min)(r))
     }
-  }
+
+  /** `firsts` with `id`'s first-emission time lowered to `ts`, or `id`
+    * appended when unseen. */
+  private def firstAt[A](firsts: Seq[(A, Long)], id: A, ts: Long): Seq[(A, Long)] =
+    firsts.indexWhere(_._1 == id) match {
+      case -1 => firsts :+ (id -> ts)
+      case i => firsts.updated(i, id -> math.min(firsts(i)._2, ts))
+    }
 
   case class SpawnedEv(user_id: Long, tsUs: Long, pseq: Long, j: Long, c: String)
   case class MergedChild(user_id: Long, tsUs: Long, pseq: Long, c: String,
@@ -435,7 +351,7 @@ object Streaming {
   // (`flatMap` — fully parallel, stateless, the live analogue of the
   // batch explode); a keyed small-state scan then applies the family's
   // join rule (`ops/transform.py:291-346`). Per-key event-time-ordered
-  // delivery across micro-batches is assumed (as for [[ConcatProcessor]])
+  // delivery across micro-batches is assumed (as for [[concatStream]])
   // — append mode cannot retract already-emitted children.
 
   /**
@@ -446,14 +362,8 @@ object Streaming {
    * key is ONE counter.
    */
   def mergemapStream(parents: Dataset[Ev],
-      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] = {
-    val spark = parents.sparkSession
-    import spark.implicits._
-    spawned(parents, spawn)
-      .transformWithState(
-        new SpawnSeqProcessor(r => (r.tsUs, r.pseq, r.j)),
-        TimeMode.None(), OutputMode.Append())
-  }
+      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] =
+    spawnSeq(parents, spawn, r => (r.tsUs, r.pseq, r.j))
 
   /**
    * Streaming Chainmap (`ops/transform.py:328-332`): child stream i is
@@ -463,14 +373,8 @@ object Streaming {
    * whenever parents arrive in creation order.
    */
   def chainmapStream(parents: Dataset[Ev],
-      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] = {
-    val spark = parents.sparkSession
-    import spark.implicits._
-    spawned(parents, spawn)
-      .transformWithState(
-        new SpawnSeqProcessor(r => (r.pseq, r.j, r.tsUs)),
-        TimeMode.None(), OutputMode.Append())
-  }
+      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] =
+    spawnSeq(parents, spawn, r => (r.pseq, r.j, r.tsUs))
 
   /**
    * Streaming Concatmap (`ops/transform.py:335-339`): child k is
@@ -482,13 +386,8 @@ object Streaming {
    * time (bounded by parent count) + the output counter.
    */
   def concatmapStream(parents: Dataset[Ev],
-      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] = {
-    val spark = parents.sparkSession
-    import spark.implicits._
-    spawned(parents, spawn)
-      .transformWithState(new SpawnKillProcessor(nextOnly = false),
-        TimeMode.None(), OutputMode.Append())
-  }
+      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] =
+    spawnKill(parents, spawn, nextOnly = false)
 
   /**
    * Streaming Switchmap (`ops/transform.py:342-346`): the batch
@@ -501,43 +400,16 @@ object Streaming {
    * falls through to the next spawning parent — avoid empty spawns.
    */
   def switchmapStream(parents: Dataset[Ev],
-      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] = {
-    val spark = parents.sparkSession
-    import spark.implicits._
-    spawned(parents, spawn)
-      .transformWithState(new SpawnKillProcessor(nextOnly = true),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  private def spawned(parents: Dataset[Ev], spawn: Ev => Seq[SpawnedEv]) = {
-    val spark = parents.sparkSession
-    import spark.implicits._
-    parents.flatMap(spawn(_)).groupByKey(_.user_id)
-  }
+      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] =
+    spawnKill(parents, spawn, nextOnly = true)
 
   /** Keyed running output counter over `order`-sorted spawned children
     * — the sequencing half shared by merge/chain. */
-  class SpawnSeqProcessor(order: SpawnedEv => (Long, Long, Long))
-      extends StatefulProcessor[Long, SpawnedEv, MergedChild] {
-    @transient private var st: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[Long](
-        "spawnseq", implicitly[org.apache.spark.sql.Encoder[Long]], TTLConfig.NONE)
+  private def spawnSeq(parents: Dataset[Ev], spawn: Ev => Seq[SpawnedEv],
+      order: SpawnedEv => (Long, Long, Long)): Dataset[MergedChild] =
+    scanRows(parents.flatMap(spawn(_))(enc[SpawnedEv]), "spawnseq", 0L)(_.user_id, order) {
+      (_, n, r) => (n + 1, Some(MergedChild(r.user_id, r.tsUs, r.pseq, r.c, n + 1)))
     }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[SpawnedEv], timers: TimerValues): Iterator[MergedChild] = {
-      var n = if (st.exists()) st.get() else 0L
-      val out = rows.toSeq.sortBy(order).map { r =>
-        n += 1
-        MergedChild(r.user_id, r.tsUs, r.pseq, r.c, n)
-      }
-      st.update(n)
-      out.iterator
-    }
-  }
 
   /** Kill-boundary filter + output counter for concatmap/switchmap.
     * State: (per-parent first child event time, counter). `nextOnly`
@@ -546,52 +418,21 @@ object Streaming {
     * parent). Rows process in (ts, pseq, j) scan order, so a row at the
     * kill instant is checked before its killer registers — the batch
     * tie rule. */
-  class SpawnKillProcessor(nextOnly: Boolean)
-      extends StatefulProcessor[Long, SpawnedEv, MergedChild] {
-    @transient private var st: ValueState[(Seq[(Long, Long)], Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[(Seq[(Long, Long)], Long)](
-        "spawnkill",
-        implicitly[org.apache.spark.sql.Encoder[(Seq[(Long, Long)], Long)]],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[SpawnedEv], timers: TimerValues): Iterator[MergedChild] = {
-      var (firsts, n) =
-        if (st.exists()) { val (f, c) = st.get(); (f.toMap, c) }
-        else (Map.empty[Long, Long], 0L)
-      val out = Seq.newBuilder[MergedChild]
-      rows.toSeq.sortBy(r => (r.tsUs, r.pseq, r.j)).foreach { r =>
-        val laters = firsts.keys.filter(_ > r.pseq)
+  private def spawnKill(parents: Dataset[Ev], spawn: Ev => Seq[SpawnedEv],
+      nextOnly: Boolean): Dataset[MergedChild] =
+    scanRows(parents.flatMap(spawn(_))(enc[SpawnedEv]), "spawnkill",
+        (Seq.empty[(Long, Long)], 0L))(_.user_id, r => (r.tsUs, r.pseq, r.j)) {
+      case (_, (firsts, n), r) =>
+        val laters = firsts.filter(_._1 > r.pseq)
         val kill =
           if (laters.isEmpty) None
-          else if (nextOnly) Some(firsts(laters.min))
-          else Some(laters.map(firsts).min)
-        firsts = firsts.updated(r.pseq,
-          math.min(firsts.getOrElse(r.pseq, Long.MaxValue), r.tsUs))
-        if (kill.forall(r.tsUs <= _)) {
-          n += 1
-          out += MergedChild(r.user_id, r.tsUs, r.pseq, r.c, n)
-        }
-      }
-      st.update((firsts.toSeq, n))
-      out.result().iterator
+          else if (nextOnly) Some(laters.minBy(_._1)._2)
+          else Some(laters.map(_._2).min)
+        val next = firstAt(firsts, r.pseq, r.tsUs)
+        if (kill.forall(r.tsUs <= _))
+          ((next, n + 1), Some(MergedChild(r.user_id, r.tsUs, r.pseq, r.c, n + 1)))
+        else ((next, n), None)
     }
-  }
-
-  /** Streaming concat over N live streams (source index = position). */
-  def concatStream(sources: Seq[Dataset[Ev]]): Dataset[TaggedEv] = {
-    val spark = sources.head.sparkSession
-    import spark.implicits._
-    sources.zipWithIndex
-      .map { case (s, i) => s.map(e => TaggedEv(e.user_id, e.tsUs, e.value, i)) }
-      .reduce(_ union _)
-      .groupByKey(_.user_id)
-      .transformWithState(new ConcatProcessor, TimeMode.None(), OutputMode.Append())
-  }
 
   case class AsofOut(user_id: Long, tsUs: Long, value: Double,
       asof_ts: Option[Long], asof_value: Option[Double])
@@ -612,47 +453,16 @@ object Streaming {
    * at equal timestamps). So state holds the lag between the two
    * streams, not history.
    */
-  class AsofProcessor extends StatefulProcessor[Long, TaggedEv, AsofOut] {
-    @transient private var st: ValueState[Seq[(Long, Double)]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[Seq[(Long, Double)]](
-        "refs", implicitly[org.apache.spark.sql.Encoder[Seq[(Long, Double)]]],
-        TTLConfig.NONE)
+  def asofStream(events: Dataset[Ev], refs: Dataset[Ev]): Dataset[AsofOut] =
+    // history sorted ascending by ts; src 0 = reference, src 1 = query
+    scanRows(tagged(Seq(refs, events)), "refs", Seq.empty[(Long, Double)])(_.user_id, tsSrc) {
+      case (_, hist, r) if r.src == 0 => ((hist :+ (r.tsUs, r.value)).sortBy(_._1), None)
+      case (key, hist, r) =>
+        val m = hist.filter(_._1 <= r.tsUs).lastOption
+        // older references can never match a later (ordered) event
+        (m.fold(hist)(hit => hist.dropWhile(_._1 < hit._1)),
+          Some(AsofOut(key, r.tsUs, r.value, m.map(_._1), m.map(_._2))))
     }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[TaggedEv], timers: TimerValues): Iterator[AsofOut] = {
-      // refs sorted ascending by ts; src 0 = reference, src 1 = query
-      var refs = if (st.exists()) st.get() else Seq.empty[(Long, Double)]
-      val out = Seq.newBuilder[AsofOut]
-      rows.toSeq.sortBy(r => (r.tsUs, r.src)).foreach { r =>
-        if (r.src == 0) {
-          refs = (refs :+ (r.tsUs, r.value)).sortBy(_._1)
-        } else {
-          val m = refs.filter(_._1 <= r.tsUs).lastOption
-          out += AsofOut(key, r.tsUs, r.value, m.map(_._1), m.map(_._2))
-          // older references can never match a later (ordered) event
-          m.foreach { hit => refs = refs.dropWhile(_._1 < hit._1) }
-        }
-      }
-      st.update(refs)
-      out.result().iterator
-    }
-  }
-
-  /** Streaming as-of stamp: `events` enriched with the latest `refs`
-    * value per key as of each event's time, via `transformWithState`
-    * (RocksDB provider required). */
-  def asofStream(events: Dataset[Ev], refs: Dataset[Ev]): Dataset[AsofOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    refs.map(e => TaggedEv(e.user_id, e.tsUs, e.value, 0))
-      .union(events.map(e => TaggedEv(e.user_id, e.tsUs, e.value, 1)))
-      .groupByKey(_.user_id)
-      .transformWithState(new AsofProcessor, TimeMode.None(), OutputMode.Append())
-  }
 
   /**
    * Streaming exact dedup: drop rows whose `keyCols` were already seen
@@ -845,36 +655,17 @@ object Streaming {
    * sequence as the batch Column kernel (parity-tested).
    */
   def hllRegisterStream(rows: Dataset[SketchIn]): Dataset[HllReg] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.map { x =>
+    val regs = rows.map { x =>
       val h = (x.sid * 2654435761L + 104729L) & 0xFFFFFFFFL
       val sfx = h >> 6
       val rho =
         if (sfx == 0L) 27 else 27 - java.lang.Long.toBinaryString(sfx).length
       HllReg(x.group, h % 64, rho)
-    }.groupByKey(r => (r.group, r.idx))
-      .transformWithState(new HllRegProcessor, TimeMode.None(), OutputMode.Update())
-  }
-
-  class HllRegProcessor
-      extends StatefulProcessor[(String, Long), HllReg, HllReg] {
-    @transient private var st: ValueState[Int] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[Int](
-        "mrho", implicitly[org.apache.spark.sql.Encoder[Int]], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: (String, Long), rows: Iterator[HllReg], timers: TimerValues): Iterator[HllReg] = {
-      val cur = if (st.exists()) st.get() else Int.MinValue
-      val merged = math.max(cur, rows.map(_.mrho).max)
-      if (merged > cur) {
-        st.update(merged)
-        Iterator.single(HllReg(key._1, key._2, merged))
-      } else Iterator.empty
+    }(enc[HllReg])
+    scan(regs, "mrho", Int.MinValue, OutputMode.Update())(r => (r.group, r.idx)) {
+      case ((group, idx), cur, batch) =>
+        val merged = math.max(cur, batch.map(_.mrho).max)
+        (merged, Option.when(merged > cur)(HllReg(group, idx, merged)))
     }
   }
 
@@ -889,29 +680,13 @@ object Streaming {
    */
   def cmsCellStream(fps: Dataset[(Long, Long)], w: Int,
       a: Seq[Long], b: Seq[Long]): Dataset[CmsUpd] = {
-    val spark = fps.sparkSession
-    import spark.implicits._
-    fps.flatMap { case (fp, wt) =>
+    val cells = fps.flatMap { case (fp, wt) =>
       a.indices.map(j => CmsUpd(j, (fp * a(j) + b(j)) % 1000003L % w, wt))
-    }.groupByKey(c => (c.r, c.b))
-      .transformWithState(new CmsCellProcessor, TimeMode.None(), OutputMode.Update())
-  }
-
-  class CmsCellProcessor
-      extends StatefulProcessor[(Int, Long), CmsUpd, CmsUpd] {
-    @transient private var st: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[Long](
-        "cell", implicitly[org.apache.spark.sql.Encoder[Long]], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: (Int, Long), rows: Iterator[CmsUpd], timers: TimerValues): Iterator[CmsUpd] = {
-      val total = (if (st.exists()) st.get() else 0L) + rows.map(_.wt).sum
-      st.update(total)
-      Iterator.single(CmsUpd(key._1, key._2, total))
+    }(enc[CmsUpd])
+    scan(cells, "cell", 0L, OutputMode.Update())(c => (c.r, c.b)) {
+      case ((r, b), cur, batch) =>
+        val total = cur + batch.map(_.wt).sum
+        (total, Some(CmsUpd(r, b, total)))
     }
   }
 
@@ -929,39 +704,15 @@ object Streaming {
    * full history. State per event type is three integers (count, sum,
    * sum of squares); days are processed in day order within a batch,
    * and per-key in-order delivery across batches is assumed, like the
-   * other keyed processors here.
+   * other keyed scans here.
    */
-  def anomalyStream(days: Dataset[DayCount]): Dataset[DayFlag] = {
-    val spark = days.sparkSession
-    import spark.implicits._
-    days.groupByKey(_.event_type)
-      .transformWithState(new AnomalyProcessor, TimeMode.None(), OutputMode.Append())
-  }
-
-  class AnomalyProcessor
-      extends StatefulProcessor[String, DayCount, DayFlag] {
-    @transient private var st: ValueState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      import implicits._
-      st = getHandle.getValueState[(Long, Long, Long)](
-        "volstats",
-        implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long)]],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: String, rows: Iterator[DayCount], timers: TimerValues): Iterator[DayFlag] = {
-      var (nd, sv, qv) = if (st.exists()) st.get() else (0L, 0L, 0L)
-      val out = rows.toSeq.sortBy(_.day).map { r =>
-        nd += 1; sv += r.n; qv += r.n * r.n
+  def anomalyStream(days: Dataset[DayCount]): Dataset[DayFlag] =
+    scanRows(days, "volstats", (0L, 0L, 0L))(_.event_type, _.day) {
+      case (key, (nd0, sv0, qv0), r) =>
+        val (nd, sv, qv) = (nd0 + 1, sv0 + r.n, qv0 + r.n * r.n)
         val dev = r.n * nd - sv
-        DayFlag(key, r.day, r.n, dev * dev > 4L * (nd * qv - sv * sv))
-      }
-      st.update((nd, sv, qv))
-      out.iterator
+        ((nd, sv, qv), Some(DayFlag(key, r.day, r.n, dev * dev > 4L * (nd * qv - sv * sv))))
     }
-  }
 
   case class WindowJoinOut(user_id: Long, l_tsUs: Long, l_value: Double,
       r_tsUs: Option[Long], r_value: Option[Double])

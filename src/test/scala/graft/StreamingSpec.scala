@@ -1281,6 +1281,119 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** Start `df` against a fresh checkpoint, run what is queued as ONE
+    * micro-batch, stop, and return the checkpoint path. */
+  private def oneCheckpointedBatch(df: org.apache.spark.sql.DataFrame,
+      mode: String): String = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_layout_ckpt").toString
+    val q = df.writeStream.format("noop")
+      .option("checkpointLocation", ckpt).outputMode(mode).start()
+    q.processAllAvailable()
+    q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) === 1,
+      "the fixed input must land in one micro-batch")
+    ckpt
+  }
+
+  /** Canonical text of a state-reader cell: structs as (..), arrays as [..]. */
+  private def render(v: Any): String = v match {
+    case null => "null"
+    case r: org.apache.spark.sql.Row => r.toSeq.map(render).mkString("(", ",", ")")
+    case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
+    case x => x.toString
+  }
+
+  test("keyed-scan state layout: every transformWithState operator's state " +
+      "variable, value schema and values after one checkpointed batch") {
+    withRocksDb {
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import spark.implicits._
+      def two(a: Seq[Ev], b: Seq[Ev]) = {
+        val (x, y) = (new Streaming.EventBus(spark), new Streaming.EventBus(spark))
+        x.emit(a: _*); y.emit(b: _*)
+        (x.eventsTyped, y.eventsTyped)
+      }
+      def one(rows: Ev*) = {
+        val x = new Streaming.EventBus(spark); x.emit(rows: _*); x.eventsTyped }
+      // parent v spawns children at its ts and ts + 2 ms (j = 0, 1)
+      val spawn = (e: Ev) => Seq(0L, 1L).map(j =>
+        Streaming.SpawnedEv(e.user_id, e.tsUs + j * 2000L, e.value.toLong, j, s"c$j"))
+      val parents = Seq(Ev(1L, 1000L, 0.0), Ev(1L, 2000L, 1.0))
+      // (state variable, "key schema -> value schema", rows as
+      // "key -> value", the run)
+      val cases: Seq[(String, String, Set[String], () => String)] = Seq(
+        ("admitted", "struct<value:bigint> -> struct<value:array<bigint>>",
+          Set("(1) -> ([1100000,2000000])", "(2) -> ([1000000])"),
+          () => oneCheckpointedBatch(Streaming.throttleStream(one(
+            Ev(1L, 1_000_000L, 1.0), Ev(1L, 1_100_000L, 2.0), Ev(1L, 1_200_000L, 3.0),
+            Ev(2L, 1_000_000L, 5.0)), maximum = 2, intervalSec = 1.0).toDF(), "append")),
+        ("zipq", "struct<value:bigint> -> struct<_1:array<double>,_2:array<double>,_3:bigint>",
+          Set("(1) -> ([2.0,3.0],[],1)"),
+          () => { val (a, b) = two(
+              Seq(Ev(1L, 1000L, 1.0), Ev(1L, 2000L, 2.0), Ev(1L, 3000L, 3.0)),
+              Seq(Ev(1L, 1500L, 10.0)))
+            oneCheckpointedBatch(Streaming.zipStream(a, b).toDF(), "append") }),
+        ("latest", "struct<value:bigint> -> struct<_1:double,_2:double>",
+          Set("(1) -> (3.0,2.0)", "(2) -> (7.0,null)"),
+          () => { val (a, b) = two(
+              Seq(Ev(1L, 1000L, 1.0), Ev(1L, 3000L, 3.0), Ev(2L, 1000L, 7.0)),
+              Seq(Ev(1L, 2000L, 2.0)))
+            oneCheckpointedBatch(Streaming.ziplatestStream(a, b).toDF(), "append") }),
+        ("switch", "struct<value:bigint> -> struct<_1:bigint,_2:array<int>>",
+          Set("(1) -> (0,[1,0])"),
+          () => { val (a, b) = two(Seq(Ev(1L, 2000L, 1.0)), Seq(Ev(1L, 1000L, 100.0)))
+            oneCheckpointedBatch(Streaming.switchStream(Seq(a, b)).toDF(), "append") }),
+        ("concat", "struct<value:bigint> -> struct<value:array<struct<_1:int,_2:bigint>>>",
+          Set("(1) -> ([(0,1000),(1,5000)])"),
+          () => { val (a, b) = two(
+              Seq(Ev(1L, 1000L, 1.0), Ev(1L, 2000L, 1.5)), Seq(Ev(1L, 5000L, 2.0)))
+            oneCheckpointedBatch(Streaming.concatStream(Seq(a, b)).toDF(), "append") }),
+        ("spawnseq", "struct<value:bigint> -> struct<value:bigint>",
+          Set("(1) -> (4)"),
+          () => oneCheckpointedBatch(
+            Streaming.mergemapStream(one(parents: _*), spawn).toDF(), "append")),
+        // parent 0's second child (3 ms) is past parent 1's first (2 ms): cut
+        ("spawnkill",
+          "struct<value:bigint> -> struct<_1:array<struct<_1:bigint,_2:bigint>>,_2:bigint>",
+          Set("(1) -> ([(0,1000),(1,2000)],3)"),
+          () => oneCheckpointedBatch(
+            Streaming.concatmapStream(one(parents: _*), spawn).toDF(), "append")),
+        ("refs", "struct<value:bigint> -> struct<value:array<struct<_1:bigint,_2:double>>>",
+          Set("(1) -> ([(5000,20.0),(8000,30.0)])", "(2) -> ([(1000,5.0)])"),
+          () => { val (e, r) = two(Seq(Ev(1L, 6000L, 1.0)),
+              Seq(Ev(1L, 1000L, 10.0), Ev(1L, 5000L, 20.0), Ev(1L, 8000L, 30.0),
+                Ev(2L, 1000L, 5.0)))
+            oneCheckpointedBatch(Streaming.asofStream(e, r).toDF(), "append") }),
+        // sid 1 -> register 10, rho 1; sid 2 -> register 59, rho 3
+        ("mrho", "struct<_1:string,_2:bigint> -> struct<value:int>",
+          Set("(g,10) -> (1)", "(g,59) -> (3)"),
+          () => { val m = MemoryStream[Streaming.SketchIn](spark, 1)
+            m.addData(Streaming.SketchIn("g", 1L), Streaming.SketchIn("g", 2L))
+            oneCheckpointedBatch(Streaming.hllRegisterStream(m.toDS()).toDF(), "update") }),
+        // fp 5 -> cells (0,2), (1,4); fp 7 -> cells (0,0), (1,10)
+        ("cell", "struct<_1:int,_2:bigint> -> struct<value:bigint>",
+          Set("(0,2) -> (5)", "(1,4) -> (5)", "(0,0) -> (1)", "(1,10) -> (1)"),
+          () => { val m = MemoryStream[(Long, Long)](spark, 1)
+            m.addData((5L, 3L), (5L, 2L), (7L, 1L))
+            oneCheckpointedBatch(Streaming.cmsCellStream(m.toDS(), 16,
+              Seq(31L, 131L), Seq(7L, 101L)).toDF(), "update") }),
+        ("volstats", "struct<value:string> -> struct<_1:bigint,_2:bigint,_3:bigint>",
+          Set("(click) -> (2,22,244)", "(view) -> (1,5,25)"),
+          () => { val m = MemoryStream[Streaming.DayCount](spark, 1)
+            m.addData(Streaming.DayCount("click", 2L, 12L),
+              Streaming.DayCount("click", 1L, 10L), Streaming.DayCount("view", 1L, 5L))
+            oneCheckpointedBatch(Streaming.anomalyStream(m.toDS()).toDF(), "append") }))
+      for ((name, schema, rows, run) <- cases) {
+        val st = spark.read.format("statestore").option("stateVarName", name).load(run())
+        assert(s"${st.schema("key").dataType.simpleString} -> " +
+          st.schema("value").dataType.simpleString === schema, s"$name state schema")
+        val got = st.collect().map(r => s"${render(r.getAs[Any]("key"))} -> " +
+          render(r.getAs[Any]("value"))).toSet
+        assert(got === rows, s"$name state values")
+      }
+    }
+  }
+
   test("restart durability: zipStream resumes transformWithState state " +
       "from a real checkpointLocation (exactly-once output)") {
     withRocksDb {
@@ -1408,6 +1521,91 @@ class StreamingSpec extends SparkSpec {
       assert(all.toSet === Set((0L, 1.0), (100_000L, 2.0),
         (1_000_000L, 3.0), (1_100_000L, 4.0)),
         s"rate limit must span the outage, got $all")
+    }
+  }
+
+  test("restart durability: concatStream first-emission state survives a " +
+      "checkpointed restart (a disconnected source stays cut)") {
+    withRocksDb {
+      // The kill boundary of source 0 is source 1's first emission,
+      // held only in state: a lost map would let source 0's post-restart
+      // row past the boundary through.
+      val ckpt = java.nio.file.Files
+        .createTempDirectory("graft_cc_ckpt").toString
+      val batches = scala.collection.concurrent.TrieMap
+        .empty[Long, Seq[(Long, Double, Int)]]
+      val a = new Streaming.EventBus(spark) // src 0
+      val b = new Streaming.EventBus(spark) // src 1
+      def startQ() = Streaming.concatStream(Seq(a.eventsTyped, b.eventsTyped))
+        .toDF().writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+          batches(id) = df.collect().toSeq
+            .map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
+        }
+        .outputMode("append").start()
+      // run 1: source 0 emits, then source 1's first emission at 5 ms
+      // disconnects it
+      val q1 = startQ()
+      a.emit(Ev(1L, 1_000L, 1.0))
+      b.emit(Ev(1L, 5_000L, 100.0))
+      q1.processAllAvailable()
+      q1.stop()
+      // while down: source 0 past its kill boundary, source 1 again
+      a.emit(Ev(1L, 6_000L, 2.0))
+      b.emit(Ev(1L, 7_000L, 101.0))
+      val q2 = startQ()
+      q2.processAllAvailable()
+      q2.stop()
+      val all = batches.values.flatten.toList
+      assert(all.size === all.distinct.size,
+        s"duplicated emissions across restart: $all")
+      assert(all.toSet === Set((1_000L, 1.0, 0), (5_000L, 100.0, 1),
+        (7_000L, 101.0, 1)),
+        s"source 0 must stay cut across restart, got $all")
+    }
+  }
+
+  test("restart durability: concatmapStream first-child times and output " +
+      "counter survive a checkpointed restart") {
+    withRocksDb {
+      // Both halves of spawnkill's state: a lost counter restarts
+      // out_seq at 1, and lost first-child times let a late child of an
+      // earlier parent through.
+      val ckpt = java.nio.file.Files
+        .createTempDirectory("graft_ccm_ckpt").toString
+      val batches = scala.collection.concurrent.TrieMap
+        .empty[Long, Seq[(Long, Long, Long)]]
+      val bus = new Streaming.EventBus(spark)
+      // parent v spawns children at its ts and ts + 2 ms, parent seq v
+      val spawn = (e: Ev) => Seq(0L, 1L).map(j =>
+        Streaming.SpawnedEv(e.user_id, e.tsUs + j * 2000L, e.value.toLong, j, s"c$j"))
+      def startQ() = Streaming.concatmapStream(bus.eventsTyped, spawn)
+        .toDF().writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+          batches(id) = df.collect().toSeq
+            .map(r => (r.getLong(1), r.getLong(2), r.getLong(4)))
+        }
+        .outputMode("append").start()
+      // run 1: children 1, 3 ms (parent 0) and 2, 4 ms (parent 1); the
+      // 3 ms child is past parent 1's first child and is cut
+      val q1 = startQ()
+      bus.emit(Ev(1L, 1_000L, 0.0), Ev(1L, 2_000L, 1.0))
+      q1.processAllAvailable()
+      q1.stop()
+      // while down: another child pair of parent 0 (4.5, 6.5 ms — both
+      // past parent 1's first child) and parent 2's children (5, 7 ms)
+      bus.emit(Ev(1L, 4_500L, 0.0), Ev(1L, 5_000L, 2.0))
+      val q2 = startQ()
+      q2.processAllAvailable()
+      q2.stop()
+      val all = batches.values.flatten.toList
+      assert(all.size === all.distinct.size,
+        s"duplicated emissions across restart: $all")
+      assert(all.toSet === Set((1_000L, 0L, 1L), (2_000L, 1L, 2L),
+        (4_000L, 1L, 3L), (5_000L, 2L, 4L), (7_000L, 2L, 5L)),
+        s"kill boundary and out_seq must continue across restart, got $all")
     }
   }
 

@@ -6,10 +6,14 @@
 #             with the `Total number of tests run:` line of `sbt test`)
 #   engine  : code lines of src/main/scala/graft/engine/*.scala — lines
 #             that are neither blank nor `//`, `/*`, `*` or `*/` comments
+#   streaming: code lines of src/main/scala/graft/streaming/*.scala, same rule
 cd "$(dirname "$0")/.." || exit 1
 q=$(grep -oh 'Q("q_[a-z0-9_]*"' src/main/scala/graft/queries/*.scala | sort -u | wc -l)
 t=$(grep -rhoE '^\s+(test|property)\(' src/test/scala --include='*.scala' | wc -l)
-e=$(cat src/main/scala/graft/engine/*.scala | grep -cvE '^[[:space:]]*($|//|/\*|\*)')
+code='^[[:space:]]*($|//|/\*|\*)'
+e=$(cat src/main/scala/graft/engine/*.scala | grep -cvE "$code")
+s=$(cat src/main/scala/graft/streaming/*.scala | grep -cvE "$code")
 echo "queries: $q"
 echo "tests:   $t (registration sites; trust sbt's own total if they differ)"
 echo "engine:  $e code lines (src/main/scala/graft/engine/*.scala)"
+echo "streaming: $s code lines (src/main/scala/graft/streaming/*.scala)"
