@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.obs.QueryProfile
 
 /**
  * Headline benchmark (driver contract): runs representative queries from
@@ -39,36 +40,18 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_FRESH=true: diagnostic mode — a brand-new SparkContext
-    // per query, so each number is free of cross-query session residue
-    // (shuffle files, broadcasts, JIT state). Slower wall-clock; use to
-    // cross-check the resident-session numbers, not to report.
-    val fresh = sys.env.get("SPARK_GRAFT_FRESH").contains("true")
-    // scheduled-job counter: with AQE every exchange materialization is
-    // its own job, so jobs-per-query is the scheduling-overhead signal
-    // next to the shuffle count (the iterative engines' static-plan
-    // rework was a 53 -> 23 jobs change on q_hits)
-    val nJobs = new java.util.concurrent.atomic.AtomicInteger
-    def mkSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-        .config("spark.ui.enabled", "false")
-        // reclaim dead shuffle files / broadcasts even between the
-        // explicit per-query GCs below (ContextCleaner is GC-driven)
-        .config("spark.cleaner.periodicGC.interval", "1min")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          nJobs.incrementAndGet()
-      })
-      s
-    }
-    var spark = mkSession()
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled",
+        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.ui.enabled", "false")
+      // reclaim dead shuffle files / broadcasts even between the
+      // explicit per-query GCs below (ContextCleaner is GC-driven)
+      .config("spark.cleaner.periodicGC.interval", "1min")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
 
     // Warm the JVM + file listing once so the first timed query doesn't
     // absorb session startup.
@@ -82,23 +65,11 @@ object Bench {
     val canaryJobSec = HostCanary.canaryJobSec(spark)
 
     val all = SparkEntry.queries
-    // static shuffle count of the final plan (hash/range/single-partition
-    // exchanges; broadcasts and AQE reuse excluded) — the
-    // shuffle-efficiency signal next to the wall-clock one. Counted on
-    // the SAME DataFrame the timed pass executed, after the timer stops.
-    def shuffleCount(df: org.apache.spark.sql.DataFrame): Int = {
-      val p = df.queryExecution.executedPlan.toString
-      Seq("Exchange hashpartitioning", "Exchange rangepartitioning",
-        "Exchange SinglePartition").map(k => p.sliding(k.length).count(_ == k)).sum
-    }
-    def pass(): Seq[(String, Double, Long, Int, Int)] = headline.filter(all.contains).map { name =>
-      if (fresh) { spark.stop(); spark = mkSession() }
+    def pass(): Seq[(String, Int, QueryProfile.Record)] = headline.filter(all.contains).map { name =>
       // snapshot the persistent-RDD ids BEFORE the query so cleanup can
       // be scoped to what this query created (a blanket unpersist would
       // truncate any future cross-query cached table's lineage)
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val j0 = nJobs.get
-      val t0 = System.nanoTime()
       // a failing query must not silently report -1 and keep the bench
       // green — log it loudly (the correctness harness is the real
       // gate, but a hollow bench number should be visible here too)
@@ -107,14 +78,19 @@ object Bench {
           s"${String.valueOf(e.getMessage).take(200)}")
         null
       }
-      val df = try all(name)(spark, sfDir) catch { case e: Throwable => failing(e) }
-      val n = if (df == null) -1L
-        else try df.count() catch { case e: Throwable => failing(e); -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val jobs = nJobs.get - j0
-      // plan stringification happens AFTER the timer stops
+      var df: DataFrame = null
+      var n = -1L
+      // scheduled jobs and shuffle traffic of build + count: with AQE
+      // every exchange materialization is its own job, so jobs-per-query
+      // is the scheduling-overhead signal next to the shuffle count
+      val prof = QueryProfile.run(spark, name) {
+        df = try all(name)(spark, sfDir) catch { case e: Throwable => failing(e) }
+        if (df != null) n = try df.count() catch { case e: Throwable => failing(e); -1L }
+      }
+      // static shuffle count (hash/range/single-partition exchanges) of
+      // the SAME DataFrame the timed pass built, after the timer stops
       val ex = if (df == null || n < 0) -1
-        else try shuffleCount(df) catch { case _: Throwable => -1 }
+        else try QueryProfile.exchanges(df) catch { case _: Throwable => -1 }
       // free the query's leftover localCheckpoints (returned plans pin
       // them; ContextCleaner only reclaims on driver GC, so 60+ query
       // executions otherwise accumulate dead blocks in executor
@@ -130,7 +106,7 @@ object Bench {
       // late-in-run queries (q_triangles 2.3s isolated vs 4.8s
       // in-bench). Outside the timer; a real cluster runs periodicGC.
       System.gc()
-      (name, sec, n, ex, jobs)
+      (name, ex, prof)
     }
     // One cold pass + three steady passes, reporting the PER-QUERY MIN
     // of the steady passes. Two reasons this is min-of-N rather than
@@ -146,7 +122,7 @@ object Bench {
     val steadyPasses = Seq(pass(), pass(), pass())
     val results = steadyPasses.head.indices.map { i =>
       val samples = steadyPasses.map(_(i))
-      samples.minBy(_._2)
+      samples.minBy(_._3.wallSeconds)
     }
 
     // Reference-comparable throughputs (BASELINE.md): per-event pipeline
@@ -200,17 +176,22 @@ object Bench {
     val canaryJobAtSlide = HostCanary.canaryJobSec(spark)
     val slideJobfloorUnits = (nEvents / slideRate) / (canaryJobAtSlide / 24.0)
 
-    val qs = results.map { case (k, v, _, _, _) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val qsCold = cold.map { case (k, v, _, _, _) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val qsEx = results.map { case (k, _, _, e, _) => s""""$k":$e""" }.mkString("{", ",", "}")
-    val qsJobs = results.map { case (k, _, _, _, j) => s""""$k":$j""" }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val totalCold = cold.map(_._2).sum
+    val qs = results.map { case (k, _, p) => s""""$k":${p.wallSeconds}""" }.mkString("{", ",", "}")
+    val qsCold = cold.map { case (k, _, p) => s""""$k":${p.wallSeconds}""" }.mkString("{", ",", "}")
+    val qsEx = results.map { case (k, e, _) => s""""$k":$e""" }.mkString("{", ",", "}")
+    val qsJobs = results.map { case (k, _, p) => s""""$k":${p.jobs.size}""" }.mkString("{", ",", "}")
+    val qsProf = results.map { case (k, _, p) =>
+      s""""$k":{"tasks":${p.tasks},"shuffle_read_bytes":${p.shuffleReadBytes},""" +
+        s""""shuffle_write_bytes":${p.shuffleWriteBytes},"spill_bytes":${p.spillBytes},""" +
+        s""""peak_execution_memory":${p.peakExecutionMemory},"pinned_bytes":${p.pinnedBytes}}"""
+    }.mkString("{", ",", "}")
+    val total = results.map(_._3.wallSeconds).sum
+    val totalCold = cold.map(_._3.wallSeconds).sum
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
         s""""protocol":"per-query min of 3 steady passes after 1 cold pass; rates best-of-3 on warm plans (r7+; earlier rounds reported the single second pass)",""" +
         s""""value_cold":$totalCold,"queries_cold":$qsCold,"shuffles":$qsEx,""" +
-        s""""jobs":$qsJobs,""" +
+        s""""jobs":$qsJobs,"profiles":$qsProf,""" +
         s""""canary_sec":$canarySec,"canary_job_sec":$canaryJobSec,""" +
         s""""canary_protocol":"frozen code-independent workload (HostCanary: 64M xxhash64 fold + 64k-key groupBy + lineitem scan-agg), min-of-3, same session; divide query seconds by canary_sec before comparing across rounds",""" +
         s""""n_queries":${results.size},"events_rows":$nEvents,""" +

@@ -61,10 +61,6 @@ final case class EventStream(
   def pipe(fs: (EventStream => EventStream)*): EventStream =
     fs.foldLeft(this)((s, f) => f(s))
 
-  /** Ordinal of each row within its key, starting at 1. */
-  def withRowNumber(as: String): EventStream =
-    derive(df.withColumn(as, row_number().over(w)))
-
   // ===================== §2.2 selection — ops/select.py =====================
 
   /** Filter (`ops/select.py:5-14`). */

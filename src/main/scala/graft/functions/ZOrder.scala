@@ -35,16 +35,11 @@ object ZOrder {
   }
 
   /** Morton-interleave two long columns (low 21 bits each): bit i of x
-    * lands at position 3i, of y at 3i+1 (lane 3i+2 unused — the 2-D
-    * and 3-D forms share one 3-lane spread; locality is unaffected).
+    * lands at position 3i, of y at 3i+1 (lane 3i+2 unused — the spread
+    * is 3-lane; locality is unaffected).
     * Occupies ≤62 bits — always positive. */
   def morton2(x: Column, y: Column): Column =
     spread(x).bitwiseOR(shiftleft(spread(y), 1))
-
-  /** Morton-interleave three long columns (low 21 bits each). */
-  def morton3(x: Column, y: Column, z: Column): Column =
-    spread(x).bitwiseOR(shiftleft(spread(y), 1))
-      .bitwiseOR(shiftleft(spread(z), 2))
 
   /** The identical spread as SQL text (DuckDB/ANSI bit ops), for
     * oracle parity: `sqlSpread("x")` mirrors `spread(col("x"))`. */

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ml.Similarity
+import graft.obs.QueryProfile
 import graft.multimodal.Multimodal
 import graft.text.{Sketches, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -2411,12 +2412,11 @@ object NorthStarQueries {
           fs.map(f => scala.concurrent.Await.result(f,
             scala.concurrent.duration.Duration.Inf))
         // per-chain job labels (guide §1.5): descriptions are
-        // thread-local, each future body runs whole on one pool thread,
-        // and the pool dies with the query — labels cannot leak to the
-        // caller's thread. Zero-cost observability for the probes.
-        def labeled[T](name: String)(body: => T): T = {
-          s.sparkContext.setJobDescription(name); body
-        }
+        // thread-local and each future body runs whole on one pool
+        // thread; the scoped label is restored when the body returns,
+        // so a later chain on the same pool thread never inherits it
+        def labeled[T](name: String)(body: => T): T =
+          QueryProfile.withJobLabel(name)(body)
         val exactF = scala.concurrent.Future(labeled("tuning:exact")(ckptFresh(
           Similarity.topK(e, "vec_id", "embedding", 3,
               Similarity.probeModFor(nCorpus, PROBE_TGT))
@@ -2508,14 +2508,14 @@ object NorthStarQueries {
         // the join a broadcast hash join under the static scope, where
         // stat-less checkpoint inputs would otherwise sort-merge
         def cfgRow(method: String, p1: Int, p2: Int, ex: DataFrame,
-            approx: DataFrame, cands: DataFrame): DataFrame = {
-          s.sparkContext.setJobDescription(s"tuning:row:$method:$p1:$p2")
-          val hits = approx.join(broadcast(ex), Seq("a", "b"), "left_semi")
-            .agg(count(lit(1)).as("n_hits"))
-          ckptFresh(hits.crossJoin(broadcast(cands)).select(
-            lit(method).as("method"), lit(p1.toLong).as("param"),
-            lit(p2.toLong).as("probes"), col("n_hits"), col("n_cands")))
-        }
+            approx: DataFrame, cands: DataFrame): DataFrame =
+          QueryProfile.withJobLabel(s"tuning:row:$method:$p1:$p2") {
+            val hits = approx.join(broadcast(ex), Seq("a", "b"), "left_semi")
+              .agg(count(lit(1)).as("n_hits"))
+            ckptFresh(hits.crossJoin(broadcast(cands)).select(
+              lit(method).as("method"), lit(p1.toLong).as("param"),
+              lit(p2.toLong).as("probes"), col("n_hits"), col("n_cands")))
+          }
         def rankLe(ranked: DataFrame, p: Int): DataFrame =
           ranked.filter(col("rank") <= p).drop("rank")
         def lshCandsOf(bkT: DataFrame): DataFrame =

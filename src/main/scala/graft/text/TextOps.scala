@@ -85,14 +85,6 @@ object TextOps {
   def aCoef(j: Int): Long = 2L * j + 3
   def bCoef(j: Int): Long = 7919L * j + 13
 
-  /** (doc_id, shingle) edges, distinct. */
-  def shingleEdges(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
-    docs.select(col(idCol), explode(shingles(tokens(col(textCol)), k)).as("shingle"))
-      .distinct()
-
-  /** Deterministic shingle id: the polynomial rolling hash. */
-  def shingleId(shingle: Column): Column = fingerprint(shingle)
-
   /** Per-token fingerprints — each token hashed once, then shingle ids
     * combine k token hashes with ~k integer ops instead of re-folding
     * every character of every (overlapping) shingle. */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine._
+import graft.obs.QueryProfile
 
 /** Exact checkpoint-id attribution and scope isolation — the storage
   * hygiene underneath every iterative graph engine. */
@@ -88,21 +89,9 @@ class CheckpointScopeSpec extends SparkSpec {
       ("ConnectedComponents.runStar", 35, () => ConnectedComponents.runStar(edges)))
   }
 
-  /** Scheduler jobs `body` ran, counted through a job group. Listener
-    * events arrive in order, so once a later fence job is visible every
-    * job of the group is too. */
-  private def jobsOf(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try body finally sc.clearJobGroup()
-    val fence = s"$group-fence"
-    sc.setJobGroup(fence, fence)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(20)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
+  /** Scheduler jobs `body` ran, counted by the fenced [[QueryProfile]]. */
+  private def jobsOf(group: String)(body: => Unit): Int =
+    QueryProfile.run(spark, group)(body).jobs.size
 
   test("Checkpoints.release: two sequential engine runs leave zero pinned RDDs") {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ml.Similarity
 import graft.multimodal.Multimodal
+import graft.obs.QueryProfile
 import graft.text.TextOps
 
 /** Text-analysis, dedup, similarity and multimodal plumbing tests. */
@@ -737,14 +738,8 @@ class TextSimilaritySpec extends SparkSpec {
     assert(leaves.length == 1,
       s"append plan has ${leaves.length} leaves (want the batch scan only):\n$leaves")
     // and it runs as a handful of scheduler jobs (Lloyd rounds would
-    // add a jobs-per-round tail)
-    spark.sparkContext.setJobGroup("ivf-append-probe", "day-N append")
-    try dayN.collect() finally spark.sparkContext.clearJobGroup()
-    val deadline = System.nanoTime() + 5e9.toLong
-    def probeJobs() = spark.sparkContext.statusTracker
-      .getJobIdsForGroup("ivf-append-probe").length
-    while (probeJobs() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
-    val nJobs = probeJobs()
+    // add a jobs-per-round tail), every one of them counted (fenced)
+    val nJobs = QueryProfile.run(spark, "day-N append")(dayN.collect()).jobs.size
     assert(nJobs >= 1 && nJobs <= 6,
       s"day-N append ran $nJobs jobs — training leaked into the append path?")
   }

@@ -1,5 +1,4 @@
 package graft.probe
-import org.apache.spark.sql.SparkSession
 
 /** Canary-BRACKETED steady-state read of registry queries: canary →
   * passes × count() per query → canary, one JVM, so the bar is
@@ -11,17 +10,12 @@ object BracketProbe {
     require(args.nonEmpty, "usage: BracketProbe <q1,q2,...> [passes]")
     val names = args(0).split(",").toSeq
     val passes = if (args.length > 1) args(1).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = DevSession.sfDir
     // SPARK_GRAFT_PARTS: width override for big-fixture rungs — a real
     // cluster scales width with data (partitions track executors), so
     // an sf10-on-one-box bracket at fixed 32 measures the spill cliff,
     // not the plan; raising width restores constant per-partition volume
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "32")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession(sys.env.getOrElse("SPARK_GRAFT_PARTS", "32"))
     val cPre = graft.HostCanary.canarySec(spark, sfDir)
     val cjPre = graft.HostCanary.canaryJobSec(spark)
     println(f"canary_pre $cPre%.3f canary_job_pre $cjPre%.3f")

@@ -1,5 +1,4 @@
 package graft.probe
-import org.apache.spark.sql.SparkSession
 
 /** Standalone HostCanary runner — brackets measurements of OLD-commit
   * builds (which predate HostCanary) so a same-day A/B can be read
@@ -7,12 +6,8 @@ import org.apache.spark.sql.SparkSession
   * and divide by the mean of the two anchors. */
 object CanaryMain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    println(f"canary_sec ${graft.HostCanary.canarySec(spark, sfDir)}%.3f")
+    val spark = DevSession()
+    println(f"canary_sec ${graft.HostCanary.canarySec(spark, DevSession.sfDir)}%.3f")
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Registry-wide timing scan: min-of-2 count() per query at sf0.1,
   * sorted slowest-first — finds slow queries the headline bench does
@@ -19,16 +18,12 @@ import org.apache.spark.sql.SparkSession
   * queries they read. */
 object RegScan {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = probe.DevSession.sfDir
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSet) else None
     val passes: Int = if (args.length > 1) args(1).toInt else 2
     val canaryEvery: Int = if (args.length > 2) args(2).toInt else 40
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = probe.DevSession()
     // same-session host anchor (frozen workload, HostCanary) — read
     // query seconds as sec/canary_sec across rounds, never raw
     val canaries = scala.collection.mutable.ArrayBuffer[(Int, Double)]()

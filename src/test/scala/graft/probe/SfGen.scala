@@ -1,15 +1,15 @@
 package graft.probe
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf1-scale fixture generator (r10 verdict #5): writes a
   * 10× (arg-selectable) scale-up of the sf0.1 fixtures to
   * /tmp/sf{S}/<table>.parquet so the registry tail can run against a
   * REAL persisted fixture family instead of in-memory perturbation
-  * unions. Recipes are the committed stress-probe perturbations:
-  *  - embeddings: per-copy deterministic component jitter (EmbStress) —
+  * unions. Recipes:
+  *  - embeddings: per-copy deterministic component jitter —
   *    copies are near the base geometry but not identical, ids shifted;
-  *  - documents: per-copy word-prefix tag (TextStress) — trigram
+  *  - documents: per-copy word-prefix tag — trigram
   *    structure inside a copy mirrors the base, copies share nothing;
   *    n_chars recomputed over the perturbed text;
   *  - orders/lineitem: disjoint key-shifted copies (order/cust/supp/part
@@ -23,11 +23,7 @@ object SfGen {
     val s = if (args.nonEmpty) args(0).toInt else 10
     val outDir = if (args.length > 1) args(1) else s"/tmp/sf1"
     val srcDir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
 
     def copies(base: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until s).map(k => if (k == 0) base else f(base, k))
