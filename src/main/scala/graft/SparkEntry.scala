@@ -12,7 +12,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     EventQueries.flagship(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2.
+    *
+    * Results are unordered sets. Emission order is data: it lives in
+    * the `seq`, key and `out_seq` columns, so a caller who wants rows
+    * in order sorts on them at the sink. Only a top-n query sorts, under
+    * its limit. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     EventQueries.queries ++ graft.queries.CombineQueries.queries ++
       graft.queries.NorthStarQueries.queries ++ graft.queries.RelationalQueries.queries

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.obs.QueryProfile
 
 /**
  * The one superstep driver behind every graph engine ([[PageRank]],
@@ -11,7 +12,8 @@ import org.apache.spark.sql.functions._
  *
  * [[run]] owns the setup: a [[CheckpointScope]], the lazy pin of the
  * engine's canonical edge table, the one sizing `count()` that
- * materializes it (under the caller's adaptive planning), the
+ * materializes it (under the caller's adaptive planning; its jobs are
+ * labelled `graph:size`), the
  * serialized-checkpoint size gate and the static round scope
  * ([[StaticPlan.scoped]]: pinned layouts keep their partitioning, each
  * checkpoint is one job). All of it runs inside `scope.guarded`, so a
@@ -20,8 +22,8 @@ import org.apache.spark.sql.functions._
  * plan's is freed.
  *
  * [[iterate]] owns the round loop: round FUSION (lazy checkpoints
- * materialize inside the next eager round's job) and the deferred
- * freeing of dead generations.
+ * materialize inside the next eager round's job, labelled
+ * `graph:round r/R`) and the deferred freeing of dead generations.
  */
 private[graft] object GraphRounds {
 
@@ -44,7 +46,7 @@ private[graft] object GraphRounds {
       // LAZY + count: the sizing count() is the job that materializes
       // the pin — no separate persist job
       val canon = scope.ckptLazy(setup(scope))
-      val n = canon.count()
+      val n = QueryProfile.withJobLabel("graph:size")(canon.count())
       // big-rung heap survival: round generations past the threshold
       // pin serialized blocks (see StaticPlan.SER_CKPT_ROWS)
       scope.serialized = n > StaticPlan.SER_CKPT_ROWS
@@ -90,7 +92,7 @@ private[graft] object GraphRounds {
         state = scope.ckptLazy(next)
         deferred = pins ::: deferred
       } else {
-        state = scope.ckpt(next)
+        state = QueryProfile.withJobLabel(s"graph:round $r/$rounds")(scope.ckpt(next))
         scope.free(pins ::: deferred)
         deferred = Nil
       }

@@ -304,16 +304,6 @@ object Similarity {
     if (trainMod == 1) df else df.filter(col(idCol) % trainMod === 0)
   }
 
-  /** Alias for [[graft.engine.StaticPlan.ckptFreshLazy]] — LAZY
-    * localCheckpoint with fresh exposed attribute ids (see there for
-    * the static-scope "conflicting references" rationale). Lazy since
-    * round 11: the pinned member/residual tables materialize inside
-    * the first consumer's job (computed once, shared by both join
-    * sides via the persisted blocks) instead of scheduling their own
-    * blocking construction jobs — the per-job floor deletion. */
-  private def ckptFresh(df: DataFrame): DataFrame =
-    graft.engine.StaticPlan.ckptFreshLazy(df)
-
 
   /** Integer quantization of an embedding: floor(x · QUANT) per
     * component. Both engines compute the identical float→double→
@@ -1315,8 +1305,10 @@ object Similarity {
     // the slim member table (id, cell, isHome, vn, m codes — no float
     // vector) is CHECKPOINTED before the pair join: both join sides of
     // inCellStructPairs read the materialized rows instead of each
-    // replaying the assignment + code-pivot tail (two shuffles apiece)
-    val assign = ckptFresh(
+    // replaying the assignment + code-pivot tail (two shuffles apiece).
+    // Lazily: it materializes inside the first consumer's job instead
+    // of scheduling a blocking construction job of its own.
+    val assign = graft.engine.StaticPlan.ckptFreshLazy(
       ivfAssignFromCentroids(emb, idCol, vecCol, coarse, nProbe)
         .select(col(idCol), col("cell"), col("isHome"))
         .join(withVn, idCol))
@@ -1448,7 +1440,7 @@ object Similarity {
     val resid = embQ.join(home, idCol)
       .select(col(idCol), col("cell").as("hc"),
         zip_with(col("qq"), element_at(muLit, col("cell")), (x, y) => x - y).as("rq"))
-      .transform(ckptFresh)
+      .transform(graft.engine.StaticPlan.ckptFreshLazy)
 
     // all m residual codebooks trained jointly (distributed, sampled),
     // then the constant-size index collected; ALL three ADC table
@@ -1504,7 +1496,8 @@ object Similarity {
         (0 until m).map(mi => col(s"c$mi")): _*)
     // slim member table checkpointed before the pair join (see the
     // raw-PQ site): the residual code-pivot tail materializes once
-    val pairs = inCellStructPairs(ckptFresh(assign.join(coded, idCol)),
+    val pairs = inCellStructPairs(
+      graft.engine.StaticPlan.ckptFreshLazy(assign.join(coded, idCol)),
       member, idCol, cellCap)
     // x̂a·x̂b = μμ + Σ_m (μ·cw + μ·cw + cw·cw) — 3m+1 literal lookups
     // in the same left-assoc order as before, pure codegen projection

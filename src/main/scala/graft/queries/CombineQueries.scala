@@ -37,14 +37,14 @@ object CombineQueries {
     Q("q_merge",
       (s, d) => EventStream
         .merge(Seq(sub(s, d, "click"), sub(s, d, "purchase")), "src", "out_seq")
-        .df.select("seq", "user_id", "cents", "src", "out_seq").orderBy("seq"),
+        .df.select("seq", "user_id", "cents", "src", "out_seq"),
       s"$U SELECT seq, user_id, cents, src, " +
         s"row_number() OVER ($WT) AS out_seq FROM u ORDER BY seq"),
 
     Q("q_chain",
       (s, d) => EventStream
         .chain(Seq(sub(s, d, "click"), sub(s, d, "purchase")), "src", "out_seq")
-        .df.select("seq", "user_id", "cents", "src", "out_seq").orderBy("seq"),
+        .df.select("seq", "user_id", "cents", "src", "out_seq"),
       s"$U SELECT seq, user_id, cents, src, " +
         "row_number() OVER (PARTITION BY user_id ORDER BY src, seq) AS out_seq " +
         "FROM u ORDER BY seq"),
@@ -54,7 +54,7 @@ object CombineQueries {
       // (reference Concat kills earlier sources on later-source emit).
       (s, d) => EventStream
         .concat(Seq(sub(s, d, "click"), sub(s, d, "purchase")), "src", "out_seq")
-        .df.select("seq", "user_id", "cents", "src", "out_seq").orderBy("seq"),
+        .df.select("seq", "user_id", "cents", "src", "out_seq"),
       s"$U, firsts AS (SELECT user_id, min(CASE WHEN src=1 THEN ts END) AS f1 " +
         "FROM u GROUP BY user_id) " +
         s"SELECT seq, user_id, cents, src, row_number() OVER ($WT) AS out_seq " +
@@ -66,7 +66,7 @@ object CombineQueries {
       // other source first emits, which steals activity permanently.
       (s, d) => EventStream
         .switch(Seq(sub(s, d, "click"), sub(s, d, "purchase")), "src", "out_seq")
-        .df.select("seq", "user_id", "cents", "src", "out_seq").orderBy("seq"),
+        .df.select("seq", "user_id", "cents", "src", "out_seq"),
       s"$U, firsts AS (SELECT user_id, " +
         "min(CASE WHEN src=0 THEN ts END) AS f0, min(CASE WHEN src=1 THEN ts END) AS f1 " +
         "FROM u GROUP BY user_id), " +
@@ -79,8 +79,7 @@ object CombineQueries {
     Q("q_zip",
       (s, d) => EventStream.zip(sub(s, d, "click"), sub(s, d, "purchase"), "i")
         .df.select(col("user_id"), col("i"), col("cents").as("c_cents"),
-          col("cents_r").as("p_cents"))
-        .orderBy("user_id", "i"),
+          col("cents_r").as("p_cents")),
       s"$EV SELECT a.user_id, a.i, a.cents AS c_cents, b.cents AS p_cents FROM " +
         "(SELECT user_id, cents, row_number() OVER (PARTITION BY user_id ORDER BY seq) AS i " +
         "FROM ev WHERE event_type='click') a JOIN " +
@@ -94,7 +93,7 @@ object CombineQueries {
           Seq(sub(s, d, "click"), sub(s, d, "purchase")),
           valueCol = "cents", outCols = Seq("c_latest", "p_latest"),
           partial = true, srcAs = "src")
-        .df.select("seq", "user_id", "src", "c_latest", "p_latest").orderBy("seq"),
+        .df.select("seq", "user_id", "src", "c_latest", "p_latest"),
       s"$U SELECT seq, user_id, src, " +
         s"last_value(CASE WHEN src=0 THEN cents END IGNORE NULLS) OVER ($WT ROWS UNBOUNDED PRECEDING) AS c_latest, " +
         s"last_value(CASE WHEN src=1 THEN cents END IGNORE NULLS) OVER ($WT ROWS UNBOUNDED PRECEDING) AS p_latest " +
@@ -106,7 +105,7 @@ object CombineQueries {
           Seq(sub(s, d, "click"), sub(s, d, "purchase")),
           valueCol = "cents", outCols = Seq("c_latest", "p_latest"),
           partial = false, srcAs = "src")
-        .df.select("seq", "user_id", "src", "c_latest", "p_latest").orderBy("seq"),
+        .df.select("seq", "user_id", "src", "c_latest", "p_latest"),
       s"$U SELECT * FROM (SELECT seq, user_id, src, " +
         s"last_value(CASE WHEN src=0 THEN cents END IGNORE NULLS) OVER ($WT ROWS UNBOUNDED PRECEDING) AS c_latest, " +
         s"last_value(CASE WHEN src=1 THEN cents END IGNORE NULLS) OVER ($WT ROWS UNBOUNDED PRECEDING) AS p_latest " +
@@ -115,8 +114,7 @@ object CombineQueries {
     // ---------------- §2.7 timing ----------------
     Q("q_delay",
       (s, d) => ev(s, d).delay("90 SECONDS")
-        .df.select(col("seq"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-        .orderBy("seq"),
+        .df.select(col("seq"), col("user_id"), unix_micros(col("ts")).as("ts_us")),
       s"$EV SELECT seq, user_id, epoch_us(ts + INTERVAL 90 SECOND) AS ts_us " +
         "FROM ev ORDER BY seq"),
 
@@ -124,15 +122,14 @@ object CombineQueries {
       // Last event of each burst (gap >= 30 min), re-stamped at +gap.
       (s, d) => ev(s, d).debounce(1800.0, onFirst = false)
         .df.select(col("seq"), col("user_id"), col("cents"),
-          unix_micros(col("ts")).as("emit_us"))
-        .orderBy("seq"),
+          unix_micros(col("ts")).as("emit_us")),
       s"$EV SELECT seq, user_id, cents, epoch_us(ts) + 1800000000 AS emit_us FROM " +
         "(SELECT *, lead(ts) OVER (PARTITION BY user_id ORDER BY ts, seq) AS nxt FROM ev) " +
         "WHERE nxt IS NULL OR epoch_us(nxt) - epoch_us(ts) >= 1800000000 ORDER BY seq"),
 
     Q("q_debounce_first",
       (s, d) => ev(s, d).debounce(1800.0, onFirst = true)
-        .df.select("seq", "user_id", "cents").orderBy("seq"),
+        .df.select("seq", "user_id", "cents"),
       s"$EV SELECT seq, user_id, cents FROM " +
         "(SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, seq) AS prv FROM ev) " +
         "WHERE prv IS NULL OR epoch_us(ts) - epoch_us(prv) >= 1800000000 ORDER BY seq"),
@@ -140,7 +137,7 @@ object CombineQueries {
     Q("q_timeout",
       // Pass rows until the first silent gap > 6 h per user.
       (s, d) => ev(s, d).timeout(21600.0)
-        .df.select("seq", "user_id", "cents").orderBy("seq"),
+        .df.select("seq", "user_id", "cents"),
       s"$EV SELECT seq, user_id, cents FROM (SELECT *, CASE WHEN " +
         "epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, seq)) " +
         "> 21600000000 THEN 1 ELSE 0 END AS brk FROM ev) " +
@@ -150,8 +147,7 @@ object CombineQueries {
     Q("q_throttle",
       // Rate-limit to 1 emit per hour: admitted-time rewrite.
       (s, d) => ev(s, d).throttle(1, 3600.0)
-        .df.select(col("seq"), col("user_id"), unix_micros(col("ts")).as("admit_us"))
-        .orderBy("seq"),
+        .df.select(col("seq"), col("user_id"), unix_micros(col("ts")).as("admit_us")),
       s"$EV SELECT seq, user_id, list_reduce(" +
         "list(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, seq ROWS UNBOUNDED PRECEDING), " +
         "(a, x) -> greatest(x, a + 3600000000)) AS admit_us FROM ev ORDER BY seq"),
@@ -162,8 +158,7 @@ object CombineQueries {
       // queue drains. Episodes = merged [arrival, admit) intervals of
       // delayed rows.
       (s, d) => ev(s, d).throttleStatus(1, 3600.0)
-        .df.select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("active"))
-        .orderBy("user_id", "ts_us"),
+        .df.select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("active")),
       s"$EV, adm AS (SELECT seq, user_id, epoch_us(ts) AS t, list_reduce(" +
         "list(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, seq ROWS UNBOUNDED PRECEDING), " +
         "(a, x) -> greatest(x, a + 3600000000)) AS a FROM ev), " +
@@ -192,7 +187,6 @@ object CombineQueries {
             lit(2).as("maximum"), lit(1800.0).as("interval_sec"))
         base.throttleDynamic(lims, defaultMax = 1, defaultIntervalSec = 3600.0)
           .df.select(col("seq"), col("user_id"), unix_micros(col("ts")).as("admit_us"))
-          .orderBy("seq")
       }, {
         // acc = [t, m, iv] of the last row ++ pruned admit times; the
         // fold's init is the first row's triple (its admit = its t).
@@ -233,7 +227,6 @@ object CombineQueries {
         val timer = EventStream(ticks, keys = Seq("user_id"))
         base.sample(timer, Seq("cents"))
           .df.select(col("user_id"), unix_micros(col("ts")).as("tick_us"), col("cents"))
-          .orderBy("user_id", "tick_us")
       },
       s"$EV, mm AS (SELECT date_trunc('day', min(ts)) AS t0, max(ts) AS t1 FROM ev), " +
         "ticks AS (SELECT u.user_id, g.tick FROM (SELECT DISTINCT user_id FROM ev) u " +
@@ -252,7 +245,6 @@ object CombineQueries {
         st.emapMerge(children, "cts")
           .df.select(col("seq"), col("user_id"), col("__child.j").cast("long").as("j"),
             col("__child.cval").as("cval"), col("__outseq").as("out_seq"))
-          .orderBy("seq", "j")
       },
       s"$EV, ch AS (SELECT seq, user_id, ts + j.j * INTERVAL 7 MINUTE AS cts, j.j AS j, " +
         "cents + j.j AS cval FROM ev CROSS JOIN (SELECT unnest(range(3)) AS j) j) " +
@@ -268,7 +260,6 @@ object CombineQueries {
         st.emapChain(children, "j")
           .df.select(col("seq"), col("user_id"), col("__child.j").cast("long").as("j"),
             col("__child.cval").as("cval"), col("__outseq").as("out_seq"))
-          .orderBy("seq", "j")
       },
       s"$EV, ch AS (SELECT seq, user_id, j.j AS j, cents + j.j AS cval " +
         "FROM ev CROSS JOIN (SELECT unnest(range(3)) AS j) j) " +
@@ -287,7 +278,6 @@ object CombineQueries {
         st.emapConcat(children, "cts")
           .df.select(col("seq"), col("user_id"), col("__child.j").cast("long").as("j"),
             col("__child.cval").as("cval"), col("__outseq").as("out_seq"))
-          .orderBy("seq", "j")
       },
       s"$EV, par AS (SELECT *, min(ts + (seq % 2) * INTERVAL 7 MINUTE) OVER " +
         "(PARTITION BY user_id ORDER BY seq ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS kill FROM ev), " +
@@ -307,7 +297,6 @@ object CombineQueries {
         st.emapSwitch(children, "cts")
           .df.select(col("seq"), col("user_id"), col("__child.j").cast("long").as("j"),
             col("__child.cval").as("cval"), col("__outseq").as("out_seq"))
-          .orderBy("seq", "j")
       },
       s"$EV, par AS (SELECT *, lead(ts) OVER (PARTITION BY user_id ORDER BY seq) AS nxt FROM ev), " +
         "ch AS (SELECT seq, user_id, ts + j.j * INTERVAL 7 MINUTE AS cts, j.j AS j, " +
@@ -320,27 +309,26 @@ object CombineQueries {
     Q("q_errors",
       // Dead-letter encoding: the error side-channel as a stream.
       (s, d) => ev(s, d).where(col("event_type") === "error")
-        .df.select("seq", "user_id", "cents").orderBy("seq"),
+        .df.select("seq", "user_id", "cents"),
       s"$EV SELECT seq, user_id, cents FROM ev WHERE event_type='error' ORDER BY seq"),
 
     Q("q_endonerror",
       (s, d) => ev(s, d).takeWhile(col("event_type") =!= "error")
-        .df.select("seq", "user_id", "cents").orderBy("seq"),
+        .df.select("seq", "user_id", "cents"),
       s"$EV SELECT seq, user_id, cents FROM ev QUALIFY " +
         "count(CASE WHEN event_type='error' THEN 1 END) OVER " +
         "(PARTITION BY user_id ORDER BY seq ROWS UNBOUNDED PRECEDING) = 0 ORDER BY seq"),
 
     // ---------------- §2.1 creation ----------------
     Q("q_range",
-      (s, _) => Sources.range(s, 0, 5000, 3).orderBy("id"),
+      (s, _) => Sources.range(s, 0, 5000, 3),
       "SELECT range AS id FROM range(0, 5000, 3) ORDER BY id"),
 
     Q("q_sequence",
       // Sequence (`ops/create.py:60-76`): THE workhorse source — explicit
       // values paced by an interval from the epoch.
       (s, _) => Sources.fromLongs(s, (0 until 1000).map(i => i * 7L), 0.25)
-        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value"))
-        .orderBy("seq"),
+        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value")),
       "SELECT range AS seq, 1704067200000000 + range * 250000 AS ts_us, " +
         "range * 7 AS value FROM range(1000) ORDER BY seq"),
 
@@ -351,8 +339,7 @@ object CombineQueries {
           org.apache.spark.sql.Encoders.tuple(
             org.apache.spark.sql.Encoders.scalaLong,
             org.apache.spark.sql.Encoders.STRING))
-        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value"))
-        .orderBy("seq"),
+        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value")),
       "SELECT range AS seq, 1704067200000000 + range * 1000000 AS ts_us, " +
         "'v' || CAST(range AS VARCHAR) AS value FROM range(500) ORDER BY seq"),
 
@@ -361,8 +348,7 @@ object CombineQueries {
       // (i starts at 1), value i*interval. 0.5 is exactly representable,
       // so i*0.5 is exact in both engines.
       (s, _) => Sources.timer(s, 0.5, 1000)
-        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value"))
-        .orderBy("seq"),
+        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value")),
       "SELECT range AS seq, 1704067200000000 + (range + 1) * 500000 AS ts_us, " +
         "CAST(range + 1 AS DOUBLE) * 0.5e0 AS value FROM range(1000) ORDER BY seq"),
 
@@ -374,21 +360,19 @@ object CombineQueries {
 
     Q("q_timerange",
       (s, _) => Sources.timerange(s, "2024-01-01 00:00:00", "2024-03-01 00:00:00", "6 HOUR")
-        .select(unix_micros(col("ts")).as("ts_us")).orderBy("ts_us"),
+        .select(unix_micros(col("ts")).as("ts_us")),
       "SELECT epoch_us(unnest(generate_series(TIMESTAMP '2024-01-01 00:00:00', " +
         "TIMESTAMP '2024-03-01 00:00:00', INTERVAL 6 HOUR))) AS ts_us ORDER BY ts_us"),
 
     Q("q_repeat",
       (s, _) => Sources.repeat(s, "x", 1000, 0.5)
-        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value"))
-        .orderBy("seq"),
+        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value")),
       "SELECT range AS seq, 1704067200000000 + range * 500000 AS ts_us, 'x' AS value " +
         "FROM range(1000) ORDER BY seq"),
 
     Q("q_marble",
       (s, _) => Sources.marble(s, "a-b--cd---e-f--|-g")
-        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value"))
-        .orderBy("seq"),
+        .select(col("seq"), unix_micros(col("ts")).as("ts_us"), col("value")),
       "WITH m AS (SELECT 'a-b--cd---e-f--|-g' AS s), " +
         "chars AS (SELECT unnest(string_split(s, '')) AS c, " +
         "generate_subscripts(string_split(s, ''), 1) AS i, strpos(s, '|') AS stop FROM m) " +

@@ -644,7 +644,7 @@ object NorthStarQueries {
         col("doc_id"),
         size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
         size(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).cast("long").as("n_re"),
-        length(col("text")).cast("long").as("n_chars2")).orderBy("doc_id"),
+        length(col("text")).cast("long").as("n_chars2")),
       s"WITH $DOC_TOKS SELECT doc_id, len(toks) AS n_tokens, " +
         "len(regexp_extract_all(text, '[a-z0-9]+')) AS n_re, " +
         "length(text) AS n_chars2 FROM tok JOIN documents USING (doc_id) ORDER BY doc_id"),
@@ -657,7 +657,6 @@ object NorthStarQueries {
           TextOps.langGuess(
             TextOps.stopwordHits(t, "en"), TextOps.stopwordHits(t, "es"),
             TextOps.stopwordHits(t, "de"), TextOps.stopwordHits(t, "fr")).as("guess"))
-          .orderBy("doc_id")
       }, {
         def hits(l: String) = "len(list_filter(toks, x -> x IN (" +
           TextOps.stopwords(l).map(w => s"'$w'").mkString(",") + ")))"
@@ -681,7 +680,7 @@ object NorthStarQueries {
           col("doc_id"), n.as("n_tokens"), sw.as("n_stop"),
           (least(n.cast("double") / 100.0, lit(1.0)) *
             (lit(1.0) - sw.cast("double") / greatest(n, lit(1L)).cast("double")))
-            .as("quality")).orderBy("doc_id")
+            .as("quality"))
       }, {
         val hits = "len(list_filter(toks, x -> x IN (" +
           TextOps.stopwords("en").map(w => s"'$w'").mkString(",") + ")))"
@@ -710,7 +709,6 @@ object NorthStarQueries {
           .withColumn("top_bigram_frac", topFrac)
           .withColumn("keep",
             col("top_bigram_frac") <= 0.08 && col("dup_token_frac") <= 0.7)
-          .orderBy("doc_id")
       },
       s"WITH $DOC_TOKS, $TOKFPS, $REP_CTES " +
         "SELECT *, (top_bigram_frac <= CAST(0.08 AS DOUBLE) AND " +
@@ -729,7 +727,7 @@ object NorthStarQueries {
         val dropIds = labels.filter(col("node") =!= col("comp"))
           .select(col("node").as("doc_id"))
         docs(s, d).join(broadcast(dropIds), Seq("doc_id"), "left_anti")
-          .select("doc_id", "n_chars").orderBy("doc_id")
+          .select("doc_id", "n_chars")
       },
       s"WITH RECURSIVE $MINHASH_CANDS, " +
         "e2 AS (SELECT a AS src, b AS dst FROM cand " +
@@ -767,7 +765,6 @@ object NorthStarQueries {
         scored.withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= 3)
           .select("doc_id", "rank", "term", "score")
-          .orderBy("doc_id", "rank")
       },
       s"WITH $DOC_TOKS, t AS (SELECT doc_id, unnest(toks) AS term FROM tok), " +
         "tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY doc_id, term), " +
@@ -829,7 +826,6 @@ object NorthStarQueries {
             count(lit(1)).as("n_docs"),
             max(when(col("rn") === expr("(cnt + 1) div 2"), col("n_tokens"))).as("median_tokens"),
             max(when(col("rn") === expr("(cnt * 9 + 9) div 10"), col("n_tokens"))).as("p90_tokens"))
-          .orderBy("lang")
       },
       s"WITH $DOC_TOKS, " +
         "base AS (SELECT t.doc_id, d.lang, len(t.toks) AS n_tokens " +
@@ -849,8 +845,7 @@ object NorthStarQueries {
       // tokenize+slice+explode pass; chunk count ⌈(n-overlap)/stride⌉.
       (s, d) => TextOps.chunkDocs(docs(s, d), "doc_id", "text", 40, 30)
         .withColumn("n_chunk_tokens",
-          size(split(col("chunk_text"), " ")).cast("long"))
-        .orderBy("doc_id", "chunk_idx"),
+          size(split(col("chunk_text"), " ")).cast("long")),
       s"WITH $DOC_TOKS SELECT doc_id, chunk_idx, " +
         "array_to_string(toks[CAST(chunk_idx * 30 + 1 AS INT):CAST(chunk_idx * 30 + 40 AS INT)], ' ') AS chunk_text, " +
         "len(string_split(array_to_string(toks[CAST(chunk_idx * 30 + 1 AS INT):CAST(chunk_idx * 30 + 40 AS INT)], ' '), ' ')) AS n_chunk_tokens " +
@@ -868,8 +863,7 @@ object NorthStarQueries {
           docs(s, d).filter(col("doc_id") >= 10),
           docs(s, d).filter(col("doc_id") < 10),
           "doc_id", "text", K)
-        .select("doc_id", "n_chars")
-        .orderBy("doc_id"),
+        .select("doc_id", "n_chars"),
       s"WITH $DOC_TOKS, $TOKFPS, $SHSIDS, $EDGES_DISTINCT " +
         "SELECT doc_id, n_chars FROM documents WHERE doc_id >= 10 AND doc_id NOT IN (" +
         "SELECT DISTINCT e.doc_id FROM edges e WHERE e.doc_id >= 10 AND e.sid IN (" +
@@ -887,8 +881,7 @@ object NorthStarQueries {
           docs(s, d).filter(col("doc_id") >= 10),
           docs(s, d).filter(col("doc_id") < 10),
           "doc_id", "text", K, BLOOM_BITS)
-        .select("doc_id", "n_chars")
-        .orderBy("doc_id"),
+        .select("doc_id", "n_chars"),
       s"WITH $DOC_TOKS, $TOKFPS, $SHSIDS, $EDGES_DISTINCT, " +
         "bpos AS (SELECT DISTINCT p FROM (" +
         s"SELECT sid % $BLOOM_BITS AS p FROM edges WHERE doc_id < 10 " +
@@ -911,8 +904,7 @@ object NorthStarQueries {
       (s, d) => docs(s, d).select(
         col("doc_id"),
         size(expr("regexp_extract_all(text, '[0-9]+', 0)")).cast("long").as("n_redacted"),
-        md5(regexp_replace(col("text"), "[0-9]+", "<NUM>").cast("binary")).as("redacted_hash"))
-        .orderBy("doc_id"),
+        md5(regexp_replace(col("text"), "[0-9]+", "<NUM>").cast("binary")).as("redacted_hash")),
       "SELECT doc_id, len(regexp_extract_all(text, '[0-9]+')) AS n_redacted, " +
         "md5(regexp_replace(text, '[0-9]+', '<NUM>', 'g')) AS redacted_hash " +
         "FROM documents ORDER BY doc_id"),
@@ -941,7 +933,6 @@ object NorthStarQueries {
           .agg(min(col("doc_id")).as("doc_id"))
         keep.join(filtered.select("doc_id", "n_tokens"), "doc_id")
           .select("doc_id", "n_tokens")
-          .orderBy("doc_id")
       }, {
         def hits(l: String) = "len(list_filter(toks, x -> x IN (" +
           TextOps.stopwords(l).map(w => s"'$w'").mkString(",") + ")))"
@@ -999,7 +990,6 @@ object NorthStarQueries {
           .select(col("node").as("doc_id"))
         val fin = surv.join(dropIds, Seq("doc_id"), "left_anti")
         TextOps.chunkDocs(fin, "doc_id", "text", 40, 30)
-          .orderBy("doc_id", "chunk_idx")
       },
       s"WITH RECURSIVE $MINHASH_CANDS, $EDGES_DISTINCT, $REP_CTES, " +
         "elig AS (SELECT d.doc_id, d.text FROM documents d JOIN m USING (doc_id) " +
@@ -1042,7 +1032,6 @@ object NorthStarQueries {
           .withColumn("__u", (col("doc_id") * 2654435761L) % 1000003L)
           .filter(col("__u").cast("double") < col("__q") * 1000003.0)
           .select(col("doc_id"), col("__q").as("quality"))
-          .orderBy("doc_id")
       }, {
         val hits = "len(list_filter(toks, x -> x IN (" +
           TextOps.stopwords("en").map(w => s"'$w'").mkString(",") + ")))"
@@ -1058,7 +1047,7 @@ object NorthStarQueries {
 
     Q("q_fingerprint",
       (s, d) => docs(s, d).select(
-        col("doc_id"), TextOps.fingerprint(col("text")).as("fp")).orderBy("doc_id"),
+        col("doc_id"), TextOps.fingerprint(col("text")).as("fp")),
       "SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT), " +
         "list_transform(range(1, length(text) + 1), i -> " +
         "CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))), " +
@@ -1068,8 +1057,7 @@ object NorthStarQueries {
     Q("q_dedup_exact",
       (s, d) => docs(s, d)
         .groupBy(md5(col("text").cast("binary")).as("h"))
-        .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n"))
-        .orderBy("keeper"),
+        .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n")),
       "SELECT md5(text) AS h, min(doc_id) AS keeper, count(*) AS n " +
         "FROM documents GROUP BY h ORDER BY keeper"),
 
@@ -1088,8 +1076,7 @@ object NorthStarQueries {
       // oracle ranks identically.
       (s, d) => TextOps.editDistancePairs(docs(s, d), "doc_id", "text",
           blockCol = "lang", lenCol = "n_chars", bandWidth = 50,
-          prefixLen = 80, maxDist = 20, blockCap = EDIT_BLOCK_CAP)
-        .orderBy("id_a", "id_b"),
+          prefixLen = 80, maxDist = 20, blockCap = EDIT_BLOCK_CAP),
       "WITH dd AS MATERIALIZED (SELECT doc_id, lang, " +
         "substr(text, 1, 80) AS t, n_chars FROM documents), " +
         "dd0 AS MATERIALIZED (SELECT * FROM (SELECT *, row_number() OVER (" +
@@ -1124,7 +1111,6 @@ object NorthStarQueries {
         val seeds = docs(s, d).filter(col("doc_id") % 3 === 0)
           .select(col("doc_id"), col("lang"))
         graft.engine.LabelPropagation.run(cand.select("a", "b"), seeds, iters = 2)
-          .orderBy("node")
       },
       s"WITH RECURSIVE $MINHASH_CANDS, " +
         "sym AS MATERIALIZED (SELECT a AS src, b AS dst FROM cand " +
@@ -1145,7 +1131,7 @@ object NorthStarQueries {
       (s, d) => {
         val sigs = TextOps.minhashSigArray(docs(s, d), "doc_id", "text", K, H)
         val bands = TextOps.lshBandsArr(sigs, "doc_id", BANDS, R)
-        TextOps.lshCandidatesCapped(bands, "doc_id", LSH_BUCKET_CAP).orderBy("a", "b")
+        TextOps.lshCandidatesCapped(bands, "doc_id", LSH_BUCKET_CAP)
       },
       s"WITH $MINHASH_CANDS SELECT a, b FROM cand ORDER BY a, b"),
 
@@ -1161,7 +1147,6 @@ object NorthStarQueries {
         val cand = TextOps.lshCandidatesCapped(bands, "doc_id", LSH_BUCKET_CAP)
         graft.engine.ConnectedComponents.run(cand)
           .select(col("node").as("doc_id"), col("comp").as("cluster"))
-          .orderBy("doc_id")
       },
       s"WITH RECURSIVE $MINHASH_CANDS, " +
         "e2 AS (SELECT a AS src, b AS dst FROM cand " +
@@ -1190,7 +1175,6 @@ object NorthStarQueries {
         val cand = TextOps.lshCandidatesCapped(bands, "doc_id", LSH_BUCKET_CAP)
         graft.engine.ConnectedComponents.runStar(cand)
           .select(col("node").as("doc_id"), col("comp").as("cluster"))
-          .orderBy("doc_id")
       },
       s"WITH RECURSIVE $MINHASH_CANDS, " +
         "e2 AS (SELECT a AS src, b AS dst FROM cand " +
@@ -1225,7 +1209,6 @@ object NorthStarQueries {
           .agg(count(lit(1)).as("n_docs"),
             max(when(col("rk") === 1, col("doc_id"))).as("keeper"),
             max(when(col("rk") === 1, col("n_chars"))).as("keeper_chars"))
-          .orderBy("cluster")
       },
       s"WITH RECURSIVE $MINHASH_CANDS, " +
         "e2 AS (SELECT a AS src, b AS dst FROM cand " +
@@ -1253,8 +1236,7 @@ object NorthStarQueries {
         .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
         .filter(size(col("__toks")) > 0)
         .select(col("doc_id"),
-          graft.functions.VectorFunctions.simhashSig(col("__toks"), NBITS).as("simhash"))
-        .orderBy("doc_id"), {
+          graft.functions.VectorFunctions.simhashSig(col("__toks"), NBITS).as("simhash")), {
         val bitCols = (0 until NBITS).map(k =>
           s"CAST(sum(CASE WHEN (sid * ${2L * k + 7919} % 131071) % 2 = 1 " +
             s"THEN 1 ELSE -1 END) > 0 AS BIGINT) AS b$k").mkString(", ")
@@ -1295,7 +1277,6 @@ object NorthStarQueries {
           .withColumn("jacc", col("i").cast("double") / (col("sza") + col("szb") - col("i")))
           .filter(col("jacc") >= 0.5)
           .select("a", "b", "i", "jacc")
-          .orderBy("a", "b")
       },
       s"WITH $MINHASH_CANDS, $EDGES_DISTINCT, " +
         "cd AS (SELECT DISTINCT doc_id FROM " +
@@ -1411,7 +1392,6 @@ object NorthStarQueries {
             .as("r"))
           .select("r.*")
           .filter(col("containment") >= 0.8)
-          .orderBy("contained", "container")
       },
       s"WITH $DOC_TOKS, $TOKFPS, $SHSIDS, $EDGES_DISTINCT, " +
         "sizes AS (SELECT doc_id, count(*) AS sz FROM edges GROUP BY doc_id), " +
@@ -1444,7 +1424,6 @@ object NorthStarQueries {
           .withColumn("gini",
             (lit(2L) * col("six") - (col("n") + 1) * col("sx")).cast("double") /
               (col("n") * col("sx")).cast("double"))
-          .orderBy("source")
       },
       s"WITH $DOC_TOKS, " +
         "base AS (SELECT doc_id, source, len(toks) AS x FROM tok " +
@@ -1479,7 +1458,6 @@ object NorthStarQueries {
         neg.join(ids.select(col("idx").as("nidx"), col("doc_id").as("neg_doc_id")),
             "nidx")
           .select("doc_id", "k", "neg_doc_id")
-          .orderBy("doc_id", "k")
       },
       "WITH ids AS (SELECT doc_id, " +
         "CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) - 1 AS idx " +
@@ -1514,7 +1492,6 @@ object NorthStarQueries {
         base.withColumn("pm", max(col("n_tokens")).over(w))
           .filter(col("pm").isNull || col("n_tokens") > col("pm"))
           .select("lang", "doc_id", "rich", "n_tokens")
-          .orderBy("lang", "doc_id")
       },
       s"WITH $DOC_TOKS, " +
         "base AS (SELECT doc_id, lang, len(toks) AS n_tokens, " +
@@ -1589,8 +1566,7 @@ object NorthStarQueries {
       // short shingles are template noise on this corpus; 8-grams only
       // collide on true duplicated spans).
       (s, d) => TextOps.dupNgramFrac(docs(s, d), "doc_id", "text", K_DUP)
-        .withColumn("keep", col("dup_frac") <= 0.2)
-        .orderBy("doc_id"),
+        .withColumn("keep", col("dup_frac") <= 0.2),
       s"WITH $DOC_TOKS, $TOKFPS, ${sqlShSidsK(K_DUP, "sh8")}, " +
         "edges AS (SELECT DISTINCT doc_id, sid FROM sh8), " +
         "sd AS (SELECT sid, count(*) AS nd FROM edges GROUP BY sid), " +
@@ -1628,7 +1604,7 @@ object NorthStarQueries {
         graft.engine.StaticPlan.scopedSized(s, n) {
           Similarity.semDedup(e, "vec_id", "embedding",
             SEM_TAU, cells, KM_ITERS, DIMS,
-            Similarity.trainModFor(n, TRAIN_TGT)).orderBy("vec_id")
+            Similarity.trainModFor(n, TRAIN_TGT))
         }
       },
       s"WITH ${sqlTrainMod()}, " +
@@ -1655,7 +1631,7 @@ object NorthStarQueries {
           "doc_id", BANDS, R)
         TextOps.dedupIncremental(all.filter(col("doc_id") % 5 === 0),
             corpusBands, "doc_id", "text", K, H, BANDS, R, LSH_BUCKET_CAP)
-          .select("doc_id", "n_chars").orderBy("doc_id")
+          .select("doc_id", "n_chars")
       },
       s"WITH $MINHASH_CANDS, " +
         "dropc AS (SELECT DISTINCT l.doc_id AS doc_id FROM bands l " +
@@ -1678,8 +1654,7 @@ object NorthStarQueries {
       // is integer-exact, and the score is ONE long/long division →
       // bit-identical doubles in both engines. Same linear inverted-
       // index shape as q_dup_ngram_frac (count, join back, doc agg).
-      (s, d) => TextOps.bigramCommonness(docs(s, d), "doc_id", "text")
-        .orderBy("doc_id"),
+      (s, d) => TextOps.bigramCommonness(docs(s, d), "doc_id", "text"),
       s"WITH $DOC_TOKS, $TOKFPS, " +
         "bg2 AS (SELECT doc_id, unnest(CASE WHEN len(fps) >= 2 THEN " +
         "list_transform(range(1, len(fps)), i -> " +
@@ -1718,7 +1693,6 @@ object NorthStarQueries {
             when(col("bkt") === 1, "head").when(col("bkt") === 2, "middle")
               .otherwise("tail"))
           .select("lang", "bkt", "bucket", "n_docs", "sum_chars")
-          .orderBy("lang", "bkt")
       },
       s"WITH $DOC_TOKS, $TOKFPS, " +
         "bg2 AS (SELECT doc_id, unnest(CASE WHEN len(fps) >= 2 THEN " +
@@ -1752,7 +1726,6 @@ object NorthStarQueries {
         val e = emb(s, d)
         Similarity.cosineNeighbors(e, "vec_id", "embedding",
             0.4, probeModOf(e))
-          .orderBy("a", "b")
       },
       s"WITH ${sqlProbeMod()} " +
         "SELECT l.vec_id AS a, r.vec_id AS b, " +
@@ -1774,7 +1747,7 @@ object NorthStarQueries {
         // 3): buckets keep ~LSH_TGT_DEDUP expected rows as data grows
         val planes = Similarity.lshPlanesFor(e.count(), LSH_TGT_DEDUP, 3)
         Similarity.cosinePairsLsh(e, "vec_id", "embedding",
-          0.4, planes, DIMS, DEDUP_PROBES).orderBy("a", "b")
+          0.4, planes, DIMS, DEDUP_PROBES)
       },
       {
         val probeUnion = (1 to DEDUP_PROBES).map(p =>
@@ -1799,7 +1772,6 @@ object NorthStarQueries {
       (s, d) => {
         val e = emb(s, d)
         Similarity.topK(e, "vec_id", "embedding", 3, probeModOf(e))
-          .orderBy("a", "rank")
       },
       s"WITH ${sqlProbeMod()} " +
         "SELECT a, rank, b FROM (SELECT l.vec_id AS a, r.vec_id AS b, " +
@@ -1812,8 +1784,7 @@ object NorthStarQueries {
       // IVF: broadcast seed centroids, nearest-centroid cell assignment,
       // within-cell quadratic top-k — the learned-partitioner counterpart
       // to the LSH path.
-      (s, d) => Similarity.topKIvf(emb(s, d), "vec_id", "embedding", 3, 16)
-        .orderBy("a", "rank"),
+      (s, d) => Similarity.topKIvf(emb(s, d), "vec_id", "embedding", 3, 16),
       "WITH cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings " +
         "ORDER BY vec_id LIMIT 16), " +
         "scored AS (SELECT e.vec_id, e.embedding, c.cid, " +
@@ -1831,8 +1802,7 @@ object NorthStarQueries {
       // cell — the standard IVF recall knob (candidates stay home-only,
       // so pairs are exactly-once; probe side doubles, quadratic term
       // does not).
-      (s, d) => Similarity.topKIvf(emb(s, d), "vec_id", "embedding", 3, 16, 2)
-        .orderBy("a", "rank"),
+      (s, d) => Similarity.topKIvf(emb(s, d), "vec_id", "embedding", 3, 16, 2),
       s"WITH ${sqlIvfCtes(16, 2)} " +
         "SELECT a, rank, b FROM (SELECT l.vec_id AS a, r.vec_id AS b, " +
         s"row_number() OVER (PARTITION BY l.vec_id ORDER BY ${sqlCos("l.embedding", "r.embedding")} DESC, r.vec_id) AS rank " +
@@ -1853,7 +1823,6 @@ object NorthStarQueries {
         val e = emb(s, d)
         val cells = Similarity.ivfCellsFor(e.count(), 128L, 16)
         Similarity.topKIvf(e, "vec_id", "embedding", 3, cells, 2)
-          .orderBy("a", "rank")
       },
       "WITH sz AS (SELECT count(*) AS n FROM embeddings), " +
         "cellsz AS (SELECT coalesce(min(t.c), 1048576) AS c FROM (VALUES " +
@@ -1886,8 +1855,7 @@ object NorthStarQueries {
       // At 100 TB this is the hard |query|·cap work bound that keeps a
       // skewed cell from dominating the in-cell quadratic stage.
       (s, d) => Similarity.topKIvf(emb(s, d), "vec_id", "embedding", 3, 16, 2,
-          cellCap = 8)
-        .orderBy("a", "rank"),
+          cellCap = 8),
       s"WITH ${sqlIvfCtes(16, 2)}, " +
         "chome AS (SELECT vec_id, embedding, cell FROM (SELECT *, " +
         "row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS hr " +
@@ -1908,7 +1876,6 @@ object NorthStarQueries {
         val e = emb(s, d)
         Similarity.topKIvfKmeans(e, "vec_id", "embedding", 3,
             16, KM_ITERS, DIMS, 2, trainModOf(e))
-          .orderBy("a", "rank")
       },
       s"WITH ${sqlTrainMod()}, ${sqlKmeansCtes(16, 2, KM_ITERS, trainMod = TMOD)} " +
         "SELECT a, rank, b FROM (SELECT l.vec_id AS a, r.vec_id AS b, " +
@@ -1953,7 +1920,6 @@ object NorthStarQueries {
           Similarity.topKIvfPq(e, "vec_id", "embedding", 3,
               cells, KM_ITERS, DIMS, 4, PQ_M, PQ_K, PQ_ITERS, PQ_RERANK,
               Similarity.trainModFor(n, TRAIN_TGT))
-            .orderBy("a", "rank")
         }
       },
       s"WITH ${sqlTrainMod()}, " +
@@ -2000,7 +1966,6 @@ object NorthStarQueries {
           Similarity.topKIvfPqResidual(e, "vec_id", "embedding", 3,
               cells, KM_ITERS, DIMS, 4, PQ_M, PQ_K, PQ_ITERS, PQ_RERANK,
               Similarity.trainModFor(n, TRAIN_TGT))
-            .orderBy("a", "rank")
         }
       },
       {
@@ -2034,8 +1999,7 @@ object NorthStarQueries {
       }),
 
     Q("q_ann_lsh",
-      (s, d) => Similarity.topKLsh(emb(s, d), "vec_id", "embedding", 3, PLANES, DIMS)
-        .orderBy("a", "rank"),
+      (s, d) => Similarity.topKLsh(emb(s, d), "vec_id", "embedding", 3, PLANES, DIMS),
       {
         s"WITH bk AS (SELECT vec_id, embedding, ${sqlBucket(PLANES)} AS bucket " +
           "FROM embeddings) " +
@@ -2051,8 +2015,7 @@ object NorthStarQueries {
       // q_ann_lsh at (nProbes+1)× shuffle volume, still no quadratic
       // cross term.
       (s, d) => Similarity.topKLshMp(emb(s, d), "vec_id", "embedding", 3,
-          PLANES, DIMS, NPROBES)
-        .orderBy("a", "rank"),
+          PLANES, DIMS, NPROBES),
       {
         val probeUnion = (1 to NPROBES).map(p =>
           s"SELECT vec_id, embedding, xor(bucket, ${1L << (p - 1)}) AS bucket FROM bk")
@@ -2087,7 +2050,6 @@ object NorthStarQueries {
         Similarity.topKLshMulti(e, "vec_id", "embedding", 3,
           planes, DIMS, LSHM_TABLES, planeStride = LSHM_TABLES,
           bucketCap = LSH_BUCKET_CAP)
-          .orderBy("a", "rank")
       },
       {
         val tblUnion = (0 until LSHM_TABLES).map(t =>
@@ -2128,7 +2090,7 @@ object NorthStarQueries {
         val w = Window.partitionBy(col("a")).orderBy(col("rrf").desc, col("b"))
         fused.withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= 3)
-          .select("a", "rank", "b", "rrf").orderBy("a", "rank")
+          .select("a", "rank", "b", "rrf")
       },
       s"WITH bk AS (SELECT vec_id, embedding, ${sqlBucket(PLANES)} AS bucket " +
         "FROM embeddings), " +
@@ -2161,7 +2123,6 @@ object NorthStarQueries {
       (s, d) => {
         val e = emb(s, d)
         Similarity.topKInt8(e, "vec_id", "embedding", 3, probeModOf(e))
-          .orderBy("a", "rank")
       },
       s"WITH $QUANT8, ${sqlProbeMod()} " +
         "SELECT a, rank, b FROM (SELECT l.vec_id AS a, r.vec_id AS b, " +
@@ -2219,14 +2180,14 @@ object NorthStarQueries {
         graft.engine.StaticPlan.scopedSized(s, nCorpus * 20) {
         // lazy fresh checkpoint: materializes inside the single final
         // action together with the slice tables (see q_ann_tuning)
-        import graft.engine.StaticPlan.{ckptFreshLazy => ckptFresh}
+        import graft.engine.StaticPlan.ckptFreshLazy
         // exact ground truth over the probe sample only (broadcast
         // sample × corpus, corpus-derived modulus — see PROBE_TGT);
         // the approximate sides stay corpus-wide and the semi-joins
         // score just the probes — the recall estimate is unchanged in
         // expectation, and the harness itself now scales.
         // One run feeds all seven hit counts.
-        val exact = ckptFresh(Similarity.topK(emb(s, d), "vec_id",
+        val exact = ckptFreshLazy(Similarity.topK(emb(s, d), "vec_id",
             "embedding", 3, Similarity.probeModFor(nCorpus, PROBE_TGT))
           .select("a", "b"))
         // the (lsh, lsh_mp) and (nprobe 1, 2) config pairs each share
@@ -2413,18 +2374,18 @@ object NorthStarQueries {
             scala.concurrent.duration.Duration.Inf))
         // per-chain job labels (guide §1.5): descriptions are
         // thread-local and each future body runs whole on one pool
-        // thread; the scoped label is restored when the body returns,
-        // so a later chain on the same pool thread never inherits it
-        def labeled[T](name: String)(body: => T): T =
-          QueryProfile.withJobLabel(name)(body)
-        val exactF = scala.concurrent.Future(labeled("tuning:exact")(ckptFresh(
+        // thread; withJobLabel restores the previous label when the body
+        // returns, so a later chain on the same pool thread never
+        // inherits it
+        val exactF = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:exact")(ckptFresh(
           Similarity.topK(e, "vec_id", "embedding", 3,
               Similarity.probeModFor(nCorpus, PROBE_TGT))
             .select("a", "b"))))
         val nTot = e.agg(count(lit(1)).as("n"))
         // ordered scored-pair counts per config (x≠y meetings)
-        val bkF = scala.concurrent.Future(labeled("tuning:bk")(ckptFresh(e.select(col("vec_id"),
-          Similarity.lshBucket(col("embedding"), PLANES, DIMS).as("bucket")))))
+        val bkF = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:bk")(
+          ckptFresh(e.select(col("vec_id"),
+            Similarity.lshBucket(col("embedding"), PLANES, DIMS).as("bucket")))))
         def ivfCands(assign: DataFrame): DataFrame =
           assign.groupBy("cell").agg(count(lit(1)).as("m"))
             .join(assign.filter(col("isHome")).groupBy("cell")
@@ -2432,13 +2393,13 @@ object NorthStarQueries {
             .agg(sum(col("m") * col("h")).as("mh")).crossJoin(nTot)
             .select((col("mh") - col("n")).as("n_cands"))
         val id = "vec_id"; val v = "embedding"
-        val wideAssignF = scala.concurrent.Future(labeled("tuning:wideAssign")(
+        val wideAssignF = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:wideAssign")(
           ckptFresh(Similarity.ivfKmeansAssignRanked(e, id, v, 64,
             KM_ITERS, DIMS, 20, tmod))))
         // ALL 16-cell configs (ivf_kmeans 16/2, 16/4, ivf_pq, ivf_pq_res)
         // share ONE coarse k-means training: the assignment table is a
         // rank slice and the PQ pipelines take the centroids pre-trained
-        val cents16F = scala.concurrent.Future(labeled("tuning:cents16")(
+        val cents16F = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:cents16")(
           Similarity.kmeansCentroids(
           e.select(col(id), Similarity.quantize(col(v)).as("q")),
           id, 16, KM_ITERS, DIMS, tmod)))
@@ -2446,10 +2407,10 @@ object NorthStarQueries {
         // ranked table each, like a16/wideAssign — per-config re-derivation
         // retrained k-means and re-scored every (vector, centroid) pair
         // TWICE per row (top-k side + candidate-count side)
-        val a8F = scala.concurrent.Future(labeled("tuning:a8")(
+        val a8F = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:a8")(
           ckptFresh(Similarity.ivfKmeansAssignRanked(e, id, v, 8,
             KM_ITERS, DIMS, 2, tmod))))
-        val iv16F = scala.concurrent.Future(labeled("tuning:iv16")(
+        val iv16F = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:iv16")(
           ckptFresh(Similarity.ivfAssignRanked(e, id, v, 16, 2))))
         // nested-depth config PAIRS share one scored-pair table each
         // (probe depth rides every pair as lrank; per-depth top-k ranks
@@ -2462,31 +2423,31 @@ object NorthStarQueries {
         // subtrees of the one report job, so lazy slices get their
         // quadratic scoring computed concurrently by both consumers
         // (persist race — JobProbe: job-sum 20 -> 22 s, wall +1.5)
-        val lshSlF = scala.concurrent.Future(labeled("tuning:lshSl")(
+        val lshSlF = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:lshSl")(
           Similarity.topKLshMpSlices(
           e, id, v, 3, PLANES, DIMS, NPROBES, ckptFresh)))
-        val mcandF = scala.concurrent.Future(labeled("tuning:mcand")(ckptFresh(
+        val mcandF = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:mcand")(ckptFresh(
           Similarity.lshMultiCandidates(e, id, v, LSHM_PLANES, DIMS,
             LSHM_TABLES))))
-        val ivSlF = iv16F.map(iv16 => labeled("tuning:ivSl")(
+        val ivSlF = iv16F.map(iv16 => QueryProfile.withJobLabel("tuning:ivSl")(
           Similarity.topKFromAssignSlices(
           iv16, id, v, 3, Seq(1, 2), materialize = ckptFresh)))
-        val wideSlF = wideAssignF.map(wa => labeled("tuning:wideSl")(
+        val wideSlF = wideAssignF.map(wa => QueryProfile.withJobLabel("tuning:wideSl")(
           Similarity.topKFromAssignSlices(
           wa, id, v, 3, Seq(16, 20), materialize = ckptFresh)))
         // wave 2 (needs cents16): the shared-coarse assignment + both
         // PQ shortlists
         val cents16 = await(cents16F).head
-        val a16F = scala.concurrent.Future(labeled("tuning:a16")(ckptFresh(
+        val a16F = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:a16")(ckptFresh(
           Similarity.ivfAssignFromCentroids(e, id, v, cents16, 4))))
-        val slPqF = scala.concurrent.Future(labeled("tuning:slPq")(ckptFresh(
+        val slPqF = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:slPq")(ckptFresh(
           Similarity.ivfPqShortlist(e, id, v, 16, KM_ITERS,
             DIMS, 4, PQ_M, PQ_K, PQ_ITERS, PQ_RERANK, tmod, Some(cents16)))))
-        val slResF = scala.concurrent.Future(labeled("tuning:slRes")(ckptFresh(
+        val slResF = scala.concurrent.Future(QueryProfile.withJobLabel("tuning:slRes")(ckptFresh(
           Similarity.ivfPqResidualShortlist(e, id, v, 16,
             KM_ITERS, DIMS, 4, PQ_M, PQ_K, PQ_ITERS, PQ_RERANK, tmod,
             Some(cents16)))))
-        val a16SlF = a16F.map(a16 => labeled("tuning:a16Sl")(
+        val a16SlF = a16F.map(a16 => QueryProfile.withJobLabel("tuning:a16Sl")(
           Similarity.topKFromAssignSlices(
           a16, id, v, 3, Seq(2, 4), materialize = ckptFresh)))
         // ---- frontier rows as their own driver-thread jobs (r16,
@@ -2601,7 +2562,6 @@ object NorthStarQueries {
           .withColumn("recall",
             col("n_hits").cast("double") / col("n_exact").cast("double"))
           .select("method", "param", "probes", "n_hits", "n_cands", "recall")
-          .orderBy("method", "param", "probes")
         } finally pool.shutdownNow()
         }
       },
@@ -2790,7 +2750,6 @@ object NorthStarQueries {
             coalesce(col("sq_d2"), lit(0L)).as("sq_d2"))
           .withColumn("drift_d1", drift(col("n_d1"), col("sq_d1")))
           .withColumn("drift_d2", drift(col("n_d2"), col("sq_d2")))
-          .orderBy("cell")
       }, {
         val rsq = "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
           "list_transform(list_zip(e.q, m.mu), p -> (p[1]-p[2])*(p[1]-p[2]))), " +
@@ -2876,7 +2835,6 @@ object NorthStarQueries {
           col("vec_id") % Similarity.probeModFor(n, PROBE_TGT) === 0)
         Similarity.serveTopK(queries, postings, "vec_id", "embedding",
             3, cents, 2)
-          .orderBy("a", "rank")
       },
       s"WITH ${sqlTrainMod()}, ${sqlKmeansCtes(16, 2, KM_ITERS, trainMod = TMOD)}, " +
         s"${sqlProbeMod()} " +
@@ -2916,7 +2874,6 @@ object NorthStarQueries {
           col("vec_id") % Similarity.probeModFor(n, PROBE_TGT) === 0)
         Similarity.serveTopK(queries, postings, "vec_id", "embedding",
             3, loaded, 2)
-          .orderBy("a", "rank")
       },
       s"WITH ${sqlTrainMod()}, ${sqlKmeansCtes(16, 2, KM_ITERS, trainMod = TMOD)}, " +
         s"${sqlProbeMod()} " +
@@ -2956,7 +2913,6 @@ object NorthStarQueries {
         Similarity.topKIvfPqServe(e, "vec_id", "embedding", 3, DIMS, 4,
             PQ_M, PQ_K, lc, lb, PQ_RERANK,
             queryPred = col("vec_id") % Similarity.probeModFor(n, PROBE_TGT) === 0)
-          .orderBy("a", "rank")
       },
       s"WITH ${sqlTrainMod()}, " +
         s"${sqlKmeansCtes(16, 4, KM_ITERS, trainMod = TMOD, derivedTarget = IVF_TGT_CELL)}, " +
@@ -2988,7 +2944,7 @@ object NorthStarQueries {
       (s, d) => {
         val all = docs(s, d)
         TextOps.bpeTrain(all, "doc_id", "text", BPE_MERGES,
-          trainModOf(all)).orderBy("step")
+          trainModOf(all))
       },
       s"WITH ${sqlTrainMod("documents")}, " +
         s"${sqlBpeCtes(BPE_MERGES, s" WHERE doc_id % $TMOD = 0")} " +
@@ -3037,7 +2993,6 @@ object NorthStarQueries {
             sum(col("ns")).as("n_subwords"))
           .withColumn("chars_per_subword",
             col("n_char_syms").cast("double") / col("n_subwords").cast("double"))
-          .orderBy("source")
       },
       // training chain on the sample (b0..b{n-1}), then the apply
       // chain (sqlBpeApplyCtes) re-runs the identical per-round
@@ -3097,7 +3052,6 @@ object NorthStarQueries {
             sum(col("ns")).as("n_subwords"))
           .withColumn("chars_per_subword",
             col("n_char_syms").cast("double") / col("n_subwords").cast("double"))
-          .orderBy("batch")
       },
       s"WITH ${sqlTrainMod(
           "(SELECT * FROM documents WHERE doc_id % 5 NOT IN (0, 4))")}, " +
@@ -3133,7 +3087,6 @@ object NorthStarQueries {
         TextOps.unigramTrain(all, "doc_id", "text",
           UNI_PLEN, UNI_MIN_CNT, UNI_MIN_USE, UNI_MAX_WORD,
           trainModOf(all))
-          .orderBy("piece")
       },
       s"WITH ${sqlTrainMod("documents")}, ${sqlUniTrainCtes()} " +
         "SELECT piece, CAST(len(piece) AS BIGINT) AS piece_len, " +
@@ -3155,7 +3108,6 @@ object NorthStarQueries {
         TextOps.unigramTrain(all, "doc_id", "text",
           UNI_PLEN, UNI_MIN_CNT, UNI_MIN_USE, UNI_MAX_WORD,
           trainModOf(all), UNI_TARGET)
-          .orderBy("piece")
       },
       s"WITH ${sqlTrainMod("documents")}, ${sqlUniTrainCtes(UNI_TARGET)} " +
         "SELECT piece, CAST(len(piece) AS BIGINT) AS piece_len, " +
@@ -3189,7 +3141,6 @@ object NorthStarQueries {
             sum(col("ns1")).as("n_pieces"))
           .withColumn("chars_per_piece",
             col("n_chars").cast("double") / col("n_pieces").cast("double"))
-          .orderBy("source")
       },
       s"WITH ${sqlTrainMod("documents")}, ${sqlUniTrainCtes()}, " +
         s"aw0 AS (SELECT source, word FROM (SELECT source, unnest($TOKS) AS word " +
@@ -3234,7 +3185,6 @@ object NorthStarQueries {
             sum(when(col("pred") === col("label"), 1L).otherwise(0L)).as("n_correct"))
           .withColumn("accuracy",
             col("n_correct").cast("double") / col("n").cast("double"))
-          .orderBy("label")
       },
       s"WITH ${sqlProbeMod()}, " +
         "nb AS (SELECT a, rank, b FROM (SELECT l.vec_id AS a, r.vec_id AS b, " +
@@ -3284,7 +3234,6 @@ object NorthStarQueries {
             sum(when(col("clabel") === col("label"), 1L).otherwise(0L)).as("n_pure"))
           .withColumn("purity",
             col("n_pure").cast("double") / col("n").cast("double"))
-          .orderBy("label")
       },
       {
         val sumList = (1 to DIMS).map(d2 => s"CAST(sum(q[$d2]) AS BIGINT)")
@@ -3316,7 +3265,7 @@ object NorthStarQueries {
         array_join(transform(sequence(lit(0), lit(3)),
           i => ascii(md5(col("text").cast("binary")).substr(i * 7 + 1, lit(1))).cast("long"))
             .cast("array<string>"), ",")
-          .as("stub_feature")).orderBy("doc_id"),
+          .as("stub_feature")),
       // stub_feature serialized to CSV string: the driver comparator
       // (pandas sort_values) cannot sort ndarray cells.
       "SELECT doc_id, octet_length(encode(text)) AS n_bytes, md5(text) AS content_hash, " +
@@ -3333,8 +3282,7 @@ object NorthStarQueries {
         .toDF()
         .select(col("media_id"), col("frame_idx"),
           octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("frame_hash"))
-        .orderBy("media_id", "frame_idx"),
+          md5(col("payload")).as("frame_hash")),
       "SELECT media_id, frame_idx, " +
         "length(substr(text, CAST(frame_idx * 64 + 1 AS INT), 64)) AS n_bytes, " +
         "md5(substr(text, CAST(frame_idx * 64 + 1 AS INT), 64)) AS frame_hash " +
@@ -3356,8 +3304,7 @@ object NorthStarQueries {
         .toDF()
         .select(col("media_id"),
           concat_ws(",", transform(col("feature"),
-            f => f.cast("int").cast("string"))).as("hist"))
-        .orderBy("media_id"),
+            f => f.cast("int").cast("string"))).as("hist")),
       "WITH m AS (SELECT doc_id AS media_id, md5(text) AS h FROM documents), " +
         "v AS (SELECT media_id, " +
         "((ascii(substr(h, CAST((i % 32) + 1 AS INT), 1)) * 7) % 256) // 32 AS b " +
@@ -3382,8 +3329,7 @@ object NorthStarQueries {
           graft.multimodal.Multimodal.fromDocumentsWav(s, d, 256), 8)
         .select(col("media_id"),
           concat_ws(",", transform(col("crossings"),
-            c => c.cast("string"))).as("zc"))
-        .orderBy("media_id"),
+            c => c.cast("string"))).as("zc")),
       "WITH m AS (SELECT doc_id AS media_id, md5(text) AS h FROM documents), " +
         "v AS (SELECT media_id, i, " +
         "((ascii(substr(h, CAST((i % 32) + 1 AS INT), 1)) * 997 + i * 131) " +
@@ -3414,8 +3360,7 @@ object NorthStarQueries {
         .toDF()
         .select(col("media_id"),
           concat_ws(",", transform(col("feature"),
-            f => f.cast("int").cast("string"))).as("hist"))
-        .orderBy("media_id"),
+            f => f.cast("int").cast("string"))).as("hist")),
       "WITH m AS (SELECT doc_id AS media_id, md5(text) AS h FROM documents), " +
         "g AS (SELECT media_id, h, (2 * y) * 16 + 2 * x AS i FROM m, " +
         "(SELECT unnest(range(0, 8)) AS x), (SELECT unnest(range(0, 8)) AS y)), " +
@@ -3464,7 +3409,6 @@ object NorthStarQueries {
           .groupBy("a", "b")
           .agg(sum(bit_count(col("va").bitwiseXOR(col("vb")))).as("ham"))
           .filter(col("ham") <= 8)
-          .orderBy("a", "b")
       },
       "WITH m AS (SELECT doc_id AS media_id, md5(substr(text, 1, 64)) AS h " +
         "FROM documents), " +
@@ -3496,8 +3440,7 @@ object NorthStarQueries {
       // BIGINTs, any container/plumbing corruption = hash mismatch.
       (s, d) => graft.multimodal.Multimodal
         .videoFrameLuma(
-          graft.multimodal.Multimodal.fromDocumentsY4m(s, d, 16, 4))
-        .orderBy("media_id", "frame_idx"),
+          graft.multimodal.Multimodal.fromDocumentsY4m(s, d, 16, 4)),
       "WITH m AS (SELECT doc_id AS media_id, md5(text) AS h FROM documents), " +
         "px AS (SELECT media_id, f, " +
         "(ascii(substr(h, CAST(((i + f) % 32) + 1 AS INT), 1)) * 31 + f * 7) " +
@@ -3597,7 +3540,6 @@ object NorthStarQueries {
         ex.join(broadcast(sk), "source")
           .select(col("source"), col("n_exact"), col("hll_est"),
             col("registers_hit"))
-          .orderBy("source")
       },
       s"WITH $DOC_TOKS, $TOKFPS, $SHSIDS, " +
         "tf AS MATERIALIZED (SELECT d.source, s.sid FROM sh s " +
@@ -3623,8 +3565,7 @@ object NorthStarQueries {
       // span except the lowest-doc-id one, reassemble surviving text.
       // One content-key shuffle + join-back + per-doc reassembly — the
       // shape CCNet runs at web scale. TextOps.spanDedup.
-      (s, d) => TextOps.spanDedup(docs(s, d), "doc_id", "text", SPAN)
-        .orderBy("doc_id"),
+      (s, d) => TextOps.spanDedup(docs(s, d), "doc_id", "text", SPAN),
       s"WITH $DOC_TOKS, " +
         "segs AS (SELECT doc_id, (len(toks) + 9) // 10 AS n_spans, " +
         "unnest(list_transform(range(0, (len(toks) + 9) // 10), i -> " +
@@ -3646,7 +3587,7 @@ object NorthStarQueries {
       // boilerplate should vanish entirely. Same single content-key
       // shuffle as q_dedup_spans.
       (s, d) => TextOps.spanDedup(docs(s, d), "doc_id", "text", SPAN,
-        dropAll = true).orderBy("doc_id"),
+        dropAll = true),
       s"WITH $DOC_TOKS, " +
         "segs AS (SELECT doc_id, (len(toks) + 9) // 10 AS n_spans, " +
         "unnest(list_transform(range(0, (len(toks) + 9) // 10), i -> " +
@@ -3669,7 +3610,7 @@ object NorthStarQueries {
       // those). Same one content-key shuffle as the span pair, keyed
       // (source, md5) — sharper partitioning, strictly better skew.
       (s, d) => TextOps.boilerplate(docs(s, d), "doc_id", "text",
-        "source", SPAN, minDocs = 2).orderBy("doc_id"),
+        "source", SPAN, minDocs = 2),
       s"WITH $DOC_TOKS, " +
         "segs AS (SELECT doc_id, (len(toks) + 9) // 10 AS n_spans, " +
         "unnest(list_transform(range(0, (len(toks) + 9) // 10), i -> " +
@@ -3693,7 +3634,7 @@ object NorthStarQueries {
       // produce identical bits. The 256-row bucket model is broadcast.
       // TextOps.dsirWeights; Xie et al. 2023.
       (s, d) => TextOps.dsirWeights(docs(s, d), "doc_id", "text",
-        "lang", "en", DSIR_B).orderBy("doc_id"),
+        "lang", "en", DSIR_B),
       s"WITH $DOC_TOKS, $TOKFPS, " +
         "tb AS (SELECT doc_id, unnest(fps) % 256 AS b FROM tokfp), " +
         "cb AS (SELECT tb.doc_id, b, lang, CAST(count(*) AS BIGINT) AS c " +
@@ -3731,7 +3672,6 @@ object NorthStarQueries {
             sum(when(col("__n") > 1, 1L).otherwise(0L)).as("n_dup_docs"))
           .withColumn("dup_frac",
             col("n_dup_docs").cast("double") / col("n_docs").cast("double"))
-          .orderBy("source")
       },
       s"WITH $DOC_TOKS, " +
         "h AS (SELECT doc_id, source, md5(text) AS h, length(text) AS nch " +
@@ -3757,8 +3697,7 @@ object NorthStarQueries {
         size(split(col("text"), " +")).cast("long").as("n_ws"),
         size(regexp_extract_all(col("text"),
           lit("'(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+"),
-          lit(0))).cast("long").as("n_bpe"))
-        .orderBy("doc_id"),
+          lit(0))).cast("long").as("n_bpe")),
       "SELECT doc_id, CAST(len(string_split_regex(text, ' +')) AS BIGINT) AS n_ws, " +
         "CAST(len(regexp_extract_all(text, " +
         "'''(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+')) AS BIGINT) " +
@@ -3775,7 +3714,6 @@ object NorthStarQueries {
           .withColumn("split",
             when(u < 8, "train").when(u === 8, "val").otherwise("test"))
           .groupBy("lang", "split").agg(count(lit(1)).as("n_docs"))
-          .orderBy("lang", "split")
       },
       "SELECT lang, CASE WHEN (doc_id * 2654435761) % 1000003 % 10 < 8 THEN 'train' " +
         "WHEN (doc_id * 2654435761) % 1000003 % 10 = 8 THEN 'val' ELSE 'test' END AS split, " +
@@ -3810,7 +3748,6 @@ object NorthStarQueries {
           .agg(count(lit(1)).as("n_docs_kept"),
             sum(col("n_tok")).as("n_tokens_kept"),
             max(col("tgt")).as("target_tokens"))
-          .orderBy("source")
       },
       s"WITH dd AS (SELECT doc_id, source, CAST(len($TOKS) AS BIGINT) AS n_tok, " +
         "(doc_id * 2654435761) % 1000003 AS h FROM documents), " +
@@ -3854,7 +3791,6 @@ object NorthStarQueries {
             sum(col("n_tok")).as("n_tokens_kept"),
             max(col("w")).as("weight"),
             max(col("tgt")).as("target_tokens"))
-          .orderBy("source")
       },
       s"WITH dd AS (SELECT doc_id, source, lang, CAST(len($TOKS) AS BIGINT) AS n_tok, " +
         "(doc_id * 2654435761) % 1000003 AS h FROM documents), " +
@@ -3910,7 +3846,6 @@ object NorthStarQueries {
             sum(col("n_tok")).as("n_tokens_kept"),
             max(col("w")).as("weight"),
             max(col("tgt")).as("target_tokens"))
-          .orderBy("source")
       },
       s"WITH dd AS (SELECT doc_id, source, CAST(len($TOKS) AS BIGINT) AS n_tok, " +
         "(doc_id * 2654435761) % 1000003 AS h FROM documents), " +
@@ -3955,7 +3890,6 @@ object NorthStarQueries {
           .withColumn("overlap",
             col("n_shared").cast("double") / least(col("n1"), col("n2")).cast("double"))
           .select("s1", "s2", "n_shared", "n1", "n2", "overlap")
-          .orderBy("s1", "s2")
       },
       s"WITH $DOC_TOKS, $TOKFPS, ${sqlShSidsK(K_DUP, "sh8")}, " +
         "e AS (SELECT DISTINCT source, sid FROM sh8 JOIN documents USING (doc_id)), " +
@@ -3978,8 +3912,7 @@ object NorthStarQueries {
         .groupBy("source")
         .agg(count(lit(1)).as("n_tokens"), countDistinct("fp").as("n_types"))
         .withColumn("ttr",
-          col("n_types").cast("double") / col("n_tokens").cast("double"))
-        .orderBy("source"),
+          col("n_types").cast("double") / col("n_tokens").cast("double")),
       s"WITH $DOC_TOKS, $TOKFPS " +
         "SELECT source, CAST(count(*) AS BIGINT) AS n_tokens, " +
         "CAST(count(DISTINCT fp) AS BIGINT) AS n_types, " +
@@ -4029,7 +3962,6 @@ object NorthStarQueries {
             (col("n_dup_docs").cast("double") / col("n_docs").cast("double")).as("dup_frac"),
             col("n_neardup_docs"),
             (col("n_neardup_docs").cast("double") / col("n_docs").cast("double")).as("neardup_frac"))
-          .orderBy("source")
       },
       s"WITH $MINHASH_CANDS, " +
         "hd AS (SELECT doc_id, source, md5(text) AS h, length(text) AS nch " +
@@ -4075,7 +4007,6 @@ object NorthStarQueries {
         docs(s, d).select(col("doc_id"), col("source"), q.as("quality"))
           .withColumn("rnk", row_number().over(w).cast("long"))
           .filter(col("rnk") <= SRC_CAP)
-          .orderBy("source", "rnk")
       }, {
         val hits = "len(list_filter(toks, x -> x IN (" +
           TextOps.stopwords("en").map(w => s"'$w'").mkString(",") + ")))"
@@ -4114,7 +4045,6 @@ object NorthStarQueries {
             col("rb.r").as("r"), col("rb.b").as("b"))
           .join(broadcast(cells), Seq("r", "b"))
           .groupBy("fp", "n_true").agg(min("cell").as("n_est"))
-          .orderBy(col("n_true").desc, col("fp"))
       }, {
         def hRows(src: String) = (0 until CMS_D).map(j =>
           s"SELECT fp, n_true, $j AS r, " +
@@ -4141,8 +4071,7 @@ object NorthStarQueries {
         col("doc_id"),
         md5(TextOps.normalize(col("text"))).as("h"),
         length(col("text")).cast("long").as("n_chars_raw"),
-        length(TextOps.normalize(col("text"))).cast("long").as("n_chars_norm"))
-        .orderBy("doc_id"),
+        length(TextOps.normalize(col("text"))).cast("long").as("n_chars_norm")),
       "WITH n AS (SELECT doc_id, length(text) AS nr, " +
         "trim(regexp_replace(regexp_replace(regexp_replace(lower(text), " +
         "'[0-9]', '0', 'g'), '[^a-z0 ]', '', 'g'), ' +', ' ', 'g')) AS nt " +
@@ -4157,7 +4086,7 @@ object NorthStarQueries {
       // token lost). One running-sum window per shard + narrow explode
       // + one groupBy — shards pack in parallel. TextOps.packSequences.
       (s, d) => TextOps.packSequences(docs(s, d), "doc_id", "text",
-        "source", PACK_L).orderBy("source", "seq_id"),
+        "source", PACK_L),
       s"WITH $DOC_TOKS, " +
         "d AS (SELECT doc_id, source, toks, len(toks) AS n FROM tok " +
         "JOIN documents USING (doc_id) WHERE len(toks) > 0), " +

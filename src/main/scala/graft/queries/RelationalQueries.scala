@@ -161,8 +161,7 @@ object RelationalQueries {
           sum(cents("l_quantity")).as("sum_qty_c"),
           sum(cents("l_extendedprice")).as("sum_base_c"),
           sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount").cast("long"))).as("sum_disc_c2"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus"),
+          count(lit(1)).as("count_order")),
       // CAST(sum AS BIGINT) everywhere below: DuckDB SUM over integers
       // returns HUGEINT (pandas float64), hash-mismatching Spark's int64.
       "SELECT l_returnflag, l_linestatus, " +
@@ -211,7 +210,6 @@ object RelationalQueries {
           .groupBy("n_name")
           .agg(sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount"))).as("revenue_c2"),
             count(lit(1)).as("n_items"))
-          .orderBy("n_name")
       },
       "SELECT n_name, " +
         s"CAST(sum(${sqlCents("l_extendedprice")} * (100 - ${sqlCents("l_discount")})) AS BIGINT) AS revenue_c2, " +
@@ -226,7 +224,7 @@ object RelationalQueries {
       // Parts that appear in lineitem (left semi = SQL EXISTS).
       (s, d) => Tables.part(s, d)
         .join(Tables.lineitem(s, d), col("p_partkey") === col("l_partkey"), "left_semi")
-        .select("p_partkey", "p_brand").orderBy("p_partkey"),
+        .select("p_partkey", "p_brand"),
       "SELECT p_partkey, p_brand FROM part WHERE p_partkey IN " +
         "(SELECT l_partkey FROM lineitem) ORDER BY p_partkey"),
 
@@ -238,7 +236,7 @@ object RelationalQueries {
       (s, d) => Tables.customer(s, d)
         .join(Tables.orders(s, d).filter(year(col("o_orderdate")) === 1996),
           col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_mktsegment").orderBy("c_custkey"),
+        .select("c_custkey", "c_mktsegment"),
       "SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey NOT IN " +
         "(SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996) ORDER BY c_custkey"),
 
@@ -269,8 +267,7 @@ object RelationalQueries {
           sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L))
             .as("high_line_count"),
           sum(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L))
-            .as("low_line_count"))
-        .orderBy("l_linestatus"),
+            .as("low_line_count")),
       "SELECT l_linestatus, " +
         "CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, " +
         "CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count " +
@@ -329,7 +326,6 @@ object RelationalQueries {
             Window.partitionBy("c_nationkey")
               .orderBy(col("bal_c").desc, col("c_custkey"))))
           .filter(col("rn") <= 5)
-          .orderBy("c_nationkey", "rn")
       },
       "SELECT * FROM (SELECT c_nationkey, c_custkey, bal_c, " +
         "row_number() OVER (PARTITION BY c_nationkey " +
@@ -344,7 +340,7 @@ object RelationalQueries {
         val o = Tables.orders(s, d)
         val y95 = o.filter(year(col("o_orderdate")) === 1995).select("o_custkey")
         val y96 = o.filter(year(col("o_orderdate")) === 1996).select("o_custkey")
-        y95.except(y96).orderBy("o_custkey")
+        y95.except(y96)
       },
       "SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1995 " +
         "EXCEPT SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996 " +
@@ -369,7 +365,6 @@ object RelationalQueries {
             col("l_shipdate"), cents("l_extendedprice").as("ep_c"))
           .withColumn("run_rev_c", sum(col("ep_c")).over(w))
           .drop("l_shipdate")
-          .orderBy("l_suppkey", "l_orderkey", "l_linenumber")
       },
       s"SELECT l_suppkey, l_orderkey, l_linenumber, ${sqlCents("l_extendedprice")} AS ep_c, " +
         s"CAST(sum(${sqlCents("l_extendedprice")}) OVER (PARTITION BY l_suppkey " +
@@ -394,7 +389,6 @@ object RelationalQueries {
             "left_semi")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("order_count"))
-          .orderBy("o_orderpriority")
       },
       "SELECT o_orderpriority, count(*) AS order_count FROM orders o " +
         "WHERE o.o_orderdate >= TIMESTAMP '1996-01-01' " +
@@ -422,7 +416,6 @@ object RelationalQueries {
           .select(col("c_custkey"), col("o_orderkey"),
             to_date(col("o_orderdate")).as("o_date"),
             cents("o_totalprice").as("total_c"), col("sum_qty_c"))
-          .orderBy(col("sum_qty_c").desc, col("o_orderkey"))
       },
       "SELECT c_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS o_date, " +
         s"${sqlCents("o_totalprice")} AS total_c, sum_qty_c " +
@@ -541,7 +534,6 @@ object RelationalQueries {
           .rangeBetween(-3600000000L, 0)
         e.withColumn("hour_cents", sum(col("cents")).over(w))
           .select("seq", "user_id", "hour_cents")
-          .orderBy("seq")
       },
       EventQueries.EV +
         " SELECT seq, user_id, CAST(sum(cents) OVER (PARTITION BY user_id " +
@@ -558,8 +550,7 @@ object RelationalQueries {
         .groupBy("user_id")
         .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
         .count()
-        .na.fill(0L)
-        .orderBy("user_id"),
+        .na.fill(0L),
       EventQueries.EV +
         " SELECT user_id, " +
         Seq("click", "view", "purchase", "signup", "error").map(t =>
@@ -576,7 +567,6 @@ object RelationalQueries {
         Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("n_chars"),
             cume_dist().over(w).as("pctl"))
-          .orderBy("doc_id")
       },
       "SELECT doc_id, lang, n_chars, cume_dist() OVER " +
         "(PARTITION BY lang ORDER BY n_chars) AS pctl " +
@@ -593,8 +583,7 @@ object RelationalQueries {
         .select(
           coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
           coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-          col("sum_qty_c"), col("n"))
-        .orderBy("rf", "ls"),
+          col("sum_qty_c"), col("n")),
       "SELECT coalesce(l_returnflag, 'ALL') AS rf, " +
         "coalesce(l_linestatus, 'ALL') AS ls, " +
         s"CAST(sum(${sqlCents("l_quantity")}) AS BIGINT) AS sum_qty_c, " +
@@ -612,8 +601,7 @@ object RelationalQueries {
         .select(
           coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
           coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-          col("sum_qty_c"), col("n"))
-        .orderBy("rf", "ls"),
+          col("sum_qty_c"), col("n")),
       "SELECT coalesce(l_returnflag, 'ALL') AS rf, " +
         "coalesce(l_linestatus, 'ALL') AS ls, " +
         s"CAST(sum(${sqlCents("l_quantity")}) AS BIGINT) AS sum_qty_c, " +
@@ -649,7 +637,6 @@ object RelationalQueries {
               .as("wins_sum_c"))
           .withColumn("wins_mean_c",
             col("wins_sum_c").cast("double") / col("n").cast("double"))
-          .orderBy("event_type")
       },
       EventQueries.EV + ", " +
         "ranked AS (SELECT event_type, cents, " +
@@ -690,7 +677,6 @@ object RelationalQueries {
             max(col("cents")).as("high_c"), min(col("cents")).as("low_c"),
             min(col("close_c")).as("close_c"),
             count(lit(1)).as("n"), sum(col("cents")).as("vol_c"))
-          .orderBy("event_type", "bkt")
       },
       EventQueries.EV + ", " +
         "e AS (SELECT event_type, seq, cents, epoch_us(ts) AS tu, " +
@@ -727,7 +713,6 @@ object RelationalQueries {
             count(lit(1)).as("n"))
           .withColumn("twap_c",
             col("wsum").cast("double") / col("held_us").cast("double"))
-          .orderBy("event_type", "bkt")
       },
       EventQueries.EV + ", " +
         "e AS (SELECT event_type, seq, cents, epoch_us(ts) AS tu, " +
@@ -763,7 +748,6 @@ object RelationalQueries {
           .filter(col("rn") === 1)
           .select(col("event_type"), col("peak_c"),
             col("cents").as("trough_c"), col("dd_c"), col("seq").as("at_seq"))
-          .orderBy("event_type")
       },
       EventQueries.EV + ", " +
         "e AS (SELECT event_type, seq, cents, epoch_us(ts) AS tu FROM ev), " +
@@ -803,7 +787,6 @@ object RelationalQueries {
         graft.engine.AsofJoin
           .asofLeft(grid, ticks, "event_type", "ts", Seq("cents"), "fill_")
           .select(col("event_type"), col("h"), col("fill_cents").as("fill_c"))
-          .orderBy("event_type", "h")
       },
       EventQueries.EV + ", " +
         "ticks AS (SELECT event_type, ts, max(cents) AS cents FROM ev " +
@@ -866,7 +849,6 @@ object RelationalQueries {
               .otherwise(expr("(prev_c * (next_tm - tm) + next_c * (tm - prev_tm)) " +
                 "div (next_tm - prev_tm)")))
           .select(col("event_type"), col("h"), col("interp_c"))
-          .orderBy("event_type", "h")
       },
       EventQueries.EV + ", " +
         "ticks AS (SELECT event_type, epoch_us(ts) AS tm, max(cents) AS c " +
@@ -910,7 +892,6 @@ object RelationalQueries {
           .select("user_id", "ts", "cents")
         graft.engine.AsofJoin
           .asofLeft(left, right, "user_id", "ts", Seq("cents"), "purchase_")
-          .orderBy("seq")
       },
       EventQueries.EV +
         " SELECT e.seq, e.user_id, e.ts, e.event_type, e.cents, " +
@@ -945,7 +926,6 @@ object RelationalQueries {
         iv.join(matched, Seq("user_id", "day"), "left")
           .select(col("user_id"), col("day"), col("lo"), col("hi"),
             coalesce(col("__n"), lit(0L)).as("n_other_purchases"))
-          .orderBy("user_id", "day")
       },
       "WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tu FROM events), " +
         "iv AS (SELECT user_id, tu // 86400000000 AS day, min(tu) AS lo, " +
@@ -974,7 +954,6 @@ object RelationalQueries {
           .withColumn("wc", col("c") * col("w"))
         graft.engine.Skew
           .saltedSum(joined, Seq("event_type"), col("wc"), "weighted_cents", 8)
-          .orderBy("event_type")
       },
       "WITH e AS (SELECT event_type, " +
         s"${sqlCents("value")} AS c FROM events), " +
@@ -990,8 +969,7 @@ object RelationalQueries {
       // of TABLESAMPLE: no RNG state, prunes in one narrow pass.
       (s, d) => EventQueries.ev(s, d).df
         .filter((col("seq") * 2654435761L) % 1000003L < 100000L)
-        .select("seq", "user_id", "value")
-        .orderBy("seq"),
+        .select("seq", "user_id", "value"),
       EventQueries.EV +
         " SELECT seq, user_id, value FROM ev " +
         "WHERE (seq * 2654435761) % 1000003 < 100000 ORDER BY seq"),
@@ -1009,7 +987,6 @@ object RelationalQueries {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") <= 20)
           .select("seq", "user_id", "value")
-          .orderBy("seq")
       },
       EventQueries.EV +
         " SELECT seq, user_id, value FROM (SELECT *, row_number() OVER " +
@@ -1033,7 +1010,6 @@ object RelationalQueries {
             floor((col("value") - col("mn")) / ((col("mx") - col("mn")) / 20))
               .cast("long"), lit(19L))).as("bucket"))
           .groupBy("bucket").agg(count(lit(1)).as("n_events"))
-          .orderBy("bucket")
       },
       "WITH b AS (SELECT min(value) AS mn, max(value) AS mx FROM events) " +
         "SELECT bucket, CAST(count(*) AS BIGINT) AS n_events FROM " +
@@ -1100,7 +1076,7 @@ object RelationalQueries {
             Window.partitionBy("p").orderBy("value", "seq")))
           .filter(col("rk") === col("wr"))
           .select(col("p"), col("value").as("exact"))
-        est.join(ex, "p").orderBy("p")
+        est.join(ex, "p")
       },
       "WITH b AS (SELECT min(value) AS mn, max(value) AS mx, " +
         "CAST(count(*) AS BIGINT) AS n FROM events), " +
@@ -1132,8 +1108,7 @@ object RelationalQueries {
           get_json_object(col("props"), "$.k").cast("long").as("k"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy("event_type"),
+          min(col("k")).as("min_k"), max(col("k")).as("max_k")),
       "SELECT event_type, CAST(count(*) AS BIGINT) AS n, " +
         "CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k, " +
         "CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k, " +
@@ -1214,7 +1189,6 @@ object RelationalQueries {
         dev.join(broadcast(mad), "event_type")
           .withColumn("is_anomaly", col("dev") * 10000 > col("mad") * 44478)
           .select("event_type", "day", "n_events", "med", "mad", "is_anomaly")
-          .orderBy("event_type", "day")
       },
       "WITH dc AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day, " +
         "count(*) AS n_events FROM events GROUP BY event_type, day), " +
@@ -1258,7 +1232,6 @@ object RelationalQueries {
           .withColumn("is_anomaly",
             dev * dev > lit(4L) * (col("nd") * col("qv") - col("sv") * col("sv")))
           .select("event_type", "day", "n_events", "is_anomaly")
-          .orderBy("event_type", "day")
       },
       "WITH dc AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day, " +
         "CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2), " +
@@ -1287,7 +1260,6 @@ object RelationalQueries {
           .withColumn("n_from",
             sum(col("n")).over(Window.partitionBy("from_type")))
           .withColumn("p", col("n").cast("double") / col("n_from").cast("double"))
-          .orderBy("from_type", "to_type")
       },
       EventQueries.EV + ", " +
         "t AS (SELECT event_type, lead(event_type) OVER " +
@@ -1319,7 +1291,6 @@ object RelationalQueries {
             (col("week") - col("cohort_week")).as("week_offset"))
           .groupBy("cohort_week", "week_offset")
           .agg(count(lit(1)).as("n_users"))
-          .orderBy("cohort_week", "week_offset")
       },
       "WITH e AS (SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS week FROM events), " +
         "c AS (SELECT user_id, min(week) AS cohort_week FROM e GROUP BY user_id) " +
@@ -1386,7 +1357,7 @@ object RelationalQueries {
         val e = l.join(o, col("l_orderkey") === col("o_orderkey"))
           .select((col("o_custkey") * 2).as("src"),
             (col("l_suppkey") * 2 + 1).as("dst"))
-        graft.engine.PageRank.run(e, "src", "dst", iters = 3).orderBy("node")
+        graft.engine.PageRank.run(e, "src", "dst", iters = 3)
       },
       "WITH e AS MATERIALIZED (SELECT DISTINCT o_custkey * 2 AS src, " +
         "l_suppkey * 2 + 1 AS dst FROM orders JOIN lineitem " +
@@ -1414,8 +1385,7 @@ object RelationalQueries {
         .filter(col("seq") >= 10000 && col("seq") < 40000)
         .groupBy("type_id")
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy("type_id"),
+          countDistinct(col("user_id")).as("n_users")),
       "WITH g AS (SELECT seq, " +
         "((seq * 2654435761 + 104729) % 1000003) % 1000 AS user_id, " +
         "((seq * 40503 + 17) % 97) % 5 AS type_id, " +
@@ -1440,7 +1410,6 @@ object RelationalQueries {
             (col("l_suppkey") * 2 + 1).as("dst"))
           .withColumn("w", lit(1L))
         graft.engine.PageRank.runWeighted(e, "src", "dst", "w", iters = 3)
-          .orderBy("node")
       },
       "WITH e AS MATERIALIZED (SELECT o_custkey * 2 AS src, " +
         "l_suppkey * 2 + 1 AS dst, CAST(count(*) AS BIGINT) AS w " +
@@ -1472,7 +1441,7 @@ object RelationalQueries {
         val e = l.join(o, col("l_orderkey") === col("o_orderkey"))
           .select((col("o_custkey") * 2).as("src"),
             (col("l_suppkey") * 2 + 1).as("dst"))
-        graft.engine.Hits.run(e, "src", "dst", iters = 3).orderBy("node")
+        graft.engine.Hits.run(e, "src", "dst", iters = 3)
       },
       "WITH e AS MATERIALIZED (SELECT DISTINCT o_custkey * 2 AS src, " +
         "l_suppkey * 2 + 1 AS dst FROM orders JOIN lineitem " +
@@ -1504,7 +1473,6 @@ object RelationalQueries {
         val seeds = Tables.supplier(s, d).filter(col("s_suppkey") <= 5)
           .select((col("s_suppkey") * 2 + 1).as("node"))
         graft.engine.PageRank.runPersonalized(e, "src", "dst", seeds, iters = 3)
-          .orderBy("node")
       },
       "WITH e AS MATERIALIZED (SELECT DISTINCT o_custkey * 2 AS src, " +
         "l_suppkey * 2 + 1 AS dst FROM orders JOIN lineitem " +
@@ -1540,7 +1508,7 @@ object RelationalQueries {
             (col("l_suppkey") * 2 + 1).as("dst"))
         val seeds = Tables.supplier(s, d).filter(col("s_suppkey") <= 5)
           .select((col("s_suppkey") * 2 + 1).as("node"))
-        graft.engine.Bfs.run(e, seeds, maxHops = 3).orderBy("node")
+        graft.engine.Bfs.run(e, seeds, maxHops = 3)
       },
       "WITH raw AS MATERIALIZED (SELECT DISTINCT o_custkey * 2 AS u, " +
         "l_suppkey * 2 + 1 AS v FROM orders JOIN lineitem " +
@@ -1571,7 +1539,7 @@ object RelationalQueries {
         val e = l.join(o, col("l_orderkey") === col("o_orderkey"))
           .select((col("o_custkey") * 2).as("src"),
             (col("l_suppkey") * 2 + 1).as("dst"))
-        graft.engine.KCore.run(e, k = 8, rounds = 3).orderBy("node")
+        graft.engine.KCore.run(e, k = 8, rounds = 3)
       },
       "WITH raw AS MATERIALIZED (SELECT DISTINCT o_custkey * 2 AS u, " +
         "l_suppkey * 2 + 1 AS v FROM orders JOIN lineitem " +
@@ -1600,7 +1568,7 @@ object RelationalQueries {
           .unionByName(ew.select(col("v").as("src"), col("u").as("dst"), col("w")))
         val seeds = Tables.supplier(s, d).filter(col("s_suppkey") <= 5)
           .select((col("s_suppkey") * 2 + 1).as("node"))
-        graft.engine.Sssp.run(sym, seeds, rounds = 3).orderBy("node")
+        graft.engine.Sssp.run(sym, seeds, rounds = 3)
       },
       "WITH ew AS MATERIALIZED (SELECT o_custkey * 2 AS u, " +
         "l_suppkey * 2 + 1 AS v, CAST(count(*) AS BIGINT) AS w " +
@@ -1701,7 +1669,6 @@ object RelationalQueries {
               .otherwise(lit("PREMIUM")).as("segment"),
             col("eff"))
         graft.engine.Scd2.merge(cur, u, "k", Seq("segment"), "eff")
-          .orderBy("k", "valid_from")
       },
       "WITH cur AS (SELECT c_custkey AS k, c_mktsegment AS segment, " +
         "DATE '1992-01-01' AS valid_from, CAST(NULL AS DATE) AS valid_to " +
@@ -1745,7 +1712,6 @@ object RelationalQueries {
           .agg(count(lit(1)).as("n"),
             min(col("x")).as("min_x"), max(col("x")).as("max_x"),
             min(col("y")).as("min_y"), max(col("y")).as("max_y"))
-          .orderBy("bz")
       },
       "WITH b AS (SELECT CAST(l_partkey AS BIGINT) AS x, " +
         "CAST(l_suppkey AS BIGINT) AS y FROM lineitem), " +
@@ -1776,7 +1742,7 @@ object RelationalQueries {
           .join(po.withColumnRenamed("o", "o2"), "p")
           .filter(col("o") < col("o2"))
           .select(col("o"), col("o2"))
-        graft.engine.Triangles.clusteringCoeff(ed).orderBy("node")
+        graft.engine.Triangles.clusteringCoeff(ed)
       },
       "WITH po AS MATERIALIZED (SELECT DISTINCT l_partkey AS p, " +
         "l_orderkey AS o FROM lineitem), " +

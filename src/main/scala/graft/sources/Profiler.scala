@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
 object Profiler {
 
   /** Profile the given numeric columns: one output row per column —
-    * (col_name, n_rows, n_null, ndv, min_v, max_v), ordered by name. */
+    * (col_name, n_rows, n_null, ndv, min_v, max_v), keyed by
+    * col_name. */
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs: Seq[Column] = count(lit(1)).as("__n") +: cols.flatMap { c =>
       val d = col(c).cast("double")
@@ -46,7 +47,6 @@ object Profiler {
     df.agg(aggs.head, aggs.tail: _*)
       .select(explode(array(metricRows: _*)).as("m"))
       .select(col("m.*"))
-      .orderBy("col_name")
   }
 
   /** Profile the given STRING columns — the other half of the quality
@@ -81,6 +81,5 @@ object Profiler {
     df.agg(aggs.head, aggs.tail: _*)
       .select(explode(array(metricRows: _*)).as("m"))
       .select(col("m.*"))
-      .orderBy("col_name")
   }
 }

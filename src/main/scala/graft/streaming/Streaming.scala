@@ -456,7 +456,10 @@ object Streaming {
   def asofStream(events: Dataset[Ev], refs: Dataset[Ev]): Dataset[AsofOut] =
     // history sorted ascending by ts; src 0 = reference, src 1 = query
     scanRows(tagged(Seq(refs, events)), "refs", Seq.empty[(Long, Double)])(_.user_id, tsSrc) {
-      case (_, hist, r) if r.src == 0 => ((hist :+ (r.tsUs, r.value)).sortBy(_._1), None)
+      case (_, hist, r) if r.src == 0 =>
+        // stable ordered insert: a tie lands after the rows already held
+        val (lo, hi) = hist.span(_._1 <= r.tsUs)
+        (lo ++ ((r.tsUs, r.value) +: hi), None)
       case (key, hist, r) =>
         val m = hist.filter(_._1 <= r.tsUs).lastOption
         // older references can never match a later (ordered) event

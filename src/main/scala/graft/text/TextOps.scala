@@ -786,7 +786,7 @@ object TextOps {
     import spark.implicits._
     bpeMergeRules(docsDf, idCol, textCol, nMerges, trainMod)
       .map(r => (r._1, r._2, r._3, r._4))
-      .toDF("step", "lhs", "rhs", "pair_count").orderBy("step")
+      .toDF("step", "lhs", "rhs", "pair_count")
   }
 
   /** [[bpeTrain]] with BATCHED merge rounds: each round learns up to
@@ -812,7 +812,7 @@ object TextOps {
     val spark = docsDf.sparkSession
     import spark.implicits._
     bpeMergeRules(docsDf, idCol, textCol, nMerges, trainMod, batch)
-      .toDF("step", "lhs", "rhs", "pair_count", "round").orderBy("step")
+      .toDF("step", "lhs", "rhs", "pair_count", "round")
   }
 
   /** The learned merge table in step order — the constant-size
@@ -1040,7 +1040,7 @@ object TextOps {
   }
 
   /** [[unigramLearnedVocab]] as the trained-artifact table:
-    * (piece, piece_len, usage), ordered by piece. */
+    * (piece, piece_len, usage), keyed by piece. */
   def unigramTrain(docsDf: DataFrame, idCol: String, textCol: String,
       maxPieceLen: Int = 4, minCount: Long = 3L, minUse: Long = 2L,
       maxWord: Int = 10, trainMod: Long = 1L,
@@ -1050,7 +1050,7 @@ object TextOps {
     val (p, c) = unigramLearnedVocab(docsDf, idCol, textCol, maxPieceLen,
       minCount, minUse, maxWord, trainMod, targetVocab)
     p.zip(c).toSeq.map { case (pc, cc) => (pc, pc.length.toLong, cc) }
-      .toDF("piece", "piece_len", "usage").orderBy("piece")
+      .toDF("piece", "piece_len", "usage")
   }
 
   /**

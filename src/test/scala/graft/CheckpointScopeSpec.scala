@@ -109,6 +109,19 @@ class CheckpointScopeSpec extends SparkSpec {
     }
   }
 
+  test("GraphRounds labels the sizing count and each eager round (PageRank.run)") {
+    var out: DataFrame = null
+    val rec = QueryProfile.run(spark, "labels-PageRank.run") {
+      out = PageRank.run(fixture, "src", "dst", iters = 3); out.collect()
+    }
+    assert(rec.jobs.size === 14)
+    // three rounds below the size gate fuse into the last, eager one
+    val labels = rec.jobs.map(_.description).filter(_.nonEmpty).toSet
+    assert(labels === Set("graph:size", "graph:round 3/3"),
+      s"job labels: ${rec.jobs.map(j => j.id -> j.description)}")
+    Checkpoints.release(out)
+  }
+
   test("every engine on empty edges restores its thread-local and pins nothing") {
     val key = "spark.checkpoint.checkpointAllMarkedAncestors"
     val sc = spark.sparkContext

@@ -18,6 +18,11 @@ package graft
  *     fixed by two-phase rank selection in round 7). Windows over
  *     small derived aggregates are fine and whitelisted by the
  *     scan-reachability test, not by name.
+ *  3. NO presentational root sort. Results are unordered sets: order
+ *     lives in the `seq`, key and `out_seq` columns, and a caller who
+ *     wants rows in order sorts at the sink. A global sort at the
+ *     plan root costs AQE a range-sampling job and one more exchange,
+ *     and nothing reads it — except a limit (top-n), which keeps it.
  */
 class PlanGateSpec extends SparkSpec {
 
@@ -39,6 +44,29 @@ class PlanGateSpec extends SparkSpec {
       s"unbroadcast Cartesian product in: ${offenders.mkString(", ")} — " +
         "use broadcast() on the bounded side (in-plan scalar / probe " +
         "sample) or an equi-join")
+  }
+
+  test("no registry plan ends in a global sort that no limit reads") {
+    // Walk the optimized plan down from the root through Project only.
+    // A global Sort reached that way orders the result and nothing
+    // else; a limit stops the walk, because the top-n reads the order.
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
+    def endsInSort(p: LogicalPlan): Boolean = p match {
+      case Project(_, child) => endsInSort(child)
+      case s: Sort => s.global
+      case _ => false
+    }
+    val registry = SparkEntry.queries.toSeq.sortBy(_._1) :+
+      ("entry" -> ((s: org.apache.spark.sql.SparkSession, _: String) => SparkEntry.entry(s)))
+    val offenders = registry.flatMap { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      val bad = endsInSort(df.queryExecution.optimizedPlan)
+      graft.engine.Checkpoints.release(df)
+      if (bad) Some(name) else None
+    }
+    assert(offenders.isEmpty,
+      s"— ${offenders.size} registry plans end in a global sort that no " +
+        "limit reads; results are unordered sets, drop the terminal orderBy")
   }
 
   test("no registry plan globally sorts a big-table scan through an unpartitioned ranking window") {

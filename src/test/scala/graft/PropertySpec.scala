@@ -664,7 +664,7 @@ class PropertySpec extends SparkSpec {
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val got = graft.text.TextOps.bpeTrain(df, "doc_id", "text", 4)
-        .collect()
+        .orderBy("step").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq
       assert(got == refBpe(texts, 4))

@@ -257,7 +257,7 @@ class TextSimilaritySpec extends SparkSpec {
     // "aaaa": (a,a) matches at 1,2,3 — non-overlap applies at 1 and 3,
     // so the word becomes [aa, aa] and round 2 learns (aa, aa) once.
     val d = Seq((1L, "aaaa")).toDF("doc_id", "text")
-    val got = TextOps.bpeTrain(d, "doc_id", "text", 2)
+    val got = TextOps.bpeTrain(d, "doc_id", "text", 2).orderBy("step")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(got == Seq((1L, "a", "a", 3L), (2L, "aa", "aa", 1L)))
     // deterministic tie-break: "ab ab ba" — (a,b) and (b,a) both count 2
