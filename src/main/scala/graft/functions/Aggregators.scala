@@ -1,46 +1,62 @@
 package graft.functions
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction, WindowSpec}
 import org.apache.spark.sql.functions.udaf
 
 /**
- * Custom sequential-scan aggregates the built-in function library lacks.
+ * Custom aggregates the built-in function library lacks.
  *
- * All of these are used as WINDOW functions over a running frame
- * (unboundedPreceding..currentRow). Spark's WindowExec feeds rows to the
+ * The order-sensitive scans (`ema`, `emaVec`, `reduceScan`,
+ * `runningConcat`, `runningProduct` and the three throttles) are WINDOW
+ * functions over an ordered frame. Spark's WindowExec feeds rows to the
  * aggregate buffer in frame order and re-evaluates incrementally for
- * expanding frames, so each is an O(n) per-key scan — the exact Spark
+ * expanding frames, so each is an O(n) per-key scan — the Spark
  * analogue of the reference's per-event mutable state
- * (`/root/reference/eventkit/ops/aggregate.py`).
+ * (`eventkit/ops/aggregate.py`). Each is one [[Scan]]: a zero buffer, a
+ * per-row step, the output of the buffer, and the two encoders.
  *
- * `merge` is required by the Aggregator contract but never called in
- * window evaluation (no partial aggregation across a sorted frame); the
- * scans are order-sensitive by design, matching the reference.
+ * `collectMinK` and `topKByScore` are grouped aggregates with a real
+ * merge, so map-side partial aggregation applies to them.
  */
 object Aggregators {
 
-  /** EMA state: (current value, primed?). First row passes through raw
-    * (`ops/aggregate.py:95-111`: prev==NO_VALUE → value = args). */
-  case class EmaBuf(v: Double, primed: Boolean)
-
-  class EmaAgg(alpha: Double) extends Aggregator[Double, EmaBuf, Double] {
-    private val f1 = alpha
-    private val f2 = 1.0 - alpha
-    def zero: EmaBuf = EmaBuf(0.0, primed = false)
-    def reduce(b: EmaBuf, x: Double): EmaBuf =
-      if (!b.primed) EmaBuf(x, primed = true)
-      else EmaBuf(b.v * f2 + x * f1, primed = true)
-    def merge(a: EmaBuf, b: EmaBuf): EmaBuf =
+  /** The shell of every order-sensitive scan. `merge` is required by
+    * the Aggregator contract, but window evaluation never calls it (no
+    * partial aggregation across a sorted frame). */
+  private final class Scan[I, S, O](zero0: S, step: (S, I) => S, out: S => O,
+      bufEnc: Encoder[S], outEnc: Encoder[O]) extends Aggregator[I, S, O] {
+    def zero: S = zero0
+    def reduce(b: S, x: I): S = step(b, x)
+    def merge(a: S, b: S): S =
       throw new UnsupportedOperationException("order-sensitive scan")
-    def finish(b: EmaBuf): Double = b.v
-    def bufferEncoder: Encoder[EmaBuf] = Encoders.product[EmaBuf]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+    def finish(b: S): O = out(b)
+    def bufferEncoder: Encoder[S] = bufEnc
+    def outputEncoder: Encoder[O] = outEnc
   }
 
-  /** `ema(col, n).over(wRun)` — weight 2/(n+1) like the reference. */
-  def ema(c: Column, weight: Double): Column = udaf(new EmaAgg(weight)).apply(c)
+  /** A [[Scan]] as a function; `name` labels its plan node. */
+  private def scan[I: TypeTag, S, O](name: String, zero: S, bufEnc: Encoder[S],
+      outEnc: Encoder[O])(step: (S, I) => S)(out: S => O): UserDefinedFunction =
+    udaf(new Scan(zero, step, out, bufEnc, outEnc)).withName(name)
+
+  /** EMA state: (current value, primed?). */
+  case class EmaBuf(v: Double, primed: Boolean)
+
+  /** `ema(col, w).over(wRun)` — weight 2/(n+1) like the reference. The
+    * first row passes through raw (`ops/aggregate.py:95-111`:
+    * prev==NO_VALUE → value = args). */
+  def ema(c: Column, weight: Double): Column = {
+    val f1 = weight
+    val f2 = 1.0 - weight
+    scan[Double, EmaBuf, Double]("ema", EmaBuf(0.0, primed = false),
+        Encoders.product[EmaBuf], Encoders.scalaDouble) { (b, x) =>
+      if (!b.primed) EmaBuf(x, primed = true)
+      else EmaBuf(b.v * f2 + x * f1, primed = true)
+    }(_.v).apply(c)
+  }
 
   /**
    * Element-wise EMA over multi-arg tuples (`ops/aggregate.py:104-108`):
@@ -49,26 +65,21 @@ object Aggregators {
    * Python's `zip`, a length mismatch truncates to the shorter side.
    */
   case class EmaVecBuf(v: Seq[Double], primed: Boolean)
-  class EmaVecAgg(alpha: Double) extends Aggregator[Seq[Double], EmaVecBuf, Seq[Double]] {
-    private val f1 = alpha
-    private val f2 = 1.0 - alpha
-    def zero: EmaVecBuf = EmaVecBuf(Vector.empty, primed = false)
-    def reduce(b: EmaVecBuf, x: Seq[Double]): EmaVecBuf =
+  def emaVec(c: Column, weight: Double): Column = {
+    val f1 = weight
+    val f2 = 1.0 - weight
+    scan[Seq[Double], EmaVecBuf, Seq[Double]]("ema_vec", EmaVecBuf(Vector.empty, primed = false),
+        Encoders.product[EmaVecBuf], ExpressionEncoder()) { (b, x) =>
       if (!b.primed) EmaVecBuf(x, primed = true)
       else EmaVecBuf(b.v.zip(x).map { case (p, a) => p * f2 + a * f1 }, primed = true)
-    def merge(a: EmaVecBuf, b: EmaVecBuf): EmaVecBuf =
-      throw new UnsupportedOperationException("order-sensitive scan")
-    def finish(b: EmaVecBuf): Seq[Double] = b.v
-    def bufferEncoder: Encoder[EmaVecBuf] = Encoders.product[EmaVecBuf]
-    def outputEncoder: Encoder[Seq[Double]] = ExpressionEncoder()
+    }(_.v).apply(c)
   }
-  def emaVec(c: Column, weight: Double): Column = udaf(new EmaVecAgg(weight)).apply(c)
 
   /**
    * Generic user-lambda running fold — the first-class `reduceScan`
    * surface for the reference's `Reduce(func, initializer)`
    * (`ops/aggregate.py:18-36`): any Scala `(T, T) => T` becomes a
-   * window-scan Column, no Aggregator subclass needed.
+   * window-scan Column over the given (running) frame.
    *
    * Reference semantics preserved exactly, including the
    * NO-INITIALIZER off-by-one (`ops/aggregate.py:29-31`): without an
@@ -78,62 +89,53 @@ object Aggregators {
    * (see `EventStream.reduceScan`). With an initializer, row 1 emits
    * `f(init, x1)` and every row emits.
    *
-   * Buffer is a 0/1-element Seq so the unseeded state needs no
+   * The buffer is a 0/1-element Seq, so the unseeded state needs no
    * sentinel value of T (nothing is assumed about T beyond an encoder).
+   * The window binds to the aggregate itself; the scalar extraction
+   * sits outside it.
    */
-  class ReduceScanAgg[T](f: (T, T) => T, init: Option[T])(
-      implicit bufEnc: Encoder[Seq[T]])
-      extends Aggregator[T, Seq[T], Seq[T]] {
-    def zero: Seq[T] = Nil
-    def reduce(b: Seq[T], x: T): Seq[T] = b match {
-      case Seq()  => Seq(init.map(i => f(i, x)).getOrElse(x))
-      case Seq(a) => Seq(f(a, x))
-      case _      => throw new IllegalStateException("scan buffer > 1")
-    }
-    def merge(a: Seq[T], b: Seq[T]): Seq[T] =
-      throw new UnsupportedOperationException("order-sensitive scan")
-    def finish(b: Seq[T]): Seq[T] = b
-    def bufferEncoder: Encoder[Seq[T]] = bufEnc
-    def outputEncoder: Encoder[Seq[T]] = bufEnc
-  }
-
-  /** `reduceScan(f)(col, wRun)` — running `f`-fold of `col` over the
-    * given (running) frame; see [[ReduceScanAgg]] for the emission
-    * contract. The window binds to the UDAF itself (its buffer is the
-    * 0/1-element array); the scalar extraction sits outside it. */
   def reduceScan[T](f: (T, T) => T, init: Option[T] = None)(
-      c: Column, over: org.apache.spark.sql.expressions.WindowSpec)(
-      implicit tt: scala.reflect.runtime.universe.TypeTag[T]): Column = {
-    implicit val bufEnc: Encoder[Seq[T]] = ExpressionEncoder()
-    org.apache.spark.sql.functions.element_at(
-      udaf(new ReduceScanAgg[T](f, init)).apply(c).over(over), 1)
+      c: Column, over: WindowSpec)(implicit tt: TypeTag[T]): Column = {
+    val bufEnc: Encoder[Seq[T]] = ExpressionEncoder()
+    val agg = scan[T, Seq[T], Seq[T]]("reduce_scan", Nil, bufEnc, bufEnc) { (b, x) =>
+      b match {
+        case Seq()  => Seq(init.map(i => f(i, x)).getOrElse(x))
+        case Seq(a) => Seq(f(a, x))
+        case _      => throw new IllegalStateException("scan buffer > 1")
+      }
+    }(identity)
+    org.apache.spark.sql.functions.element_at(agg.apply(c).over(over), 1)
   }
 
   /** Generic Reduce (`ops/aggregate.py:18-36`) demo instance: running
     * string fold `acc || x` (initializer = ""). */
-  class ConcatAgg extends Aggregator[String, String, String] {
-    def zero: String = ""
-    def reduce(b: String, x: String): String = b + x
-    def merge(a: String, b: String): String = a + b
-    def finish(b: String): String = b
-    def bufferEncoder: Encoder[String] = Encoders.STRING
-    def outputEncoder: Encoder[String] = Encoders.STRING
-  }
-  def runningConcat(c: Column): Column = udaf(new ConcatAgg).apply(c)
+  def runningConcat(c: Column): Column =
+    scan[String, String, String]("running_concat", "", Encoders.STRING, Encoders.STRING)(
+      _ + _)(identity).apply(c)
 
   /** Running product (`ops/aggregate.py:60-64`) — exact left fold, no
     * log-sum trick (handles zeros/negatives). */
   case class ProdBuf(v: Double)
-  class ProductAgg(start: Double) extends Aggregator[Double, ProdBuf, Double] {
-    def zero: ProdBuf = ProdBuf(start)
-    def reduce(b: ProdBuf, x: Double): ProdBuf = ProdBuf(b.v * x)
-    def merge(a: ProdBuf, b: ProdBuf): ProdBuf = ProdBuf(a.v * b.v)
-    def finish(b: ProdBuf): Double = b.v
-    def bufferEncoder: Encoder[ProdBuf] = Encoders.product[ProdBuf]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
   def runningProduct(c: Column, start: Double = 1.0): Column =
-    udaf(new ProductAgg(start)).apply(c)
+    scan[Double, ProdBuf, Double]("running_product", ProdBuf(start),
+      Encoders.product[ProdBuf], Encoders.scalaDouble)((b, x) => ProdBuf(b.v * x))(_.v).apply(c)
+
+  /**
+   * One admit of the sliding-window rate limiter (`ops/timing.py:104-184`):
+   * a row waits until the `maximum`-th newest admit is `intervalUs` old,
+   * and never precedes the previous admit (arrival order is FIFO, like
+   * the reference queue, `ops/timing.py:119-121`). `admits` holds the
+   * last ≤ `maximum` admit times, ascending. Shared by the batch
+   * [[throttleAdmit]] scan and `Streaming.throttleStream`; on input
+   * sorted by time the FIFO clamp never binds.
+   */
+  def throttleAdmitUs(admits: Seq[Long], tsUs: Long, maximum: Int, intervalUs: Long): Long = {
+    val floor = admits.lastOption.getOrElse(Long.MinValue)
+    val rateFloor =
+      if (admits.size < maximum) Long.MinValue
+      else admits(admits.size - maximum) + intervalUs
+    math.max(tsUs, math.max(floor, rateFloor))
+  }
 
   /**
    * Throttle as admitted-time rewrite (`ops/timing.py:104-184`): at most
@@ -143,24 +145,12 @@ object Aggregators {
    * Buffer keeps only the last `maximum` admit times.
    */
   case class ThrottleBuf(admits: Seq[Long])
-  class ThrottleAgg(maximum: Int, intervalUs: Long)
-      extends Aggregator[Long, ThrottleBuf, Long] {
-    def zero: ThrottleBuf = ThrottleBuf(Vector.empty)
-    def reduce(b: ThrottleBuf, tsUs: Long): ThrottleBuf = {
-      val admit =
-        if (b.admits.size < maximum) tsUs
-        else math.max(tsUs, b.admits.head + intervalUs)
-      val kept = (b.admits :+ admit).takeRight(maximum)
-      ThrottleBuf(kept)
-    }
-    def merge(a: ThrottleBuf, b: ThrottleBuf): ThrottleBuf =
-      throw new UnsupportedOperationException("order-sensitive scan")
-    def finish(b: ThrottleBuf): Long = b.admits.last
-    def bufferEncoder: Encoder[ThrottleBuf] = Encoders.product[ThrottleBuf]
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
-  }
   def throttleAdmit(tsUs: Column, maximum: Int, intervalUs: Long): Column =
-    udaf(new ThrottleAgg(maximum, intervalUs)).apply(tsUs)
+    scan[Long, ThrottleBuf, Long]("throttle_admit", ThrottleBuf(Vector.empty),
+        Encoders.product[ThrottleBuf], Encoders.scalaLong) { (b, t) =>
+      val admit = throttleAdmitUs(b.admits, t, maximum, intervalUs)
+      ThrottleBuf((b.admits :+ admit).takeRight(maximum))
+    }(_.admits.last).apply(tsUs)
 
   /**
    * Cost-based throttle (`ops/timing.py:104-184` with `cost_func`): each
@@ -171,31 +161,23 @@ object Aggregators {
    * every step, so state is bounded by the cost budget.
    */
   case class ThrottleCostBuf(admits: Seq[(Long, Long)])
-  class ThrottleCostAgg(maximum: Long, intervalUs: Long)
-      extends Aggregator[(Long, Long), ThrottleCostBuf, Long] {
-    def zero: ThrottleCostBuf = ThrottleCostBuf(Vector.empty)
-    def reduce(b: ThrottleCostBuf, in: (Long, Long)): ThrottleCostBuf = {
-      val (tsUs, cost) = in
-      var t = b.admits.lastOption.map(a => math.max(tsUs, a._1)).getOrElse(tsUs)
+  def throttleCostAdmit(tsUs: Column, cost: Column, maximum: Long, intervalUs: Long): Column =
+    scan[(Long, Long), ThrottleCostBuf, Long]("throttle_cost_admit",
+        ThrottleCostBuf(Vector.empty),
+        Encoders.product[ThrottleCostBuf], Encoders.scalaLong) { (b, in) =>
+      val (t0, c) = in
+      var t = b.admits.lastOption.map(a => math.max(t0, a._1)).getOrElse(t0)
       var live = b.admits
       def windowSum(at: Long) = live.collect {
-        case (a, c) if a + intervalUs > at => c
+        case (a, w) if a + intervalUs > at => w
       }.sum
       live = live.dropWhile { case (a, _) => a + intervalUs <= t }
-      while (windowSum(t) + cost > maximum && live.nonEmpty) {
+      while (windowSum(t) + c > maximum && live.nonEmpty) {
         t = live.head._1 + intervalUs // earliest expiry frees budget
         live = live.dropWhile { case (a, _) => a + intervalUs <= t }
       }
-      ThrottleCostBuf(live :+ (t, cost))
-    }
-    def merge(a: ThrottleCostBuf, b: ThrottleCostBuf): ThrottleCostBuf =
-      throw new UnsupportedOperationException("order-sensitive scan")
-    def finish(b: ThrottleCostBuf): Long = b.admits.last._1
-    def bufferEncoder: Encoder[ThrottleCostBuf] = Encoders.product[ThrottleCostBuf]
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
-  }
-  def throttleCostAdmit(tsUs: Column, cost: Column, maximum: Long, intervalUs: Long): Column =
-    udaf(new ThrottleCostAgg(maximum, intervalUs)).apply(tsUs, cost)
+      ThrottleCostBuf(live :+ (t, c))
+    }(_.admits.last._1).apply(tsUs, cost)
 
   /**
    * Dynamic-limit throttle (`Throttle.set_limit`, `ops/timing.py:124-130`):
@@ -214,23 +196,16 @@ object Aggregators {
    * Buffer = the pruned admit list, bounded by the in-window budget.
    */
   case class ThrottleDynBuf(admits: Seq[Long])
-  class ThrottleDynAgg extends Aggregator[(Long, Int, Long), ThrottleDynBuf, Long] {
-    def zero: ThrottleDynBuf = ThrottleDynBuf(Vector.empty)
-    def reduce(b: ThrottleDynBuf, in: (Long, Int, Long)): ThrottleDynBuf = {
+  def throttleDynAdmit(tsUs: Column, maximum: Column, intervalUs: Column): Column =
+    scan[(Long, Int, Long), ThrottleDynBuf, Long]("throttle_dyn_admit",
+        ThrottleDynBuf(Vector.empty),
+        Encoders.product[ThrottleDynBuf], Encoders.scalaLong) { (b, in) =>
       val (t, m, iv) = in
       val kept = b.admits.filter(_ + iv > t)
       val raw = if (kept.size >= m) kept(kept.size - m) + iv else t
       val admit = math.max(t, math.max(raw, kept.lastOption.getOrElse(Long.MinValue)))
       ThrottleDynBuf(kept :+ admit)
-    }
-    def merge(a: ThrottleDynBuf, b: ThrottleDynBuf): ThrottleDynBuf =
-      throw new UnsupportedOperationException("order-sensitive scan")
-    def finish(b: ThrottleDynBuf): Long = b.admits.last
-    def bufferEncoder: Encoder[ThrottleDynBuf] = Encoders.product[ThrottleDynBuf]
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
-  }
-  def throttleDynAdmit(tsUs: Column, maximum: Column, intervalUs: Column): Column =
-    udaf(new ThrottleDynAgg).apply(tsUs, maximum, intervalUs)
+    }(_.admits.last).apply(tsUs, maximum, intervalUs)
 
   /**
    * Bounded k-smallest collector: `collect_list` whose buffer can never
@@ -288,114 +263,16 @@ object Aggregators {
   def collectMinK(c: Column, cap: Int): Column =
     udaf(new BoundedMinAgg(cap)).apply(c)
 
-  /** Bounded per-group top-k by (score DESC, id ASC) — the
-    * sort-shuffle-sort deletion for the "best n candidates per query"
-    * shape: `row_number() OVER (PARTITION BY a ORDER BY s DESC, b)`
-    * followed by `rank <= n` sorts the ENTIRE scored-pair table (the
-    * single biggest stage of the PQ serving plan at the sf10 rung, 78M
-    * rows), while this aggregator's state is ≤ n (score, id) pairs per
-    * group at every point — map-side combine caps what the shuffle
-    * carries and nothing ever globally sorts. Output = the ids in rank
-    * order, EXACTLY the rows and order the window encoding kept:
-    *  - scores compare like Spark's float sort after
-    *    NormalizeFloatingNumbers: -0.0 canonicalizes to 0.0 and NaN
-    *    sorts LARGEST (java.lang.Double.compare does both once -0.0 is
-    *    canonicalized);
-    *  - ties break by id ascending (ids are unique per group — a
-    *    candidate pair appears once — so the order is total and
-    *    merge-order-independent).
-    * Buffers are kept sorted; reduce is one binary-free insertion into
-    * ≤ n elements, merge is one linear merge of two sorted runs. */
-  case class TopKBuf(var m: Int, scores: Array[Double], ids: Array[Long])
-  class TopKByScoreAgg(n: Int)
-      extends Aggregator[(Double, Long), TopKBuf, Seq[Long]] {
-    require(n >= 1, s"topKByScore: n must be >= 1, got $n")
-    @inline private def canon(s: Double): Double =
-      if (s == 0.0d) 0.0d else s
-    // true if (sa, ia) ranks strictly before (sb, ib)
-    @inline private def before(sa: Double, ia: Long, sb: Double, ib: Long): Boolean = {
-      val c = java.lang.Double.compare(sa, sb)
-      if (c != 0) c > 0 else ia < ib
-    }
-    def zero: TopKBuf =
-      TopKBuf(0, Array.emptyDoubleArray, Array.emptyLongArray)
-    // Arrays grow GEOMETRICALLY toward n (never allocated at n up
-    // front): n may legitimately be huge — an "unbounded" caller
-    // passes Int.MaxValue to mean "keep everything" — and the buffer
-    // must only ever be as large as what the group has actually kept.
-    // PRACTICAL BOUND on n: the sorted-insertion reduce is O(kept)
-    // per displacing row, so an effectively-unbounded n is only sane
-    // when groups are small (every production caller passes k ≤ a few
-    // hundred; the ranked-window form is the right encoding if you
-    // truly need all rows ranked). The doubling is computed in Long
-    // and clamped, so growth stays geometric at any n (r13 advice).
-    private def grown(b: TopKBuf, want: Int): TopKBuf =
-      if (b.scores.length >= want) b
-      else {
-        val doubled = math.min(n.toLong,
-          math.max(8L, b.scores.length.toLong * 2L)).toInt
-        val cap = math.max(want, doubled)
-        TopKBuf(b.m, java.util.Arrays.copyOf(b.scores, cap),
-          java.util.Arrays.copyOf(b.ids, cap))
-      }
-    // MUTATES the buffer in place (the ScalaAggregator/
-    // TypedImperativeAggregate contract keeps one live object per
-    // group; serialization happens only across shuffle/spill). The
-    // common case — a full buffer and a candidate no better than the
-    // current worst — costs ONE compare and no allocation, so the
-    // per-row cost over the quadratic pair table is a branch, not a
-    // Vector copy.
-    def reduce(b0: TopKBuf, x: (Double, Long)): TopKBuf = {
-      val s = canon(x._1)
-      if (b0.m >= n && !before(s, x._2, b0.scores(b0.m - 1), b0.ids(b0.m - 1))) b0
-      else {
-        val b = grown(b0, math.min(n, b0.m + 1))
-        var i = 0
-        while (i < b.m && !before(s, x._2, b.scores(i), b.ids(i))) i += 1
-        val last = math.min(b.m, n - 1)
-        System.arraycopy(b.scores, i, b.scores, i + 1, last - i)
-        System.arraycopy(b.ids, i, b.ids, i + 1, last - i)
-        b.scores(i) = s
-        b.ids(i) = x._2
-        if (b.m < n) b.m += 1
-        b
-      }
-    }
-    def merge(a: TopKBuf, b: TopKBuf): TopKBuf = {
-      val cap = math.min(n.toLong, a.m.toLong + b.m.toLong).toInt
-      val os = new Array[Double](cap)
-      val oi = new Array[Long](cap)
-      var i = 0; var j = 0; var k = 0
-      while (k < cap) {
-        if (j >= b.m ||
-            (i < a.m && before(a.scores(i), a.ids(i), b.scores(j), b.ids(j)))) {
-          os(k) = a.scores(i); oi(k) = a.ids(i); i += 1
-        } else {
-          os(k) = b.scores(j); oi(k) = b.ids(j); j += 1
-        }
-        k += 1
-      }
-      TopKBuf(cap, os, oi)
-    }
-    def finish(b: TopKBuf): Seq[Long] = b.ids.take(b.m).toSeq
-    def bufferEncoder: Encoder[TopKBuf] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
-  }
-
   /** `topKByScore(score, id, n)` — ids of the group's n best
-    * (score DESC, id ASC) rows, in rank order. Since round 14 this is
-    * the NATIVE [[TopKByScoreExpr]] (no per-row encoder boundary);
-    * [[topKByScoreUdaf]] keeps the typed-Aggregator encoding as the
-    * cross-check reference — PropertySpec pins both against the
-    * row_number window. */
+    * (score DESC, id ASC) rows, in rank order: the bounded-buffer
+    * replacement for `row_number() OVER (PARTITION BY g ORDER BY score
+    * DESC, id)` + `rank <= n`, which sorts the whole scored-pair table.
+    * The native [[TopKByScoreExpr]] over [[TopKOps]]; PropertySpec pins
+    * it against the row_number window. */
   def topKByScore(score: Column, id: Column, n: Int): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       TopKByScoreExpr(
         org.apache.spark.sql.graft.ColumnBridge.expression(score),
         org.apache.spark.sql.graft.ColumnBridge.expression(id), n)
         .toAggregateExpression())
-
-  /** The original typed-Aggregator encoding of [[topKByScore]]. */
-  def topKByScoreUdaf(score: Column, id: Column, n: Int): Column =
-    udaf(new TopKByScoreAgg(n)).apply(score, id)
 }

@@ -7,11 +7,9 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /**
- * Shared kernel of the bounded per-group top-k by (score DESC, id ASC)
- * — ONE implementation of the ordering, insertion, and merge used by
- * both the native expression below and the reference
- * [[Aggregators.TopKByScoreAgg]] udaf, so the two encodings cannot
- * drift (PropertySpec pins both against the `row_number` window).
+ * The ordering, in-place insertion and merge of the bounded per-group
+ * top-k by (score DESC, id ASC) behind [[TopKByScoreExpr]]
+ * (PropertySpec pins it against the `row_number` window).
  *
  * Ordering contract (matches Spark's float sort after
  * NormalizeFloatingNumbers): -0.0 canonicalizes to 0.0, NaN sorts
@@ -77,19 +75,16 @@ private[functions] object TopKOps {
 
 /**
  * NATIVE bounded per-group top-k — a `TypedImperativeAggregate` that
- * reads `score`/`id` straight off the input row. The original udaf
- * encoding ([[Aggregators.TopKByScoreAgg]]) is semantically identical
- * but pays a per-row encoder boundary (InternalRow → (Double, Long)
- * tuple via ExpressionEncoder) on the quadratic scored-pair tables —
- * a constant the sf10 sort deletion dwarfs but the gate-SF serve
- * paths still feel (the r14 REGSCAN watch item). Here update() is two
- * primitive reads + one [[TopKOps.insert]]; partial aggregation and
- * map-side combine work exactly as for any ImperativeAggregate, and
- * the shuffle carries the packed byte form of ≤ n (score, id) pairs.
+ * reads `score`/`id` straight off the input row, with no per-row
+ * encoder boundary (InternalRow → (Double, Long) tuple) on the
+ * quadratic scored-pair tables. update() is two primitive reads + one
+ * [[TopKOps.insert]]; partial aggregation and map-side combine work
+ * exactly as for any ImperativeAggregate, and the shuffle carries the
+ * packed byte form of ≤ n (score, id) pairs.
  *
  * Output = ids in rank order (score DESC, id ASC) — row-identical to
  * `row_number() OVER (PARTITION BY g ORDER BY score DESC, id)` +
- * `rank <= n` (PropertySpec pins all three encodings on adversarial
+ * `rank <= n` (PropertySpec pins the two encodings on adversarial
  * score sets: ties, ±0.0, NaN, ±∞, groups smaller than n, n = 1).
  * Null score/id rows never occur in the pair frames this serves
  * (scores are dot/norm arithmetic over dense fixtures); they are

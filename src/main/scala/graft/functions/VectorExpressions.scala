@@ -1,11 +1,38 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+
+/**
+ * The scaffold every unary kernel in this file shares: its SQL name,
+ * its output type, the input types it accepts (array element
+ * nullability is ignored), one failure message form
+ * "<name> needs <T>, got <type>", and null in → null out. A kernel adds
+ * only its constructor, `nullSafeEval`, `doGenCode` and
+ * `withNewChildInternal`. `Serializable` because Java deserialization
+ * of a kernel runs the no-arg constructor of the first non-serializable
+ * superclass, which must be `UnaryExpression`, not this one.
+ */
+abstract class Kernel(name: String, out: DataType, accepts: DataType*)
+    extends UnaryExpression with Serializable {
+  override def prettyName: String = name
+  override def dataType: DataType = out
+  override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val in = child.dataType match {
+      case ArrayType(e, _) => ArrayType(e)
+      case t => t
+    }
+    if (accepts.contains(in)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name needs ${accepts.map(_.sql).mkString(" or ")}, got ${child.dataType.sql}")
+  }
+}
 
 /**
  * Native codegen'd vector kernels.
@@ -116,18 +143,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
  * (SURVEY.md §7.2 step 9).
  */
 case class AsciiPolyHash(child: Expression, mult: Long, mod: Long)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "ascii_poly_hash"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ascii_poly_hash needs STRING, got ${child.dataType}")
+  extends Kernel("ascii_poly_hash", LongType, StringType) {
 
   override def nullSafeEval(input: Any): Any =
     AsciiPolyHash.fold(
@@ -175,20 +191,8 @@ object AsciiPolyHash {
  * and per shingle position), in a single codegen'd pass.
  */
 case class ShingleSids(child: Expression, k: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "shingle_sids"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_sids needs ARRAY<STRING>, got $other")
-    }
+  extends Kernel("shingle_sids", ArrayType(LongType, containsNull = false),
+    ArrayType(StringType)) {
 
   override def nullSafeEval(input: Any): Any =
     ShingleSids.kernel(input.asInstanceOf[ArrayData], k)
@@ -241,20 +245,8 @@ object ShingleSids {
  * signature stage becomes one narrow codegen'd pass.
  */
 case class MinHashSigs(child: Expression, numHashes: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_sigs"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_sigs needs ARRAY<BIGINT>, got $other")
-    }
+  extends Kernel("minhash_sigs", ArrayType(LongType, containsNull = false),
+    ArrayType(LongType)) {
 
   override def nullSafeEval(input: Any): Any =
     MinHashSigs.kernel(input.asInstanceOf[ArrayData], numHashes)
@@ -301,20 +293,7 @@ object MinHashSigs {
  * groupBy formulation, without the explode or either shuffle.
  */
 case class SimHashSig(child: Expression, nBits: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash_sig"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash_sig needs ARRAY<STRING>, got $other")
-    }
+  extends Kernel("simhash_sig", LongType, ArrayType(StringType)) {
 
   override def nullSafeEval(input: Any): Any =
     SimHashSig.kernel(input.asInstanceOf[ArrayData], nBits)
@@ -362,20 +341,8 @@ object SimHashSig {
  * pass over the corpus. Empty array → [0, 0, 0].
  */
 case class MultiplicityStats(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "mult_stats"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"mult_stats needs ARRAY<BIGINT>, got $other")
-    }
+  extends Kernel("mult_stats", ArrayType(LongType, containsNull = false),
+    ArrayType(LongType)) {
 
   override def nullSafeEval(input: Any): Any =
     MultiplicityStats.kernel(input.asInstanceOf[ArrayData])
@@ -423,20 +390,8 @@ object MultiplicityStats {
  * `term IN (...)` filter it replaces).
  */
 case class TermCounts(child: Expression, terms: Seq[String])
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "term_counts"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"term_counts needs ARRAY<STRING>, got $other")
-    }
+  extends Kernel("term_counts", ArrayType(LongType, containsNull = false),
+    ArrayType(StringType)) {
 
   @transient private lazy val utf8Terms: Array[org.apache.spark.unsafe.types.UTF8String] =
     terms.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray
@@ -493,18 +448,7 @@ object TermCounts {
  * are guaranteed by construction (codes < pqK, cells < nCells).
  */
 case class AdcLookup(table: Array[Double], child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "adc_lookup"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case IntegerType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"adc_lookup needs an int index, got $other")
-    }
+  extends Kernel("adc_lookup", DoubleType, IntegerType) {
 
   protected override def nullSafeEval(input: Any): Any =
     table(input.asInstanceOf[Int])
@@ -622,17 +566,15 @@ object MatRowDot {
  */
 case class NearestCells(child: Expression, cids: Array[Long],
     flat: Array[Double], dims: Int, norms: Array[Double], p: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  extends Kernel("nearest_cells", ArrayType(LongType, containsNull = false),
+    Seq(FloatType, DoubleType, LongType, IntegerType).map(ArrayType(_)): _*) {
 
   require(cids.nonEmpty && flat.length == cids.length * dims &&
     norms.length == cids.length && p >= 1,
     s"nearest_cells: ${cids.length} cells, dims $dims, p $p")
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   // Mismatched vector length → NULL even for non-null input.
   override def nullable: Boolean = true
-  override def prettyName: String = "nearest_cells"
 
   private def typeTag: Int = child.dataType match {
     case ArrayType(FloatType, _)   => 0
@@ -641,15 +583,6 @@ case class NearestCells(child: Expression, cids: Array[Long],
     case ArrayType(IntegerType, _) => 3
     case other => throw new IllegalStateException(s"nearest_cells: $other")
   }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType | LongType | IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_cells needs a numeric array, got $other")
-    }
 
   override def nullSafeEval(input: Any): Any = {
     val q = input.asInstanceOf[ArrayData]
@@ -861,18 +794,7 @@ object BpeSeg {
  * (the [[AdcLookup]] discipline — no per-reference literal copies).
  */
 case class BpeSegment(child: Expression, lhs: Array[String], rhs: Array[String])
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bpe_segment"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bpe_segment needs a string word, got $other")
-    }
+  extends Kernel("bpe_segment", ArrayType(StringType, containsNull = false), StringType) {
 
   // One indexed rule table per expression instance, shared by
   // reference across interpreted eval and every generated-code
@@ -996,18 +918,8 @@ object UnigramSeg {
  * [[BpeSegment]] apply discipline.
  */
 case class UnigramSegment(child: Expression, vocab: UnigramVocab)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "unigram_segment"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"unigram_segment needs a string word, got $other")
-    }
+  extends Kernel("unigram_segment", ArrayType(StringType, containsNull = false),
+    StringType) {
 
   protected override def nullSafeEval(input: Any): Any =
     UnigramSeg.segmentData(

@@ -1334,7 +1334,7 @@ object Similarity {
     * at the sf10 rung), while the aggregate's per-group state never
     * exceeds n rows and map-side combine caps what the shuffle
     * carries. Row-identical by the total order (score desc, b asc) —
-    * see [[graft.functions.Aggregators.TopKByScoreAgg]]. Since round
+    * see [[graft.functions.TopKByScoreExpr]]. Since round
     * 14 it backs EVERY per-query ranking in this file (brute force,
     * int8, IVF, serve, rerank, LSH) — the oracles keep the window
     * form, and the green hashes are the row-identity proof at each

@@ -209,22 +209,15 @@ object Streaming {
    * Streaming Throttle (`ops/timing.py:104-184`): values are never
    * dropped; each row's timestamp is rewritten to when the per-key
    * sliding-window rate limiter (`maximum` per `intervalSec`) admits
-   * it — the same semantics as the batch `EventStream.throttle` scan.
-   * State is the bounded list of the last `maximum` admitted times.
+   * it — the same admit function as the batch `EventStream.throttle`
+   * scan ([[graft.functions.Aggregators.throttleAdmitUs]]). Its FIFO
+   * clamp keeps `window` sorted ascending across micro-batches. State
+   * is the bounded list of the last `maximum` admitted times.
    */
   def throttleStream(events: Dataset[Ev], maximum: Int, intervalSec: Double): Dataset[Ev] = {
     val intervalUs = math.round(intervalSec * 1e6)
     scanRows(events, "admitted", Seq.empty[Long])(_.user_id, _.tsUs) { (_, window, ev) =>
-      // Arrival order is FIFO (reference queue, ops/timing.py:119-121):
-      // an admit never precedes the previous one, so clamping to the
-      // last admitted time keeps `window` sorted ascending across
-      // micro-batches — which indexing the (size-maximum)-th element
-      // relies on.
-      val floor = window.lastOption.getOrElse(Long.MinValue)
-      val rateFloor =
-        if (window.size < maximum) Long.MinValue
-        else window(window.size - maximum) + intervalUs
-      val admitTs = math.max(ev.tsUs, math.max(floor, rateFloor))
+      val admitTs = graft.functions.Aggregators.throttleAdmitUs(window, ev.tsUs, maximum, intervalUs)
       ((window :+ admitTs).takeRight(maximum), Some(Ev(ev.user_id, admitTs, ev.value)))
     }
   }

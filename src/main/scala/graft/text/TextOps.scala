@@ -142,27 +142,12 @@ object TextOps {
   /** One row per doc: minhash signature columns h0..h{n-1} over `sid`.
     * Edge-based (generic) formulation: use when shingles arrive as a
     * shuffled edge list. When they come straight from the text, prefer
-    * [[minhashSignaturesNarrow]] — same values, no shuffle. */
+    * [[minhashSigArray]] — same values, no shuffle. */
   def minhashSignatures(edges: DataFrame, idCol: String, numHashes: Int): DataFrame = {
     val aggs = (0 until numHashes).map { j =>
       min((col("sid") * aCoef(j) + bCoef(j)) % P).as(s"h$j")
     }
     edges.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Signatures computed per document row by the [[graft.functions.MinHashSigs]]
-    * codegen kernel — the sids never leave the row, so the whole stage is
-    * one narrow pass (no explode, no groupBy shuffle). Docs with no
-    * shingles are dropped, matching the edge-based groupBy. */
-  def minhashSignaturesNarrow(docs: DataFrame, idCol: String, textCol: String,
-      k: Int, numHashes: Int): DataFrame = {
-    val sigs = docs.select(col(idCol),
-      graft.functions.VectorFunctions.minhashSigs(
-        graft.functions.VectorFunctions.shingleSids(tokens(col(textCol)), k),
-        numHashes).as("__hs"))
-      .filter(size(col("__hs")) > 0)
-    sigs.select(col(idCol) +:
-      (0 until numHashes).map(j => element_at(col("__hs"), j + 1).as(s"h$j")): _*)
   }
 
   /**
@@ -307,7 +292,8 @@ object TextOps {
 
   /** Signature as ONE array column `__hs` (no h0..hN unpack): the
     * compact form [[lshBandsArr]] consumes. Same values as
-    * [[minhashSignaturesNarrow]]; docs with no shingles are dropped. */
+    * the h0..h{n-1} columns of [[minhashSignatures]]; docs with no
+    * shingles are dropped. */
   def minhashSigArray(docs: DataFrame, idCol: String, textCol: String,
       k: Int, numHashes: Int): DataFrame =
     docs.select(col(idCol),
@@ -442,22 +428,6 @@ object TextOps {
     val hitBatch = lshCandidatesCapped(batchBands, idCol, bucketCap)
       .select(col("b").as(idCol)).distinct()
     batch.join(broadcast(hitCorpus.union(hitBatch)), Seq(idCol), "left_anti")
-  }
-
-  // ------------------------------------------------------------------
-  // SimHash: nBits-bit signature over distinct unigram token ids.
-  // bit_k votes +1/-1 by ((id * (2k+7919)) mod 131071) mod 2.
-  // ------------------------------------------------------------------
-
-  def simhash(edges: DataFrame, idCol: String, nBits: Int): DataFrame = {
-    val withIds = edges
-    val bitAggs = (0 until nBits).map { k =>
-      val vote = when((col("sid") * (2L * k + 7919) % 131071L) % 2 === 1, 1L).otherwise(-1L)
-      (sum(vote) > 0).cast("long").as(s"b$k")
-    }
-    val withBits = withIds.groupBy(col(idCol)).agg(bitAggs.head, bitAggs.tail: _*)
-    val sig = (0 until nBits).map(k => col(s"b$k") * (1L << k)).reduce(_ + _)
-    withBits.select(col(idCol), sig.as("simhash"))
   }
 
   // ------------------------------------------------------------------

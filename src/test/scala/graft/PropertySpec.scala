@@ -876,17 +876,6 @@ class PropertySpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(agg == win, s"top-$n mismatch: " +
         s"agg-only ${agg -- win}, win-only ${win -- agg}")
-      // third leg: the original typed-Aggregator (udaf) encoding — the
-      // native TypedImperativeAggregate and the udaf must both equal
-      // the window, so the shared TopKOps kernel cannot drift
-      val ud = df.groupBy("a")
-        .agg(graft.functions.Aggregators.topKByScoreUdaf(
-          col("pqcos"), col("b"), n).as("t"))
-        .select(col("a"), posexplode(col("t")).as(Seq("p", "b")))
-        .select(col("a"), (col("p") + 1).cast("long").as("rank"), col("b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(ud == win, s"top-$n udaf mismatch: " +
-        s"udaf-only ${ud -- win}, win-only ${win -- ud}")
     }
   }
 }

@@ -571,6 +571,84 @@ class TextSimilaritySpec extends SparkSpec {
     assert(r.isNullAt(0))
   }
 
+  test("custom kernels: codegen and interpreted rows agree; a wrong input type fails by name") {
+    import graft.functions.{UnigramVocab, VectorFunctions => VF}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // every 10th row is null in every column; NearestCells/VecDot see a
+    // short vector on every 8th row. Pinned first, so the kernels run
+    // over a scan (a local relation would fold them on the driver).
+    def nul(c: org.apache.spark.sql.Column) = when(col("id") % 10 =!= 9, c)
+    val in = spark.range(0, 64, 1, 2).select(col("id"),
+      nul((col("id") % 7).cast("int")).as("i"), nul((col("id") % 5).cast("int")).as("j"),
+      nul(concat(lit("w"), (col("id") % 3).cast("string"), lit("ab"))).as("w"),
+      nul(transform(sequence(lit(0), (col("id") % 6).cast("int")),
+        x => concat(lit("t"), ((col("id") + x) % 4).cast("string")))).as("toks"),
+      nul(transform(sequence(lit(1), when(col("id") % 8 === 0, 3).otherwise(4)),
+        x => ((col("id") * x) % 9 - 4).cast("float"))).as("v"),
+      nul(transform(sequence(lit(1), lit(4)), x => ((col("id") + x) % 5).cast("double"))).as("u"),
+      nul(transform(sequence(lit(0), (col("id") % 9).cast("int")),
+        x => (col("id") * 31 + x * 7) % 11)).as("ids"))
+      .localCheckpoint()
+    val kernels = Seq(
+      "ascii_poly_hash" -> (VF.asciiPolyHash(col("w"), 31L, 1000000007L),
+        VF.asciiPolyHash(col("id"), 31L, 1000000007L)),
+      "shingle_sids" -> (VF.shingleSids(col("toks"), 2), VF.shingleSids(col("w"), 2)),
+      "minhash_sigs" -> (VF.minhashSigs(col("ids"), 6), VF.minhashSigs(col("toks"), 6)),
+      "simhash_sig" -> (VF.simhashSig(col("toks"), 16), VF.simhashSig(col("ids"), 16)),
+      "mult_stats" -> (VF.multStats(col("ids")), VF.multStats(col("toks"))),
+      "term_counts" -> (VF.termCounts(col("toks"), Seq("t0", "t2", "zz")),
+        VF.termCounts(col("ids"), Seq("t0"))),
+      "adc_lookup" -> (VF.adcLookup(Array.tabulate(7)(_ * 0.5), col("i")),
+        VF.adcLookup(Array(0.0), col("id"))),
+      "nearest_cells" -> {
+        val cents = Seq(1L -> Array(1.0, 0, 0, 0), 2L -> Array(0, 1.0, 0, 0),
+          3L -> Array(1.0, 1, 1, 1))
+        (VF.nearestCells(col("v"), cents, 2), VF.nearestCells(col("w"), cents, 2))
+      },
+      "bpe_segment" -> (VF.bpeSegment(col("w"), Array("w", "a"), Array("1", "b")),
+        VF.bpeSegment(col("i"), Array("w"), Array("1"))),
+      "unigram_segment" -> {
+        val vocab = new UnigramVocab(Array("w1", "ab", "b"), Array(3L, 2L, 1L))
+        (VF.unigramSegment(col("w"), vocab), VF.unigramSegment(col("i"), vocab))
+      },
+      "vec_dot" -> (VF.vecDot(col("v"), col("u")), VF.vecDot(col("w"), col("u"))),
+      "mat_row_dot" -> (VF.matRowDot(Array.tabulate(21)(k => k % 5 - 2.0), 3, col("i"), col("j")),
+        VF.matRowDot(Array(0.0), 1, col("w"), col("j"))))
+    val out = in.select(col("id") +: kernels.map { case (n, (k, _)) => k.as(n) }: _*)
+
+    def run(codegen: Boolean): Seq[org.apache.spark.sql.Row] = {
+      val confs = Map(
+        "spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
+        "spark.sql.codegen.fallback" -> "false")
+      val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val df = out.select("*") // fresh plan under these confs
+        val fused = df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
+        assert(fused == codegen, s"codegen=$codegen but whole-stage fused=$fused")
+        df.collect().sortBy(_.getLong(0)).toSeq
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val compiled = run(codegen = true)
+    val interpreted = run(codegen = false)
+    assert(compiled.size == 64)
+    kernels.map(_._1).zipWithIndex.foreach { case (n, c) =>
+      assert(compiled.map(_.get(c + 1)) == interpreted.map(_.get(c + 1)),
+        s"$n: codegen and interpreted rows differ")
+      assert(compiled.exists(!_.isNullAt(c + 1)) && compiled.exists(_.isNullAt(c + 1)),
+        s"$n: expected both null and non-null rows")
+    }
+    kernels.foreach { case (n, (_, wrong)) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](in.select(wrong))
+      assert(e.getMessage.contains(s"$n needs"), s"$n: ${e.getMessage}")
+    }
+    in.unpersist()
+  }
+
   test("ascii_poly_hash folds codepoints (not UTF-8 bytes) for non-ASCII") {
     graft.plans.GraftExtensions.register(spark)
     val got = spark.sql("SELECT ascii_poly_hash('café', 31L, 1000000007L)")

@@ -9,6 +9,7 @@
 #   streaming: code lines of src/main/scala/graft/streaming/*.scala, same rule
 #   probes  : code lines of src/test/scala/graft/probe/*.scala, same rule
 #   obs     : code lines of src/main/scala/graft/obs/*.scala, same rule
+#   functions: code lines of src/main/scala/graft/functions/*.scala, same rule
 cd "$(dirname "$0")/.." || exit 1
 q=$(grep -oh 'Q("q_[a-z0-9_]*"' src/main/scala/graft/queries/*.scala | sort -u | wc -l)
 t=$(grep -rhoE '^\s+(test|property)\(' src/test/scala --include='*.scala' | wc -l)
@@ -17,9 +18,11 @@ e=$(cat src/main/scala/graft/engine/*.scala | grep -cvE "$code")
 s=$(cat src/main/scala/graft/streaming/*.scala | grep -cvE "$code")
 p=$(cat src/test/scala/graft/probe/*.scala | grep -cvE "$code")
 o=$(cat src/main/scala/graft/obs/*.scala | grep -cvE "$code")
+f=$(cat src/main/scala/graft/functions/*.scala | grep -cvE "$code")
 echo "queries: $q"
 echo "tests:   $t (registration sites; trust sbt's own total if they differ)"
 echo "engine:  $e code lines (src/main/scala/graft/engine/*.scala)"
 echo "streaming: $s code lines (src/main/scala/graft/streaming/*.scala)"
 echo "probes:  $p code lines (src/test/scala/graft/probe/*.scala)"
 echo "obs:     $o code lines (src/main/scala/graft/obs/*.scala)"
+echo "functions: $f code lines (src/main/scala/graft/functions/*.scala)"
