@@ -352,6 +352,7 @@ final case class EventStream(
    * Sample (`ops/timing.py:187-211`): at each row of `timer`, the latest
    * source value at-or-before that time. Encoded as union + running
    * last(ignoreNulls) over event time — one sorted pass per key, no join.
+   * For a regular timer, [[sampleEvery]] builds no timer rows at all.
    */
   def sample(timer: EventStream, valueCols: Seq[String]): EventStream = {
     val srcTagged = df.withColumn("__t", lit(0))
@@ -367,6 +368,43 @@ final case class EventStream(
     }
     derive(filled.filter(col("__t") === 1 && valueCols.map(col(_).isNotNull).reduce(_ && _))
       .drop("__t"))
+  }
+
+  /**
+   * Sample on a regular timer: the same rule as [[sample]] for the ticks
+   * `t0 + k·stepUs` (k ≥ 1, tick ≤ t1), where `grid` is a one-row frame
+   * holding the timestamps `t0` and `t1`. Each key gets every tick at or
+   * after its first row. Output: keys, tick time in `tsCol`, k in
+   * `seqCol`, and the latest non-null value of each `valueCols` column.
+   *
+   * Encoding: no key × tick timer. Sorted by (ts, seq) within a key, row
+   * r owns the ticks in [ts(r), ts(r+1)) — the ticks whose latest row
+   * at-or-before is r — and the last row owns the rest of the grid. The
+   * range of k comes from exact integer division against `t0`, so each
+   * row explodes only its own ticks: one sorted pass per key, the grid
+   * bounds broadcast.
+   */
+  def sampleEvery(grid: DataFrame, stepUs: Long, valueCols: Seq[String]): EventStream = {
+    require(stepUs > 0, s"stepUs must be positive, got $stepUs")
+    // exact integer ceil/floor of a / stepUs for any sign of a
+    def ceilK(a: String) = s"(($a) + pmod(-($a), ${stepUs}L)) div ${stepUs}L"
+    def floorK(a: String) = s"(($a) - pmod($a, ${stepUs}L)) div ${stepUs}L"
+    val wRows = wTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val rows = df.select(keyCols ++ Seq(col(seqCol), unix_micros(col(tsCol)).as("__t")) ++
+      valueCols.map(c => last_value(col(c), lit(true)).over(wRows).as(c)) :+
+      unix_micros(lead(col(tsCol), 1).over(wTime)).as("__next"): _*)
+    val owned = rows
+      .filter(valueCols.map(col(_).isNotNull).reduce(_ && _))
+      .crossJoin(broadcast(grid.select(
+        unix_micros(col("t0")).as("__t0"), unix_micros(col("t1")).as("__t1"))))
+      .withColumn("__klo", expr(s"greatest(1L, ${ceilK("__t - __t0")})"))
+      .withColumn("__khi", expr(s"least(${floorK("__t1 - __t0")}, " +
+        s"coalesce(${ceilK("__next - __t0")} - 1, ${Long.MaxValue}L))"))
+      .filter(col("__khi") >= col("__klo"))
+    derive(owned.select(keyCols ++ (explode(sequence(col("__klo"), col("__khi"))).as(seqCol) +:
+        valueCols.map(col)) :+ col("__t0"): _*)
+      .withColumn(tsCol, timestamp_micros(col("__t0") + col(seqCol) * stepUs))
+      .select(keyCols ++ (col(seqCol) +: col(tsCol) +: valueCols.map(col)): _*))
   }
 
   /**
@@ -569,13 +607,16 @@ object EventStream {
      * emission of ANY later child (golden test
      * `tests/transform_test.py:135-146`). kill(k) = min over later
      * children of their first emission time; a row passes iff its child
-     * ts <= kill (ties resolve in scan order, earlier child first).
+     * ts <= kill (ties resolve in scan order, earlier child first). The
+     * kill is a running min over the parents in reverse creation order
+     * that stops before the current parent: linear per key.
      */
     final case class Concat(childTsField: String) extends Joiner {
       def apply(p: EventStream, children: Column): (DataFrame, Seq[Column]) = {
         val firstC = array_min(transform(children, c => c.getField(childTsField)))
-        val kill = min(firstC).over(p.w.rowsBetween(1, Window.unboundedFollowing))
-        val d = p.df.withColumn("__kill", kill)
+        val later = Window.partitionBy(p.keys.map(col): _*).orderBy(col(p.seqCol).desc)
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val d = p.df.withColumn("__kill", min(firstC).over(later))
           .withColumn("__child", explode(children))
           .filter(col("__kill").isNull || col(s"__child.$childTsField") <= col("__kill"))
           .drop("__kill")
@@ -749,36 +790,45 @@ object EventStream {
    * source i therefore passes iff ts <= kill(i), where kill(i) = min
    * first-emission time over sources j > i (a row at the kill instant is
    * processed before its killer in (ts, src) scan order, so it still
-   * passes). The per-(key,src) firsts table is tiny → broadcast.
+   * passes). Each source's first emission time is a whole-partition
+   * `min` over the output-seq sort, so the kill, the filter and the
+   * output stamp are one sorted pass per key.
    */
   def concat(ss: Seq[EventStream], srcAs: String, outSeqAs: String): EventStream = {
     val h = ss.head
-    val u = tagged(ss, srcAs)
-    val kills = u.groupBy((h.keys :+ srcAs).map(col): _*)
-      .agg(min(col(h.tsCol)).as("__first"))
-      .withColumn("__kill", min(col("__first")).over(
-        Window.partitionBy(h.keys.map(col): _*).orderBy(col(srcAs))
-          .rowsBetween(1, Window.unboundedFollowing)))
-      .drop("__first")
-    val joined = u.join(broadcast(kills), h.keys :+ srcAs)
-      .filter(col("__kill").isNull || col(h.tsCol) <= col("__kill"))
-      .drop("__kill")
     val wOut = Window.partitionBy(h.keys.map(col): _*)
       .orderBy(col(h.tsCol), col(srcAs), col(h.seqCol))
-    h.derive(joined.withColumn(outSeqAs, row_number().over(wOut).cast("long")))
+    val wAll = wOut.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val firsts = ss.indices.map(j => min(when(col(srcAs) === j, col(h.tsCol))).over(wAll))
+    // least() skips NULLs: a source that never emits kills nothing
+    def earliest(cs: Seq[Column]): Column =
+      if (cs.size == 1) cs.head else least(cs: _*)
+    val kill = bySource(srcAs, ss.indices.init.map(i => earliest(firsts.drop(i + 1))))
+    val passed = tagged(ss, srcAs).withColumn("__kill", kill)
+      .filter(col("__kill").isNull || col(h.tsCol) <= col("__kill"))
+      .drop("__kill")
+    h.derive(passed.withColumn(outSeqAs, row_number().over(wOut).cast("long")))
   }
+
+  /** `perSource(i)` on rows of source `i`, NULL on sources it has no
+    * entry for. Sources are tagged `0..N-1` and N is static: a CASE. */
+  private def bySource(srcAs: String, perSource: Seq[Column]): Column =
+    perSource.zipWithIndex.foldRight(lit(null): Column) { case ((c, i), rest) =>
+      when(col(srcAs) === i, c).otherwise(rest)
+    }
 
   /**
    * Zip (`ops/combine.py:219-261`): positional pairing on the per-key
    * occurrence index; inner semantics end at the shortest source.
    *
-   * Encoding: tag + union, ONE window pass stamps the per-(key, source)
-   * occurrence index, and ONE (key, index) aggregation pivots each pair
-   * onto a single row (`max(when(src=...))` — exactly one row per
+   * Encoding: tag + union, ONE window pass per key stamps each row's
+   * per-source occurrence index (a running count of its own source's
+   * rows), and ONE (key, index) aggregation pivots each pair onto a
+   * single row (`max(when(src=...))` — exactly one row per
    * (key, index, source), so the "aggregate" is a deterministic pick).
-   * Two full-data exchanges total; the previous per-side index windows
-   * + equi-join shape paid four. Presence counters give the inner-join
-   * cut without relying on payload nullability.
+   * The window's key exchange already clusters the pivot by key, so the
+   * whole zip is one full-data exchange. Presence counters give the
+   * inner-join cut without relying on payload nullability.
    */
   def zip(a: EventStream, b: EventStream, idxAs: String): EventStream = {
     val bCols = b.df.columns.diff(a.keys)
@@ -792,9 +842,11 @@ object EventStream {
     val bR = bCols.foldLeft(b.df)((d, c) => d.withColumnRenamed(c, s"${c}_r"))
     val u = a.df.withColumn("__zsrc", lit(0))
       .unionByName(bR.withColumn("__zsrc", lit(1)), allowMissingColumns = true)
-    val wIdx = Window.partitionBy((a.keys :+ "__zsrc").map(col): _*)
-      .orderBy(coalesce(col(a.seqCol), col(s"${b.seqCol}_r")))
-    val stamped = u.withColumn(idxAs, row_number().over(wIdx).cast("long"))
+    val wIdx = Window.partitionBy(a.keys.map(col): _*)
+      .orderBy(coalesce(col(a.seqCol), col(s"${b.seqCol}_r")), col("__zsrc"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val seen = Seq(0, 1).map(s => count(when(col("__zsrc") === s, 1)).over(wIdx))
+    val stamped = u.withColumn(idxAs, when(col("__zsrc") === 0, seen(0)).otherwise(seen(1)))
     val aData = a.df.columns.diff(a.keys)
     val aggs = (aData.map(c => max(when(col("__zsrc") === 0, col(c))).as(c)) ++
       bCols.map(c => max(when(col("__zsrc") === 1, col(s"${c}_r"))).as(s"${c}_r")) :+
@@ -820,35 +872,29 @@ object EventStream {
    *   pass = isFirst  OR  src = last(if(isFirst, src)) IGNORE NULLS
    *                       over (unbounded preceding → 1 before current)
    *
-   * which is a single built-in window aggregate over the same sort the
-   * output-seq stamp uses (one sort, whole-stage-codegen'd) — measured
-   * ~2× the throughput of the equivalent custom Aggregator scan, whose
-   * per-row typed-udaf boxing made q_switch the slowest combine query.
-   * Only ever-active sources are ever REMOVED, so a non-active source
-   * that emits is un-removed exactly when this is its first emission —
+   * A row is its source's first emission exactly when no earlier row of
+   * the same source exists in the (ts, src, seq) scan order — a running
+   * count of that source's rows over the same frame, picked by `src`.
+   * The first-emission mark, the holder and the output-seq stamp all
+   * share one sort per key (built-in window aggregates, ~2× the
+   * throughput of the equivalent custom Aggregator scan, whose per-row
+   * typed-udaf boxing made q_switch the slowest combine query). Only
+   * ever-active sources are ever REMOVED, so a non-active source that
+   * emits is un-removed exactly when this is its first emission —
    * verified against the reference's switch/switchmap golden tests.
    */
   def switch(ss: Seq[EventStream], srcAs: String, outSeqAs: String): EventStream = {
     val h = ss.head
-    val u = tagged(ss, srcAs)
-    // First emission per (key, source) = the first row the (ts, seq)-
-    // ordered scan meets, i.e. min(struct(ts, seq)) lexicographic — NOT
-    // min(seq), which diverges if ts is ever non-monotone in seq. A
-    // partial-aggregated min + broadcast join replaces a second full
-    // (key, source)-sorted window pass — map-side combine shrinks the
-    // agg to one row per key×source before its exchange.
-    val firsts = u.groupBy((h.keys :+ srcAs).map(col): _*)
-      .agg(min(struct(col(h.tsCol), col(h.seqCol))).as("__f"))
     val wt = Window.partitionBy(h.keys.map(col): _*)
       .orderBy(col(h.tsCol), col(srcAs), col(h.seqCol))
-    val holderBefore = last(when(col("__isfirst"), col(srcAs)), ignoreNulls = true)
-      .over(wt.rowsBetween(Window.unboundedPreceding, -1))
-    h.derive(u
-      .join(broadcast(firsts), h.keys :+ srcAs)
-      .withColumn("__isfirst",
-        struct(col(h.tsCol), col(h.seqCol)) === col("__f"))
+    val wBefore = wt.rowsBetween(Window.unboundedPreceding, -1)
+    val seenBefore = bySource(srcAs,
+      ss.indices.map(i => count(when(col(srcAs) === i, 1)).over(wBefore)))
+    val holderBefore = last(when(col("__isfirst"), col(srcAs)), ignoreNulls = true).over(wBefore)
+    h.derive(tagged(ss, srcAs)
+      .withColumn("__isfirst", seenBefore === 0)
       .withColumn("__pass", col("__isfirst") || col(srcAs) === holderBefore)
-      .filter(col("__pass")).drop("__pass", "__isfirst", "__f")
+      .filter(col("__pass")).drop("__pass", "__isfirst")
       .withColumn(outSeqAs, row_number().over(wt).cast("long")))
   }
 

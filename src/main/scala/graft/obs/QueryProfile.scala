@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
@@ -16,7 +17,8 @@ import org.apache.spark.storage.RDDBlockId
  * What a query costs the scheduler, read from inside the program:
  * [[QueryProfile.run]] wraps any body (building a query, executing
  * it, or both) and returns its jobs, stages, tasks, shuffle, spill,
- * peak execution memory and the checkpoint bytes it left pinned.
+ * peak execution memory, the checkpoint bytes it left pinned and the
+ * generated classes compiled meanwhile.
  *
  * Jobs are attributed through a job tag (Spark's nestable job group):
  * every job `body` schedules, on its own thread or on a thread it
@@ -33,18 +35,24 @@ object QueryProfile {
 
   final case class Record(label: String, wallSeconds: Double, jobs: Seq[Job], stages: Seq[Stage],
       shuffleReadBytes: Long, shuffleReadRecords: Long, shuffleWriteBytes: Long,
-      shuffleWriteRecords: Long, spillBytes: Long, peakExecutionMemory: Long, pinnedBytes: Long) {
+      shuffleWriteRecords: Long, spillBytes: Long, peakExecutionMemory: Long, pinnedBytes: Long,
+      codegenCompiles: Long) {
     def tasks: Int = stages.map(_.tasks).sum
     def summary: String = {
       def mb(b: Long) = f"${b / 1048576.0}%.1f MB"
       f"$label: $wallSeconds%.2f s, ${jobs.size} jobs, ${stages.size} stages, $tasks tasks, " +
         s"shuffle write ${mb(shuffleWriteBytes)} ($shuffleWriteRecords rows), " +
         s"read ${mb(shuffleReadBytes)} ($shuffleReadRecords rows), spill ${mb(spillBytes)}, " +
-        s"peak task memory ${mb(peakExecutionMemory)}, left pinned ${mb(pinnedBytes)}"
+        s"peak task memory ${mb(peakExecutionMemory)}, left pinned ${mb(pinnedBytes)}, " +
+        s"$codegenCompiles compiles"
     }
   }
 
-  /** Runs `body` under a fresh job tag and profiles the jobs it scheduled. */
+  /** Runs `body` under a fresh job tag and profiles the jobs it scheduled.
+    * `codegenCompiles` counts every class the JVM's code generator
+    * compiled between the start of `body` and the fence, for planning and
+    * for local tasks alike (a compile on another thread of the same JVM
+    * in that span counts too). A cache hit compiles nothing. */
   def run(spark: SparkSession, label: String)(body: => Any): Record = {
     val sc = spark.sparkContext
     val l = listener(sc)
@@ -52,6 +60,7 @@ object QueryProfile {
     val acc = l.open(tag)
     try {
       val before = sc.getPersistentRDDs.keySet
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       sc.addJobTag(tag)
       try body finally sc.removeJobTag(tag)
@@ -59,7 +68,8 @@ object QueryProfile {
       sc.addJobTag(s"$tag-fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(s"$tag-fence")
       acc.fenced.await(60, TimeUnit.SECONDS)
-      l.record(acc, label, wall, sc.getPersistentRDDs.keySet.filterNot(before))
+      l.record(acc, label, wall, sc.getPersistentRDDs.keySet.filterNot(before),
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
     } finally l.close(tag, sc.getPersistentRDDs.keySet)
   }
 
@@ -134,13 +144,14 @@ object QueryProfile {
       rddBlocks.filterInPlace((b, _) => persisted.contains(b.rddId))
     }
 
-    def record(a: Acc, label: String, wall: Double, newRdds: collection.Set[Int]): Record =
+    def record(a: Acc, label: String, wall: Double, newRdds: collection.Set[Int],
+        compiles: Long): Record =
       synchronized {
         val jobs = a.jobs.values.toSeq.map(j => Job(j.id, j.description, j.stages, j.tasks,
           if (j.endMs < 0) -1.0 else (j.endMs - j.startMs) / 1e3))
         val pinned = rddBlocks.collect { case (b, n) if newRdds.contains(b.rddId) => n }.sum
         Record(label, wall, jobs, a.stages.toSeq, a.shRead, a.shReadRec, a.shWrite,
-          a.shWriteRec, a.spill, a.peak, pinned)
+          a.shWriteRec, a.spill, a.peak, pinned, compiles)
       }
 
     private def tags(p: java.util.Properties): Seq[String] =

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.LongType
  * Pattern matched: an INNER join whose whole condition is the two-sided
  * bound `lo <= p AND p <= hi` (either comparison direction, either
  * join side holding the bounds) over LongType attributes, bounds both
- * from one side and the point from the other. The rewrite mirrors
- * IntervalJoin.pointsInIntervals exactly:
+ * from one side and the point from the other. The rewrite uses the
+ * bucketing of IntervalJoin.pointsInIntervals (which is a left join;
+ * this rewrite stays inner):
  *
  *   - interval side gains `explode(sequence(lo div W, hi div W, 1))`
  *     (explicit step 1: an empty interval yields an EMPTY bucket array,

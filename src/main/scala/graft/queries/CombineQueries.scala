@@ -212,20 +212,14 @@ object CombineQueries {
     Q("q_sample",
       // At each daily tick (grid derived from the data), the latest event
       // value per user at-or-before the tick. A span shorter than the first
-      // tick has no grid (`sequence` would run backwards and throw; the
-      // oracle's generate_series is empty there).
+      // tick has no grid (the oracle's generate_series is empty there).
+      // The regular-timer Sample: each event owns the ticks up to the
+      // user's next event, so no user × tick timer is built.
       (s, d) => {
         val base = ev(s, d)
-        val mm = base.df.agg(
+        val grid = base.df.agg(
           date_trunc("day", min(col("ts"))).as("t0"), max(col("ts")).as("t1"))
-        val ticks = base.df.select(col("user_id")).distinct()
-          .crossJoin(broadcast(mm))
-          .select(col("user_id"),
-            explode(expr("CASE WHEN t0 + INTERVAL 1 DAY <= t1 THEN " +
-              "sequence(t0 + INTERVAL 1 DAY, t1, INTERVAL 1 DAY) END")).as("ts"))
-          .withColumn("seq", lit(Long.MaxValue))
-        val timer = EventStream(ticks, keys = Seq("user_id"))
-        base.sample(timer, Seq("cents"))
+        base.sampleEvery(grid, 86400000000L, Seq("cents"))
           .df.select(col("user_id"), unix_micros(col("ts")).as("tick_us"), col("cents"))
       },
       s"$EV, mm AS (SELECT date_trunc('day', min(ts)) AS t0, max(ts) AS t1 FROM ev), " +

@@ -809,46 +809,49 @@ object RelationalQueries {
       // NULL outside the observed span (no extrapolation). Weight form
       // (prev·(next_tm-tm) + next·(tm-prev_tm)) div (next_tm-prev_tm)
       // keeps every operand nonnegative, so integer division is
-      // engine-agnostic (no floor-vs-truncate edge). ONE keyed
-      // union-window scan: both IGNORE-NULLS range frames share the
-      // same partitioning and sort — no join, no range join.
+      // engine-agnostic (no floor-vs-truncate edge). ONE sorted pass per
+      // event_type: a tick is the max non-NULL cents of its instant (a
+      // peer-range frame) kept once per instant, and each tick explodes
+      // the grid hours in [tm, next_tm) it opens — the first tick also
+      // the hours before it (NULL), the last tick its own hour and the
+      // hours after it (NULL). Every frame is linear: none runs to
+      // UNBOUNDED FOLLOWING from a moving row.
       (s, d) => {
         val e = EventQueries.ev(s, d).df
-          .select(col("event_type"), col("ts"), col("cents"))
-        val ticks = e.groupBy(col("event_type"),
-            expr("unix_micros(ts)").as("tm"))
-          .agg(max(col("cents")).as("c"))
+          .select(col("event_type"), expr("unix_micros(ts)").as("tm"), col("cents"))
         val hb = e.agg(
-          expr("min(unix_micros(ts)) div 3600000000").as("h0"),
-          expr("max(unix_micros(ts)) div 3600000000").as("h1"))
-        val grid = e.select("event_type").distinct()
-          .crossJoin(broadcast(hb))
-          .select(col("event_type"),
-            explode(sequence(col("h0"), col("h1"))).as("h"))
-          .withColumn("tm", expr("h * 3600000000"))
-        val comb = ticks.select(col("event_type"), col("tm"), col("c"),
-            lit(null).cast("long").as("h"))
-          .unionByName(grid.select(col("event_type"), col("tm"),
-            lit(null).cast("long").as("c"), col("h")))
-        val wPrev = Window.partitionBy("event_type").orderBy("tm")
-          .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-        val wNext = Window.partitionBy("event_type").orderBy("tm")
-          .rangeBetween(Window.currentRow, Window.unboundedFollowing)
-        comb
-          .withColumn("prev_c", last(col("c"), ignoreNulls = true).over(wPrev))
-          .withColumn("prev_tm",
-            last(when(col("c").isNotNull, col("tm")), ignoreNulls = true).over(wPrev))
-          .withColumn("next_c", first(col("c"), ignoreNulls = true).over(wNext))
-          .withColumn("next_tm",
-            first(when(col("c").isNotNull, col("tm")), ignoreNulls = true).over(wNext))
-          .filter(col("h").isNotNull)
-          .withColumn("interp_c",
-            when(col("prev_tm").isNull || col("next_tm").isNull,
-              lit(null).cast("long"))
-              .when(col("next_tm") === col("prev_tm"), col("prev_c"))
-              .otherwise(expr("(prev_c * (next_tm - tm) + next_c * (tm - prev_tm)) " +
-                "div (next_tm - prev_tm)")))
-          .select(col("event_type"), col("h"), col("interp_c"))
+          expr("min(tm) div 3600000000").as("h0"),
+          expr("max(tm) div 3600000000").as("h1"))
+        val w = Window.partitionBy("event_type").orderBy("tm")
+        // An instant whose cents are all NULL is no tick; a type without
+        // any tick keeps one row, which spreads NULL over the whole grid.
+        val ticks = e
+          .withColumn("c", max(col("cents")).over(w.rangeBetween(Window.currentRow,
+            Window.currentRow)))
+          .withColumn("any_c", max(col("cents")).over(w.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing)))
+          .withColumn("dup", lag(col("tm"), 1).over(w) === col("tm"))
+          .filter(!coalesce(col("dup"), lit(false)) &&
+            (col("c").isNotNull || col("any_c").isNull))
+          .withColumn("prev_tm", lag(col("tm"), 1).over(w))
+          .withColumn("next_tm", lead(col("tm"), 1).over(w))
+          .withColumn("next_c", lead(col("c"), 1).over(w))
+        // hour of the first grid point at or after x (x >= 0)
+        def ceilH(x: String) = s"($x + 3599999999) div 3600000000"
+        ticks.crossJoin(broadcast(hb))
+          .withColumn("lo_h", expr(s"CASE WHEN prev_tm IS NULL THEN h0 " +
+            s"ELSE ${ceilH("tm")} END"))
+          .withColumn("hi_h", expr(s"CASE WHEN next_tm IS NULL THEN h1 " +
+            s"ELSE ${ceilH("next_tm")} - 1 END"))
+          .filter(col("hi_h") >= col("lo_h")) // sequence() counts down on inverted bounds
+          .withColumn("h", explode(sequence(col("lo_h"), col("hi_h"))))
+          .withColumn("g", expr("h * 3600000000"))
+          .select(col("event_type"), col("h"),
+            when(col("g") < col("tm"), lit(null).cast("long"))
+              .when(col("g") === col("tm"), col("c"))
+              .when(col("next_tm").isNull, lit(null).cast("long"))
+              .otherwise(expr("(c * (next_tm - g) + next_c * (g - tm)) " +
+                "div (next_tm - tm)")).as("interp_c"))
       },
       EventQueries.EV + ", " +
         "ticks AS (SELECT event_type, epoch_us(ts) AS tm, max(cents) AS c " +
@@ -909,8 +912,10 @@ object RelationalQueries {
       // flights, trades × halts, events × sessions). Spark would plan
       // the raw `BETWEEN` predicate as a broadcast-nested-loop; the
       // operator bins both sides to 1-hour buckets so it becomes one
-      // equi-join shuffle with exactly-once pairs (a window spans ≤ 25
-      // buckets, a point exactly one). Time compares as integer micros.
+      // equi-join with exactly-once pairs (a window spans ≤ 25 buckets,
+      // a point exactly one). The join keeps windows without a purchase,
+      // so one join and one count per window give the result.
+      // Time compares as integer micros.
       (s, d) => {
         val e = Tables.events(s, d)
           .select(col("user_id"), col("event_type"),
@@ -919,13 +924,10 @@ object RelationalQueries {
           .agg(min("tu").as("lo"), max("tu").as("hi"))
         val pts = e.filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user"), col("tu"))
-        val matched = graft.engine.IntervalJoin
+        graft.engine.IntervalJoin
           .pointsInIntervals(iv, pts, "lo", "hi", "tu", 3600000000L)
-          .filter(col("p_user") =!= col("user_id"))
-          .groupBy("user_id", "day").agg(count(lit(1)).as("__n"))
-        iv.join(matched, Seq("user_id", "day"), "left")
-          .select(col("user_id"), col("day"), col("lo"), col("hi"),
-            coalesce(col("__n"), lit(0L)).as("n_other_purchases"))
+          .groupBy("user_id", "day", "lo", "hi")
+          .agg(count(when(col("p_user") =!= col("user_id"), 1)).as("n_other_purchases"))
       },
       "WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tu FROM events), " +
         "iv AS (SELECT user_id, tu // 86400000000 AS day, min(tu) AS lo, " +

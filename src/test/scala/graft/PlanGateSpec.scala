@@ -69,6 +69,54 @@ class PlanGateSpec extends SparkSpec {
         "limit reads; results are unordered sets, drop the terminal orderBy")
   }
 
+  test("no registry plan has a window frame from a moving row to UNBOUNDED FOLLOWING") {
+    // A frame whose lower bound moves with the row and whose upper bound
+    // is the partition's end re-aggregates the whole tail for every row:
+    // O(n²) per partition, a cliff behind any hot key (q_interpolate took
+    // 252 s at sf0.1 on such a frame). A suffix aggregate is a running
+    // aggregate over the reversed order, and a whole-partition aggregate
+    // has an unbounded lower bound; both are linear.
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing,
+      UnboundedPreceding, WindowExpression}
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      val frames = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case w: WindowExpression => w.windowSpec.frameSpecification })
+      graft.engine.Checkpoints.release(df)
+      frames.collectFirst {
+        case f @ SpecifiedWindowFrame(_, lower, UnboundedFollowing) if lower != UnboundedPreceding =>
+          s"$name (${f.sql})"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"quadratic window frame in: ${offenders.mkString("; ")} — run the aggregate over " +
+        "the reversed order with an UNBOUNDED PRECEDING lower bound instead")
+  }
+
+  test("multi-source event queries: one keyed pass each (exchanges, warm-pass jobs)") {
+    // Each query is one sorted pass per key plus, at most, a broadcast
+    // one-row bounds aggregate. A side table joined back or a second
+    // partitioning would add an exchange and a job. Static exchanges
+    // come from the unexecuted plan; jobs are those of the second (warm)
+    // noop materialization under this suite's session.
+    val want = Map(
+      "q_concat" -> (1, 2), "q_interpolate" -> (2, 4), "q_join_interval" -> (1, 3),
+      "q_sample" -> (2, 4), "q_switch" -> (1, 2), "q_zip" -> (1, 2))
+    val got = want.keys.toSeq.sorted.map { q =>
+      def pass() = {
+        var df: org.apache.spark.sql.DataFrame = null
+        val rec = graft.obs.QueryProfile.run(spark, q) {
+          df = SparkEntry.queries(q)(spark, sfDir)
+          df.write.format("noop").mode("overwrite").save()
+        }
+        (graft.obs.QueryProfile.exchanges(df), rec.jobs.size)
+      }
+      pass()
+      q -> pass()
+    }.toMap
+    assert(got === want)
+  }
+
   test("no registry plan globally sorts a big-table scan through an unpartitioned ranking window") {
     // Detector: a Window node whose spec has ORDER BY but no PARTITION
     // BY, with a big fixture table's file scan anywhere BELOW it and no

@@ -60,6 +60,157 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** Keyed rows (key, seq, ts, value) of source `src`; seq is the row's
+    * position, so it is unique within a source and ties only across. */
+  private def keyedSource(src: Int, rows: List[(Int, Int)]): EventStream = {
+    import spark.implicits._
+    EventStream(rows.zipWithIndex.map { case ((k, t), i) =>
+        (k, i.toLong, new java.sql.Timestamp(t * 1000L), src * 1000L + i) }
+      .toDF("k", "seq", "ts", "value"), keys = Seq("k"))
+  }
+
+  private val keyedRows = Gen.listOf(Gen.zip(Gen.choose(0, 1), Gen.choose(0, 6)))
+
+  test("switch and concat with 3 sources and cross-source ts ties ≡ a fold of the reference rules") {
+    // The reference's scans, per key over (ts, src, seq):
+    //  - switch: a disconnected source never emits again; any other
+    //    source's emission passes and makes it the active one,
+    //    disconnecting the previous active source (ops/combine.py:105-139);
+    //  - concat: a disconnected source never emits again; an emission of
+    //    source j passes and disconnects every source i < j
+    //    (ops/combine.py:142-174).
+    // Output: (key, src, seq, out_seq), out_seq counting passed rows per key.
+    type Row = (Int, Int, Long) // key, src, seq
+    def fold(rows: Seq[(Int, Int, Long, Int)], step: (Set[Int], Option[Int], Int) =>
+        Option[(Set[Int], Option[Int])]): Set[(Row, Long)] =
+      rows.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
+        rs.sortBy(r => (r._4, r._2, r._3))
+          .foldLeft((Set.empty[Int], Option.empty[Int], Vector.empty[Row])) {
+            case ((dead, active, out), (_, src, seq, _)) =>
+              step(dead, active, src).fold((dead, active, out)) { case (d, a) =>
+                (d, a, out :+ ((k, src, seq)))
+              }
+          }._3.zipWithIndex.map { case (r, i) => (r, i + 1L) }
+      }.toSet
+    val switchStep = (dead: Set[Int], active: Option[Int], src: Int) =>
+      if (dead(src)) None else Some((dead ++ active.filter(_ != src), Some(src)))
+    val concatStep = (dead: Set[Int], active: Option[Int], src: Int) =>
+      if (dead(src)) None else Some((dead ++ (0 until src), active))
+    forAll(keyedRows, keyedRows) { (r0, r1) =>
+      // a third source on the same ts range, so ties cross all three
+      val r2 = r1.reverse.map { case (k, t) => (1 - k, t) }
+      val srcs = Seq(r0, r1, r2)
+      val all = srcs.zipWithIndex.flatMap { case (rs, src) =>
+        rs.zipWithIndex.map { case ((k, t), i) => (k, src, i.toLong, t) } }
+      val streams = srcs.zipWithIndex.map { case (rs, src) => keyedSource(src, rs) }
+      def got(es: EventStream): Set[(Row, Long)] =
+        es.df.select("k", "src", "seq", "o").collect()
+          .map(r => ((r.getInt(0), r.getInt(1), r.getLong(2)), r.getLong(3))).toSet
+      assert(got(EventStream.switch(streams, "src", "o")) == fold(all, switchStep))
+      assert(got(EventStream.concat(streams, "src", "o")) == fold(all, concatStep))
+    }
+  }
+
+  test("keyed zip with unequal lengths pairs each key's i-th rows by seq") {
+    forAll(keyedRows, keyedRows) { (ra, rb) =>
+      val want = (0 to 1).flatMap { k =>
+        def vals(rs: List[(Int, Int)], src: Int) =
+          rs.zipWithIndex.collect { case ((`k`, _), i) => src * 1000L + i }
+        vals(ra, 0).zip(vals(rb, 1)).zipWithIndex.map { case ((a, b), i) => (k, i + 1L, a, b) }
+      }.toSet
+      val got = EventStream.zip(keyedSource(0, ra), keyedSource(1, rb), "i").df
+        .select("k", "i", "value", "value_r").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(got == want)
+    }
+  }
+
+  /** An events fixture directory: rows of (event_type, ts in minutes
+    * after 2024-01-01 00:00 UTC, cents or NULL). */
+  private def eventsDir(rows: Seq[(String, Int, Option[Int])]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
+    rows.zipWithIndex.map { case ((typ, m, c), i) =>
+        (i.toLong, new java.sql.Timestamp(t0 + m * 60000L), i % 3L, typ, c.map(_ / 100.0), "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  // minutes: mostly on the hour grid or near it, over a few hours;
+  // about one value in five is NULL
+  private val eventRows = Gen.nonEmptyListOf(Gen.zip(Gen.oneOf("a", "b"),
+    Gen.oneOf(Gen.choose(0, 5).map(_ * 60), Gen.choose(0, 300)),
+    Gen.frequency(4 -> Gen.choose(0, 400).map(Option(_)), 1 -> Gen.const(None))))
+
+  test("q_interpolate ≡ a nested-loop reference: on-grid ticks, a single-tick key, a short span, NULL values") {
+    val H = 3600000000L
+    val base = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli * 1000L
+    def want(rows: Seq[(String, Int, Option[Int])]): Set[(String, Long, Option[Long])] = {
+      val us = rows.map(r => base + r._2 * 60000000L)
+      val (h0, h1) = (us.min / H, us.max / H)
+      rows.groupBy(_._1).toSeq.flatMap { case (typ, rs) =>
+        // a tick is an instant with a value: NULLs are skipped, not ticks
+        val ticks = rs.filter(_._3.isDefined).groupBy(r => base + r._2 * 60000000L)
+          .map { case (t, g) => t -> g.flatMap(_._3).map(_.toLong).max }
+        (h0 to h1).map { h =>
+          val g = h * H
+          val prev = ticks.keys.filter(_ <= g).maxOption
+          val next = ticks.keys.filter(_ >= g).minOption
+          val v = for (p <- prev; n <- next) yield
+            if (p == n) ticks(p) else (ticks(p) * (n - g) + ticks(n) * (g - p)) / (n - p)
+          (typ, h, v)
+        }
+      }.toSet
+    }
+    val fixed = Seq(
+      Seq(("a", 60, 100), ("a", 120, 300), ("a", 150, 5), ("solo", 95, 42)),
+      Seq(("a", 65, 10), ("a", 100, 20), ("b", 70, 7)),  // within one hour: one grid point
+      Seq(("a", 0, 1), ("a", 0, 9), ("b", 240, 3)),      // a tie at one instant
+      // NULL ticks: interpolate across them; an all-NULL type is NULL everywhere
+      Seq(("a", 0, null), ("a", 60, 100), ("a", 120, null), ("a", 180, 400),
+        ("a", 180, null), ("nul", 30, null), ("nul", 200, null), ("b", 240, 3)))
+      .map(_.map { case (t, m, c) => (t, m, Option(c).map(_.asInstanceOf[Int])) })
+    forAll(eventRows)(rows => assert(got(rows) == want(rows)))
+    fixed.foreach(rows => assert(got(rows) == want(rows)))
+    def got(rows: Seq[(String, Int, Option[Int])]) =
+      SparkEntry.queries("q_interpolate")(spark, eventsDir(rows)).collect()
+        .map(r => (r.getString(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long])))
+        .toSet
+  }
+
+  test("regular-timer sample ≡ a nested-loop reference: on-grid ticks, a single-row key, a short span") {
+    import spark.implicits._
+    // rows: (key, ts µs, value or null); ticks t0 + k·step, k >= 1, up to t1
+    def check(rows: Seq[(Int, Long, Option[Long])], t0: Long, t1: Long, step: Long): Unit = {
+      val df = rows.zipWithIndex.map { case ((k, t, v), i) => (k, i.toLong, t, v) }
+        .toDF("k", "seq", "t", "v")
+        .withColumn("ts", timestamp_micros(col("t"))).drop("t")
+      val grid = Seq((t0, t1)).toDF("a", "b")
+        .select(timestamp_micros(col("a")).as("t0"), timestamp_micros(col("b")).as("t1"))
+      val got = EventStream(df, keys = Seq("k")).sampleEvery(grid, step, Seq("v")).df
+        .select(col("k"), col("seq"), unix_micros(col("ts")), col("v")).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      val want = for {
+        k <- rows.map(_._1).distinct
+        n <- 1L to (t1 - t0) / step
+        tick = t0 + n * step
+        v <- rows.zipWithIndex.filter { case (r, _) => r._1 == k && r._2 <= tick }
+          .sortBy { case (r, i) => (r._2, i) }.flatMap(_._1._3).lastOption
+      } yield (k, n, tick, v)
+      assert(got == want.toSet)
+    }
+    forAll(Gen.nonEmptyListOf(Gen.zip(Gen.choose(0, 2), Gen.choose(0L, 60L),
+        Gen.option(Gen.choose(0L, 99L))))) { rows =>
+      check(rows, 3L, rows.map(_._2).max, 7L)  // ticks at 10, 17, ...: some rows land on them
+      check(rows, -5L, 70L, 5L)                // a grid that runs past every key's last row
+    }
+    val oneRow = Seq((0, 24L, Some(1L)), (1, 3L, Some(2L)), (1, 40L, Some(3L)))
+    check(oneRow, 3L, 40L, 7L)  // key 0 has a single row, on the tick t0 + 3·7
+    check(oneRow, 3L, 9L, 7L)   // span shorter than one step: no tick
+  }
+
   test("merge multiset = union of inputs (ops/combine.py:97)") {
     forAll(smallInts, smallInts) { (a: List[Int], b: List[Int]) =>
       val m = EventStream.merge(Seq(seqStream(a), seqStream(b)), "src", "oseq")
@@ -168,15 +319,20 @@ class PropertySpec extends SparkSpec {
         .toDF("iid", "lo", "hi")
       val points = pts.zipWithIndex.map { case (p, j) => (j.toLong, p) }
         .toDF("pid", "p")
-      val got = graft.engine.IntervalJoin
+      val joined = graft.engine.IntervalJoin
         .pointsInIntervals(intervals, points, "lo", "hi", "p", 16L)
-        .select("iid", "pid").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val got = joined.filter(col("p").isNotNull).select("iid", "pid")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val want = for {
         ((lo, hi), i) <- ivs.zipWithIndex
         (p, j) <- pts.zipWithIndex
         if p >= lo && p <= hi
       } yield (i.toLong, j.toLong)
       assert(got.sorted == want.map(identity).sorted) // equality ⇒ no duplicate pairs
+      // every interval kept, its point count exact
+      val counts = joined.groupBy("iid").agg(count("pid"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(counts == ivs.indices.map(i => i.toLong -> want.count(_._1 == i).toLong).toMap)
     }
   }
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.obs.QueryProfile
 
-/** The in-program profiler: fenced job attribution, the plan's exchange
-  * count and scoped job labels. */
+/** The in-program profiler: fenced job attribution, generated-class
+  * compiles, the plan's exchange count and scoped job labels. */
 class QueryProfileSpec extends SparkSpec {
 
   private def description = spark.sparkContext.getLocalProperty("spark.job.description")
@@ -52,6 +52,19 @@ class QueryProfileSpec extends SparkSpec {
       assert(rec.jobs.last.stages.head.startsWith("count at"))
       assert(rec.jobs.last.tasks === 2 && rec.jobs.last.seconds >= 0)
     } finally spark.listenerManager.unregister(slow)
+  }
+
+  test("run counts the body's codegen compiles: a fresh plan compiles, a cache hit and an RDD job do not") {
+    // a literal is inlined into the generated source, so a fresh value is a fresh class
+    val k = System.nanoTime()
+    def query() = spark.range(100).selectExpr(s"id * ${k}L + 1 AS v").collect()
+    val fresh = QueryProfile.run(spark, "fresh")(query())
+    val again = QueryProfile.run(spark, "again")(query())
+    val rdd = QueryProfile.run(spark, "rdd")(spark.sparkContext.parallelize(1 to 10, 2).count())
+    assert(fresh.codegenCompiles > 0)
+    assert(again.codegenCompiles === 0)
+    assert(rdd.codegenCompiles === 0)
+    assert(fresh.summary.endsWith(s"${fresh.codegenCompiles} compiles"))
   }
 
   test("exchanges counts hash, range and single-partition shuffles, not broadcasts") {
