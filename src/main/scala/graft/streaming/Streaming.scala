@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.ScalaReflection
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
 
 /**
  * Structured Streaming variants of the eventkit surface (SURVEY.md §2.10).
@@ -17,16 +17,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *  - `EventBus`   — the reference's `connect`/`emit` pub-sub surface
  *                   (`event.py:87-225`): injected rows flow through a
  *                   live query into per-batch listener callbacks.
- *  - windowed aggregation with watermarks — `ChunkWith`/tumbling windows.
- *  - `debounceBursts` — the reference's `Debounce` (`ops/timing.py:67`)
- *                   as event-time-timeout keyed state: emits the last
- *                   row of a burst once the quiet gap elapses.
+ *  - Spark's own stateful operators wherever one computes the fold:
+ *                   watermarked tumbling and session windows (ChunkWith,
+ *                   sample, OHLC, sessions, and `debounceBursts` — a
+ *                   burst is a session window), watermark dedup, and
+ *                   stream-stream joins (the time-bounded join and the
+ *                   MinHash candidate join over band buckets).
  *  - keyed scans  — every other stateful operator (throttle, the
  *                   combine family, the emap family, as-of, sketches,
  *                   anomaly) is one [[KeyedScan]] step.
  *
- * All state is keyed (`groupByKey(user)`), so streaming state shards
- * across executors exactly like the batch windows do.
+ * All state is keyed (by user, key or bucket), so streaming state
+ * shards across executors exactly like the batch windows do.
  */
 object Streaming {
 
@@ -80,52 +82,30 @@ object Streaming {
         count(lit(1)).as("n"), sum(col("cents")).as("vol_c"))
 
   /**
-   * Debounce (last-of-burst) with keyed state + event-time timeout:
-   * buffer the newest row per user; when no row arrives within `gapSec`
-   * (by watermark time), emit it stamped at burst_ts + gap.
+   * Streaming Debounce (`ops/timing.py:67-101`), last of each burst:
+   * a burst is a session window per user, emitted as its last row
+   * re-stamped at burst end + gap — the batch
+   * [[graft.engine.EventStream.debounce]] rule, where rows `gapSec` or
+   * more apart start a new burst. Spark merges sessions that touch, so
+   * the session gap is one microsecond short of `gapSec` and the emit
+   * time adds it back. A burst emits once the watermark passes its end
+   * (with a `0 seconds` watermark, at most one no-data micro-batch
+   * later); a late row inside the watermark delay still joins its
+   * burst. State is the open bursts only.
    */
   def debounceBursts(
       events: Dataset[Ev], gapSec: Double, watermark: String): Dataset[Ev] = {
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = math.round(gapSec * 1e6)
-    events
-      .withColumn("ts", timestamp_micros(col("tsUs"))).as[(Long, Long, Double, java.sql.Timestamp)]
-      .toDF("user_id", "tsUs", "value", "ts")
+    require(gapUs > 1, s"debounce gap must exceed 1 microsecond, got $gapSec s")
+    events.withColumn("ts", timestamp_micros(col("tsUs")))
       .withWatermark("ts", watermark)
-      .as[(Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double), Ev](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (user, rows, state: GroupState[(Long, Double)]) =>
-          if (state.hasTimedOut) {
-            val (lastUs, v) = state.get
-            state.remove()
-            Iterator(Ev(user, lastUs + gapUs, v))
-          } else {
-            // Bursts can complete *within* one micro-batch: walk rows in
-            // event-time order, emitting a burst whenever the quiet gap
-            // elapses between consecutive rows; only the still-open burst
-            // waits on the event-time timer.
-            val out = Seq.newBuilder[Ev]
-            var cur = state.getOption
-            rows.toSeq.sortBy(_._2).foreach { r =>
-              cur match {
-                case Some((pUs, pV)) if r._2 - pUs >= gapUs =>
-                  out += Ev(user, pUs + gapUs, pV)
-                  cur = Some((r._2, r._3))
-                case Some((pUs, _)) if r._2 >= pUs => cur = Some((r._2, r._3))
-                case Some(_) => // late row older than burst head: drop
-                case None => cur = Some((r._2, r._3))
-              }
-            }
-            cur.foreach { c =>
-              state.update(c)
-              state.setTimeoutTimestamp(c._1 / 1000 + math.round(gapSec * 1000))
-            }
-            out.result().iterator
-          }
-      }
+      .groupBy(session_window(col("ts"), s"${gapUs - 1} microseconds"), col("user_id"))
+      .agg(max_by(col("value"), col("tsUs")).as("value"))
+      .select(col("user_id"), (unix_micros(col("session_window.end")) + 1).as("tsUs"),
+        col("value"))
+      .as[Ev]
   }
 
   /**
@@ -375,26 +355,28 @@ object Streaming {
    * passes iff `ts <= kill(k)` where kill(k) = min first-child-emission
    * time over parents q > k, the batch
    * [[graft.engine.EventStream.emapConcat]] rule (a row at the kill
-   * instant passes). State per key: each parent's first child event
-   * time (bounded by parent count) + the output counter.
+   * instant passes). State per key: four longs ([[spawnKill]]).
    */
   def concatmapStream(parents: Dataset[Ev],
       spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] =
-    spawnKill(parents, spawn, nextOnly = false)
+    spawnKill(parents, spawn)
 
   /**
    * Streaming Switchmap (`ops/transform.py:342-346`): the batch
    * encoding ([[graft.engine.EventStream.emapSwitch]]) — child k is
    * truncated at the NEXT parent's first child emission (`ts <= nxt`
    * passes; valid when children first emit at creation, the reference's
-   * shape). Divergence note shared with batch: a parent that spawns
-   * NOTHING leaves the previous child untruncated in the batch
-   * encoding; live, an empty spawn simply never registers, so the kill
-   * falls through to the next spawning parent — avoid empty spawns.
+   * shape). In that shape first emissions rise with the parent seq, so
+   * the next parent's first emission IS the min over all later ones and
+   * the live operator is [[concatmapStream]]'s. Divergence note shared
+   * with batch: a parent that spawns NOTHING leaves the previous child
+   * untruncated in the batch encoding; live, an empty spawn simply
+   * never registers, so the kill falls through to the next spawning
+   * parent — avoid empty spawns.
    */
   def switchmapStream(parents: Dataset[Ev],
       spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] =
-    spawnKill(parents, spawn, nextOnly = true)
+    spawnKill(parents, spawn)
 
   /** Keyed running output counter over `order`-sorted spawned children
     * — the sequencing half shared by merge/chain. */
@@ -405,26 +387,28 @@ object Streaming {
     }
 
   /** Kill-boundary filter + output counter for concatmap/switchmap.
-    * State: (per-parent first child event time, counter). `nextOnly`
-    * false = concat rule (kill = min first over ALL later parents);
-    * true = switch rule (kill = first of the IMMEDIATELY next spawning
-    * parent). Rows process in (ts, pseq, j) scan order, so a row at the
-    * kill instant is checked before its killer registers — the batch
-    * tie rule. */
-  private def spawnKill(parents: Dataset[Ev], spawn: Ev => Seq[SpawnedEv],
-      nextOnly: Boolean): Dataset[MergedChild] =
-    scanRows(parents.flatMap(spawn(_))(enc[SpawnedEv]), "spawnkill",
-        (Seq.empty[(Long, Long)], 0L))(_.user_id, r => (r.tsUs, r.pseq, r.j)) {
-      case (_, (firsts, n), r) =>
-        val laters = firsts.filter(_._1 > r.pseq)
-        val kill =
-          if (laters.isEmpty) None
-          else if (nextOnly) Some(laters.minBy(_._1)._2)
-          else Some(laters.map(_._2).min)
-        val next = firstAt(firsts, r.pseq, r.tsUs)
-        if (kill.forall(r.tsUs <= _))
-          ((next, n + 1), Some(MergedChild(r.user_id, r.tsUs, r.pseq, r.c, n + 1)))
-        else ((next, n), None)
+    * Rows arrive per key in (ts, pseq, j) order, so every registered
+    * first emission is at or before the frontier (the latest event
+    * time seen), and a parent below one that emitted BEFORE the
+    * frontier is dead for good. A row of parent p therefore passes iff
+    * no higher parent emitted before the frontier and, unless the row
+    * sits at the frontier (the batch `<=` tie rule), none emitted at it
+    * either. State: (largest pseq seen before the frontier, frontier
+    * ts, largest pseq seen at it, output counter) — flat in the number
+    * of parents. A late row (ts below the frontier) is judged as if at
+    * the frontier. */
+  private def spawnKill(parents: Dataset[Ev],
+      spawn: Ev => Seq[SpawnedEv]): Dataset[MergedChild] =
+    scanRows(parents.flatMap(spawn(_))(enc[SpawnedEv]), "killfront",
+        (Long.MinValue, Long.MinValue, Long.MinValue, 0L))(_.user_id, r => (r.tsUs, r.pseq, r.j)) {
+      case (_, (before, front, atFront, n), r) =>
+        val (b, f, a) =
+          if (r.tsUs > front) (math.max(before, atFront), r.tsUs, r.pseq)
+          else if (r.tsUs == front) (before, front, math.max(atFront, r.pseq))
+          else (math.max(before, r.pseq), front, atFront)
+        if (before <= r.pseq && (r.tsUs <= front || atFront <= r.pseq))
+          ((b, f, a, n + 1), Some(MergedChild(r.user_id, r.tsUs, r.pseq, r.c, n + 1)))
+        else ((b, f, a, n), None)
     }
 
   case class AsofOut(user_id: Long, tsUs: Long, value: Double,
@@ -490,55 +474,30 @@ object Streaming {
   case class CandPair(a: Long, b: Long)
 
   /**
-   * Streaming MinHash near-dup detection — the live form of
-   * `q_dedup_minhash`: stage 1 computes signatures and band keys with
-   * the SAME codegen kernels as batch (stateless projections stream
-   * as-is); stage 2 keys state by band bucket and emits a candidate
-   * pair the moment a new document lands in a bucket with prior
-   * members. State shards by bucket (never by corpus), and holds doc
-   * ids only — the streaming analogue of the batch groupBy. A
-   * production deployment adds TTL/eviction on the bucket state; a
-   * downstream `dropDuplicates` dedups pairs colliding in >1 band,
-   * exactly like the batch path's distinct.
+   * Streaming MinHash near-dup candidates — the live form of
+   * `q_dedup_minhash`: the batch band rows
+   * ([[graft.text.TextOps.lshBandsArr]] over
+   * [[graft.text.TextOps.minhashSigArray]], the same codegen kernels)
+   * self-joined on `(band, key)` with `a < b` — a stream-stream join
+   * over signature buckets, so a pair emits in the micro-batch where
+   * its second document lands. The join state holds every band row
+   * seen (no eviction). A pair colliding in more than one band, or a
+   * doc id delivered twice, emits more than once: a downstream
+   * `dropDuplicates` dedups pairs, like the batch path's distinct.
    */
   def minhashCandStream(docs: Dataset[DocEv], k: Int, numHashes: Int,
       numBands: Int, rowsPerBand: Int): Dataset[CandPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val bandKeys = (0 until numBands).map { b =>
-      concat_ws("_", lit(b) +:
-        (0 until rowsPerBand).map(r =>
-          element_at(col("__hs"), b * rowsPerBand + r + 1)): _*)
-    }
-    val withBands = docs.toDF()
-      .select(col("doc_id"),
-        graft.functions.VectorFunctions.minhashSigs(
-          graft.functions.VectorFunctions.shingleSids(
-            graft.text.TextOps.tokens(col("text")), k),
-          numHashes).as("__hs"))
-      .filter(size(col("__hs")) > 0)
-      .select(col("doc_id"), explode(array(bandKeys: _*)).as("bucket"))
-      .as[(Long, String)]
-    withBands.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (_: String, rows: Iterator[(Long, String)], state: GroupState[Seq[Long]]) => {
-          var seen = state.getOption.getOrElse(Vector.empty[Long])
-          val out = Vector.newBuilder[CandPair]
-          // Membership must be checked against the UPDATED list: a
-          // filterNot(seen.contains) here would eta-expand over the
-          // pre-batch Vector, so a doc_id delivered twice in one
-          // micro-batch would bypass the dedup and emit a degenerate
-          // (id, id) pair plus duplicates.
-          rows.foreach { case (id, _) =>
-            if (!seen.contains(id)) {
-              seen.foreach(p =>
-                out += CandPair(math.min(id, p), math.max(id, p)))
-              seen = seen :+ id
-            }
-          }
-          state.update(seen)
-          out.result().iterator
-        })
+    import graft.text.TextOps
+    val bands = TextOps.lshBandsArr(
+      TextOps.minhashSigArray(docs.toDF(), "doc_id", "text", k, numHashes),
+      "doc_id", numBands, rowsPerBand)
+    val b = bands.select(col("doc_id").as("b"), col("band").as("b_band"), col("key").as("b_key"))
+    bands.join(b, col("band") === col("b_band") && col("key") === col("b_key") &&
+        col("doc_id") < col("b"))
+      .select(col("doc_id").as("a"), col("b"))
+      .as[CandPair]
   }
 
   /**

@@ -235,6 +235,35 @@ class StreamingSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
   }
 
+  test("streaming minhash: a doc id delivered twice yields no self-pair and " +
+      "the single-delivery pair set") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog while rain falls on the green hills near the old stone bridge"
+    val docs = Map(
+      0L -> base,
+      1L -> base.replace("rain", "snow"),
+      2L -> "completely different content about spark catalyst optimizer rules and distributed shuffle execution plans",
+      3L -> base.replace("green", "brown"))
+    def pairs(batches: Seq[Seq[Long]], sink: String): Seq[(Long, Long)] = {
+      val mem = MemoryStream[Streaming.DocEv](spark, 1)
+      val q = Streaming.minhashCandStream(mem.toDS(), 3, 12, 4, 3).toDF()
+        .writeStream.format("memory").queryName(sink).outputMode("append").start()
+      batches.foreach { ids =>
+        mem.addData(ids.map(i => Streaming.DocEv(i, docs(i))): _*)
+        q.processAllAvailable()
+      }
+      q.stop()
+      spark.table(sink).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    val once = pairs(Seq(Seq(0L, 2L), Seq(1L, 3L)), "mh_once")
+    // doc 0 twice in the first batch and again in the second
+    val twice = pairs(Seq(Seq(0L, 2L, 0L), Seq(1L, 0L, 3L)), "mh_twice")
+    assert(once.toSet.contains((0L, 1L)))
+    assert(!twice.exists(p => p._1 == p._2), s"self-pair emitted: $twice")
+    assert(twice.toSet === once.toSet)
+  }
+
   test("bucketed tables: co-located join and aggregation plan ZERO exchanges") {
     import graft.sources.Sinks
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
@@ -636,6 +665,49 @@ class StreamingSpec extends SparkSpec {
     val got = spark.table("deb_straddle").filter(col("user_id") < 99)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got === Set((1L, 1_800_000L, 3.0), (1L, 6_000_000L, 9.0)))
+  }
+
+  test("streaming debounce equals batch debounce on random bursts split " +
+      "over 1-3 micro-batches") {
+    import spark.implicits._
+    val gapUs = 1_000_000L
+    val rnd = new scala.util.Random(20261020L)
+    for (trial <- 0 until 4) {
+      // per key: distinct, increasing timestamps whose steps straddle the
+      // gap (well inside it, just under, exactly at, just over, far past)
+      val steps = Seq(100_000L, 400_000L, 999_999L, gapUs, gapUs + 1, 3 * gapUs)
+      val rows = (1L to 3L).flatMap { u =>
+        val ts = (1 to 4 + rnd.nextInt(10)).scanLeft(1_000_000L + rnd.nextInt(500_000)) {
+          (t, _) => t + steps(rnd.nextInt(steps.size)) }
+        ts.map(t => Ev(u, t, rnd.nextInt(1000).toDouble))
+      }
+      val exp = graft.engine.EventStream(
+          rows.zipWithIndex.map { case (e, i) => (i.toLong, e.user_id, e.tsUs, e.value) }
+            .toDF("seq", "user_id", "tsUs", "value")
+            .withColumn("ts", timestamp_micros(col("tsUs"))),
+          keys = Seq("user_id"))
+        .debounce(gapUs / 1e6).df
+        .select(col("user_id"), unix_micros(col("ts")), col("value"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      // cut the stream at 0-2 event times: every micro-batch holds rows
+      // later than the whole previous one, so none is behind the watermark
+      val cuts = Seq.fill(rnd.nextInt(3))(rows(rnd.nextInt(rows.size)).tsUs).distinct.sorted
+      val bounds = Long.MinValue +: cuts :+ Long.MaxValue
+      val bus = new Streaming.EventBus(spark)
+      val sink = s"deb_prop_$trial"
+      val q = Streaming.debounceBursts(bus.eventsTyped, gapSec = gapUs / 1e6, watermark = "0 seconds")
+        .toDF().writeStream.format("memory").queryName(sink).outputMode("append").start()
+      bounds.sliding(2).foreach { case Seq(lo, hi) =>
+        bus.emit(rows.filter(e => e.tsUs >= lo && e.tsUs < hi): _*)
+        q.processAllAvailable()
+      }
+      bus.emit(Ev(99L, 1_000_000_000L, 0.0)) // advance the watermark past every burst
+      q.processAllAvailable()
+      q.stop()
+      val got = spark.table(sink).filter(col("user_id") < 99)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got === exp, s"trial $trial, cuts $cuts, rows $rows")
+    }
   }
 
   test("streaming sketches: incremental HLL/CMS state equals batch kernels") {
@@ -1352,10 +1424,12 @@ class StreamingSpec extends SparkSpec {
           Set("(1) -> (4)"),
           () => oneCheckpointedBatch(
             Streaming.mergemapStream(one(parents: _*), spawn).toDF(), "append")),
-        // parent 0's second child (3 ms) is past parent 1's first (2 ms): cut
-        ("spawnkill",
-          "struct<value:bigint> -> struct<_1:array<struct<_1:bigint,_2:bigint>>,_2:bigint>",
-          Set("(1) -> ([(0,1000),(1,2000)],3)"),
+        // parent 0's second child (3 ms) is past parent 1's first (2 ms):
+        // cut. State: (largest pseq before the 4 ms frontier, frontier,
+        // largest pseq at it, output counter)
+        ("killfront",
+          "struct<value:bigint> -> struct<_1:bigint,_2:bigint,_3:bigint,_4:bigint>",
+          Set("(1) -> (1,4000,1,3)"),
           () => oneCheckpointedBatch(
             Streaming.concatmapStream(one(parents: _*), spawn).toDF(), "append")),
         ("refs", "struct<value:bigint> -> struct<value:array<struct<_1:bigint,_2:double>>>",
@@ -1606,6 +1680,69 @@ class StreamingSpec extends SparkSpec {
       assert(all.toSet === Set((1_000L, 0L, 1L), (2_000L, 1L, 2L),
         (4_000L, 1L, 3L), (5_000L, 2L, 4L), (7_000L, 2L, 5L)),
         s"kill boundary and out_seq must continue across restart, got $all")
+    }
+  }
+
+  test("concatmapStream state stays one flat row per key over 1k parents") {
+    withRocksDb {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_kf_ckpt").toString
+      val bus = new Streaming.EventBus(spark)
+      // parent i at 1 s + i ms spawns children at its ts and ts + 2 ms, so
+      // each second child is past the next parent's first and is cut —
+      // except for the last parent of each micro-batch: the second batch
+      // starts 10 ms later, so delivery stays in event-time order
+      val spawn = (e: Ev) => Seq(0L, 1L).map(j =>
+        Streaming.SpawnedEv(e.user_id, e.tsUs + j * 2000L, e.value.toLong, j, s"c$j"))
+      def ts(i: Int) = 1_000_000L + i * 1000L + (i / 500) * 10_000L
+      def parents(from: Int, until: Int) = for (i <- from until until; u <- Seq(1L, 2L))
+        yield Ev(u, ts(i), i.toDouble)
+      val q = Streaming.concatmapStream(bus.eventsTyped, spawn).toDF()
+        .writeStream.format("memory").queryName("kf_out")
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      val stateRows = Seq(parents(0, 500), parents(500, 1000)).map { ps =>
+        bus.emit(ps: _*)
+        q.processAllAvailable()
+        q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      }
+      q.stop()
+      assert(stateRows === Seq(2L, 2L), "one state row per key after 500 and 1000 parents")
+      val st = spark.read.format("statestore").option("stateVarName", "killfront").load(ckpt)
+      assert(st.collect().map(r => render(r.getAs[Any]("value"))).toSeq ===
+        Seq.fill(2)(s"(999,${ts(999) + 2000},999,1002)"))
+      // every parent's first child, plus both children of parents 499 and 999
+      val out = spark.table("kf_out").collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(4)))
+      for (u <- Seq(1L, 2L)) {
+        val mine = out.filter(_._1 == u)
+        assert(mine.map(_._3).sorted.toSeq === (1L to 1002L))
+        assert(mine.groupBy(_._2).collect { case (p, cs) if cs.length == 2 => p }.toSet ===
+          Set(499L, 999L))
+        assert(mine.map(_._2).distinct.length === 1000)
+      }
+    }
+  }
+
+  test("concatmap/switchmap: a child at the kill instant passes when its " +
+      "killer registered a micro-batch earlier") {
+    withRocksDb {
+      // one child per parent row, at the row's ts; parent seq = value
+      val spawn = (e: Ev) =>
+        Seq(Streaming.SpawnedEv(e.user_id, e.tsUs, e.value.toLong, 0L, "c"))
+      for ((sink, op) <- Seq("tie_ccm" -> (Streaming.concatmapStream _),
+          "tie_sm" -> (Streaming.switchmapStream _))) {
+        val bus = new Streaming.EventBus(spark)
+        val q = op(bus.eventsTyped, spawn).toDF().writeStream.format("memory")
+          .queryName(sink).outputMode("append").start()
+        // parent 1's first child at 3 ms kills parent 0 after 3 ms
+        bus.emit(Ev(1L, 1000L, 0.0), Ev(1L, 3000L, 1.0))
+        q.processAllAvailable()
+        // parent 0 at the kill instant (batch rule ts <= kill), then twice
+        // past it: the second row is behind a frontier parent 0 itself set
+        bus.emit(Ev(1L, 3000L, 0.0), Ev(1L, 3001L, 0.0), Ev(1L, 3002L, 0.0))
+        q.processAllAvailable()
+        q.stop()
+        val got = spark.table(sink).collect().map(r => (r.getLong(1), r.getLong(2))).toSet
+        assert(got === Set((1000L, 0L), (3000L, 1L), (3000L, 0L)), sink)
+      }
     }
   }
 

@@ -9,9 +9,10 @@ import graft.obs.QueryProfile
 /** Profiles registry queries through [[QueryProfile]]. Each pass builds
   * the query and materializes its full result through a `noop` write
   * (never a `count()` Catalyst may prune); pass 1 is the cold pass.
-  * Prints each pass's record, then the last pass's slowest jobs and
-  * stages and the plan's exchange count, and finally every query's
-  * exchange count, highest first.
+  * Passes run pass-major: pass 1 of every listed query, then pass 2 of
+  * every query, and so on. Prints each pass's record, then per query
+  * the last pass's slowest jobs and stages and the plan's exchange
+  * count, and finally every query's exchange count, highest first.
   *
   * usage: Profile <q1,q2,...|all> [passes=3] [driver] [plan=<dir>] [parts=<n,n,...>]
   *  - driver: sample driver-side stacks every 25 ms during the last
@@ -31,32 +32,41 @@ object Profile {
     def opt(k: String) = args.collectFirst { case a if a.startsWith(s"$k=") => a.drop(k.length + 1) }
     val parts = opt("parts").fold(Seq(spark.conf.get("spark.sql.shuffle.partitions")))(
       _.split(",").toSeq)
-    val exchanges = for (p <- parts; q <- names) yield {
+    val exchanges = parts.flatMap { p =>
       spark.conf.set("spark.sql.shuffle.partitions", p)
-      val name = if (parts.size > 1) s"$q parts=$p" else q
-      try {
+      def label(q: String) = if (parts.size > 1) s"$q parts=$p" else q
+      // pass-major: pass i of every query before pass i + 1, so a warm
+      // pass pays the codegen cache misses the other queries cause, as a
+      // benchmark pass does
+      val last = scala.collection.mutable.LinkedHashMap.empty[String, (DataFrame, QueryProfile.Record)]
+      val failed = scala.collection.mutable.Set.empty[String]
+      for (i <- 1 to passes; q <- names if !failed(q)) try {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val sampler = if (args.contains("driver") && i == passes) Some(new Sampler) else None
         var df: DataFrame = null
-        val last = (1 to passes).map { i =>
-          val before = spark.sparkContext.getPersistentRDDs.keySet
-          val sampler = if (args.contains("driver") && i == passes) Some(new Sampler) else None
-          val rec = QueryProfile.run(spark, s"$name pass $i${if (i == 1) " (cold)" else ""}") {
-            df = all(q)(spark, sfDir)
-            df.write.format("noop").mode("overwrite").save()
-          }
-          println(rec.summary)
-          sampler.foreach(_.stopAndPrint())
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-            if (!before(id)) r.unpersist(blocking = false) }
-          rec
-        }.last
-        println(f"  job-time sum ${last.jobs.map(_.seconds).sum}%.2f s, " +
-          f"stage-wall sum ${last.stages.map(_.seconds).sum}%.2f s; slowest jobs:")
-        last.jobs.sortBy(-_.seconds).take(8).foreach { j =>
-          val label = if (j.description.isEmpty) "" else s"{${j.description}} "
-          println(f"  ${j.seconds}%7.2f s ${j.tasks}%4d tasks $label" +
+        val rec = QueryProfile.run(spark, s"${label(q)} pass $i${if (i == 1) " (cold)" else ""}") {
+          df = all(q)(spark, sfDir)
+          df.write.format("noop").mode("overwrite").save()
+        }
+        println(rec.summary)
+        sampler.foreach(_.stopAndPrint())
+        spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
+          if (!before(id)) r.unpersist(blocking = false) }
+        last(q) = (df, rec)
+      } catch { case e: Throwable =>
+        println(s"FAIL ${label(q)}: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+        failed += q
+        last -= q
+      }
+      last.toSeq.map { case (q, (df, rec)) =>
+        println(f"${label(q)} pass $passes: job-time sum ${rec.jobs.map(_.seconds).sum}%.2f s, " +
+          f"stage-wall sum ${rec.stages.map(_.seconds).sum}%.2f s; slowest jobs:")
+        rec.jobs.sortBy(-_.seconds).take(8).foreach { j =>
+          val desc = if (j.description.isEmpty) "" else s"{${j.description}} "
+          println(f"  ${j.seconds}%7.2f s ${j.tasks}%4d tasks $desc" +
             j.stages.mkString(" <- ").take(150)) }
         println("  slowest stages:")
-        last.stages.sortBy(-_.seconds).take(8).foreach { s =>
+        rec.stages.sortBy(-_.seconds).take(8).foreach { s =>
           println(f"  ${s.seconds}%7.2f s ${s.tasks}%4d tasks ${s.name}") }
         opt("plan").foreach { dir =>
           Files.createDirectories(Paths.get(dir))
@@ -64,14 +74,11 @@ object Profile {
         }
         val ex = QueryProfile.exchanges(df)
         println(s"  exchanges $ex")
-        Some(name -> ex)
-      } catch { case e: Throwable =>
-        println(s"FAIL $name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-        None
+        label(q) -> ex
       }
     }
     println("exchanges per query, highest first:")
-    exchanges.flatten.sortBy(-_._2).foreach { case (q, n) => println(f"$n%4d  $q") }
+    exchanges.sortBy(-_._2).foreach { case (q, n) => println(f"$n%4d  $q") }
     spark.stop()
   }
 
