@@ -1,11 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
+import graft.engine.EventStream
 import graft.obs.QueryProfile
 
 /**
  * Headline benchmark (driver contract): runs representative queries from
- * every operator family on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+ * every operator family on SPARK_GRAFT_SF_DIR and prints ONE JSON line,
+ * also written to `bench/bench_c<cpus>.json`. Each timed interval
+ * materializes the full result through [[QueryProfile.materialize]].
  *
  * Also reports throughput counters comparable to BASELINE.md's measured
  * reference numbers (pipeline values/s, zip pairs/s, sliding-mean
@@ -44,8 +48,6 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.ui.enabled", "false")
       // reclaim dead shuffle files / broadcasts even between the
       // explicit per-query GCs below (ContextCleaner is GC-driven)
@@ -65,40 +67,20 @@ object Bench {
     val canaryJobSec = HostCanary.canaryJobSec(spark)
 
     val all = SparkEntry.queries
-    def pass(): Seq[(String, Int, QueryProfile.Record)] = headline.filter(all.contains).map { name =>
-      // snapshot the persistent-RDD ids BEFORE the query so cleanup can
-      // be scoped to what this query created (a blanket unpersist would
-      // truncate any future cross-query cached table's lineage)
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      // a failing query must not silently report -1 and keep the bench
-      // green — log it loudly (the correctness harness is the real
-      // gate, but a hollow bench number should be visible here too)
-      def failing(e: Throwable): Null = {
+    def pass(): Seq[(String, Int, QueryProfile.Record)] = headline.filter(all.contains).flatMap { name =>
+      val r = try {
+        val (df, prof) = QueryProfile.materialize(spark, name)(all(name)(spark, sfDir))
+        // static shuffle count (hash/range/single-partition exchanges) of
+        // the SAME DataFrame the timed pass built, after the timer stops
+        Some((name, QueryProfile.exchanges(df), prof))
+      } catch { case e: Throwable =>
+        // a failing query drops out of `queries` and is logged loudly
+        // (the correctness harness is the real gate, but a hollow bench
+        // number should be visible here too)
         System.err.println(s"BENCH FAIL $name: ${e.getClass.getSimpleName}: " +
           s"${String.valueOf(e.getMessage).take(200)}")
-        null
+        None
       }
-      var df: DataFrame = null
-      var n = -1L
-      // scheduled jobs and shuffle traffic of build + count: with AQE
-      // every exchange materialization is its own job, so jobs-per-query
-      // is the scheduling-overhead signal next to the shuffle count
-      val prof = QueryProfile.run(spark, name) {
-        df = try all(name)(spark, sfDir) catch { case e: Throwable => failing(e) }
-        if (df != null) n = try df.count() catch { case e: Throwable => failing(e); -1L }
-      }
-      // static shuffle count (hash/range/single-partition exchanges) of
-      // the SAME DataFrame the timed pass built, after the timer stops
-      val ex = if (df == null || n < 0) -1
-        else try QueryProfile.exchanges(df) catch { case _: Throwable => -1 }
-      // free the query's leftover localCheckpoints (returned plans pin
-      // them; ContextCleaner only reclaims on driver GC, so 60+ query
-      // executions otherwise accumulate dead blocks in executor
-      // storage — the CheckpointScope failure mode, measured 2.6→8.7s).
-      // Outside the timer: a resident cluster amortizes this.
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!before.contains(id)) rdd.unpersist(blocking = false) }
       // Drive ContextCleaner NOW: dead shuffles/broadcasts are reclaimed
       // via weak references, i.e. only on driver GC. 60+ query
       // executions between natural GCs accumulate shuffle files, map
@@ -106,7 +88,7 @@ object Bench {
       // late-in-run queries (q_triangles 2.3s isolated vs 4.8s
       // in-bench). Outside the timer; a real cluster runs periodicGC.
       System.gc()
-      (name, ex, prof)
+      r
     }
     // One cold pass + three steady passes, reporting the PER-QUERY MIN
     // of the steady passes. Two reasons this is min-of-N rather than
@@ -120,48 +102,27 @@ object Bench {
     // `queries_cold`/`value_cold` = first pass including JIT.
     val cold = pass()
     val steadyPasses = Seq(pass(), pass(), pass())
-    val results = steadyPasses.head.indices.map { i =>
-      val samples = steadyPasses.map(_(i))
-      samples.minBy(_._3.wallSeconds)
-    }
+    val results = steadyPasses.flatten.groupBy(_._1).values.map(_.minBy(_._3.wallSeconds))
+      .toSeq.sortBy(r => headline.indexOf(r._1))
 
-    // Reference-comparable throughputs (BASELINE.md): per-event pipeline
-    // rate over the events stream. Best-of-3 for the same reasons as
-    // the per-query min above (JIT convergence + shared-host noise).
-    val pipelineRate = (1 to 3).map { _ =>
-      val tp0 = System.nanoTime()
-      queries.EventQueries.flagship(spark, sfDir).count()
-      nEvents / ((System.nanoTime() - tp0) / 1e9)
-    }.max
-
-    // BASELINE.md-comparable counters (same op shapes as the measured
-    // reference numbers): zip pairs/s and sliding-mean values/s. Warm
-    // plans (each ran ≥4× above), so these measure steady-state rate.
-    def rate(name: String): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      val n = all(name)(spark, sfDir).count()
-      n / ((System.nanoTime() - t0) / 1e9)
-    }.max
+    // Reference-comparable throughputs (BASELINE.md): a known row count
+    // over the best-of-3 materialized time, on warm plans (JIT
+    // convergence + shared-host noise, as for the per-query min above).
+    def bestSec(label: String)(build: => DataFrame): Double =
+      (1 to 3).map(_ => QueryProfile.materialize(spark, label)(build)._2.wallSeconds).min
+    // per-event pipeline rate over the events stream
+    val pipelineRate = nEvents / bestSec("pipeline")(queries.EventQueries.flagship(spark, sfDir))
     // zip gate metric at the REFERENCE'S OWN measurement shape
-    // (BASELINE.md appendix: zip of two 50,000-element Sequences →
-    // count). q_zip at sf0.1 emits only ~17k pairs, so its rate was
-    // dominated by fixed job-scheduling cost, not zip throughput —
-    // r3→r6 the "metric" monotonically decayed while the operator was
-    // unchanged. Same-shape measurement, best-of-3.
+    // (BASELINE.md appendix: zip of two 50,000-element Sequences).
+    // q_zip at sf0.1 emits only ~17k pairs, so its rate was dominated
+    // by fixed job-scheduling cost, not zip throughput — r3→r6 the
+    // "metric" monotonically decayed while the operator was unchanged.
     val zipN = 50000L
-    def zipSeq() = graft.engine.EventStream(
-      spark.range(zipN).select(
-        org.apache.spark.sql.functions.col("id").as("seq"),
-        org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.lit(1704067200000000L) +
-            org.apache.spark.sql.functions.col("id") * 1000000L).as("ts"),
-        org.apache.spark.sql.functions.col("id").as("value")))
-    val zipRate = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      val n = graft.engine.EventStream.zip(zipSeq(), zipSeq(), "i").df.count()
-      n / ((System.nanoTime() - t0) / 1e9)
-    }.max
-    val slideRate = rate("q_arraymean")
+    def zipSeq() = EventStream(spark.range(zipN).select(col("id").as("seq"),
+      timestamp_micros(lit(1704067200000000L) + col("id") * 1000000L).as("ts"), col("id").as("value")))
+    val zipRate = zipN / bestSec("zip")(EventStream.zip(zipSeq(), zipSeq(), "i").df)
+    // sliding mean: one output row per event
+    val slideRate = nEvents / bestSec("q_arraymean")(all("q_arraymean")(spark, sfDir))
     // The sliding-mean "rate" at sf0.1 is a ~0.05-0.1 s measurement —
     // one-to-two scheduler jobs at the per-job floor — so raw values/s
     // tracks HOST scheduling latency, not operator throughput (the
@@ -189,7 +150,7 @@ object Bench {
     val totalCold = cold.map(_._3.wallSeconds).sum
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
-        s""""protocol":"per-query min of 3 steady passes after 1 cold pass; rates best-of-3 on warm plans (r7+; earlier rounds reported the single second pass)",""" +
+        s""""protocol":"each result materialized through a noop write (QueryProfile.materialize; earlier artifacts timed count()); per-query min of 3 steady passes after 1 cold pass; rates are known row counts over the best-of-3 materialized time on warm plans",""" +
         s""""value_cold":$totalCold,"queries_cold":$qsCold,"shuffles":$qsEx,""" +
         s""""jobs":$qsJobs,"profiles":$qsProf,""" +
         s""""canary_sec":$canarySec,"canary_job_sec":$canaryJobSec,""" +
@@ -198,7 +159,7 @@ object Bench {
         s""""pipeline_events_per_sec":$pipelineRate,""" +
         s""""reference_pipeline_events_per_sec":52489,""" +
         s""""zip_pairs_per_sec":$zipRate,"reference_zip_pairs_per_sec":27399,""" +
-        s""""zip_shape":"two 50000-element sequences -> zip -> count (BASELINE.md appendix shape), best of 3",""" +
+        s""""zip_shape":"two 50000-element sequences -> zip -> noop write (BASELINE.md appendix shape), best of 3",""" +
         s""""sliding_mean_values_per_sec":$slideRate,""" +
         s""""sliding_mean_jobfloor_units":$slideJobfloorUnits,""" +
         s""""sliding_mean_canary_job_sec":$canaryJobAtSlide,""" +
@@ -208,9 +169,11 @@ object Bench {
     // driver's JSON extraction in round 1 (BENCH_r01 "parsed": null).
     // Write the metric line to a file as the durable channel, and print
     // it raw (System.out, no log prefix) as the last line too.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outPath),
+    // One file per core count, so a c8 run leaves the c4 artifact alone.
+    val outPath = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench/bench_c$cpus.json"))
+    Option(outPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    java.nio.file.Files.write(outPath,
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(json)
     spark.stop()

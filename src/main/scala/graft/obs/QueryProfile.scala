@@ -6,7 +6,7 @@ import scala.collection.mutable
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -71,6 +71,26 @@ object QueryProfile {
       l.record(acc, label, wall, sc.getPersistentRDDs.keySet.filterNot(before),
         CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
     } finally l.close(tag, sc.getPersistentRDDs.keySet)
+  }
+
+  /** Builds a query and writes its full result to the `noop` sink, both
+    * inside [[run]] — never a `count()` Catalyst may prune to a scan.
+    * After the timed interval, also when the build or the write throws,
+    * unpersists every RDD the body pinned (a returned plan pins its
+    * localCheckpoints until driver GC otherwise). Returns the DataFrame,
+    * for plan reads afterwards, with its record. */
+  def materialize(spark: SparkSession, label: String)(build: => DataFrame): (DataFrame, Record) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var df: DataFrame = null
+    try {
+      val rec = run(spark, label) {
+        df = build
+        df.write.format("noop").mode("overwrite").save()
+      }
+      (df, rec)
+    } finally sc.getPersistentRDDs.foreach { case (id, r) =>
+      if (!before(id)) r.unpersist(blocking = false) }
   }
 
   /** Hash, range and single-partition shuffles of `df`'s physical plan,

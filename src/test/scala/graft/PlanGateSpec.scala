@@ -104,11 +104,8 @@ class PlanGateSpec extends SparkSpec {
       "q_sample" -> (2, 4), "q_switch" -> (1, 2), "q_zip" -> (1, 2))
     val got = want.keys.toSeq.sorted.map { q =>
       def pass() = {
-        var df: org.apache.spark.sql.DataFrame = null
-        val rec = graft.obs.QueryProfile.run(spark, q) {
-          df = SparkEntry.queries(q)(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-        }
+        val (df, rec) = graft.obs.QueryProfile.materialize(spark, q)(
+          SparkEntry.queries(q)(spark, sfDir))
         (graft.obs.QueryProfile.exchanges(df), rec.jobs.size)
       }
       pass()

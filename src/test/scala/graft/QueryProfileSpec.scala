@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.obs.QueryProfile
 
 /** The in-program profiler: fenced job attribution, generated-class
-  * compiles, the plan's exchange count and scoped job labels. */
+  * compiles, the materialized timing loop, the plan's exchange count and
+  * scoped job labels. */
 class QueryProfileSpec extends SparkSpec {
 
   private def description = spark.sparkContext.getLocalProperty("spark.job.description")
@@ -65,6 +67,27 @@ class QueryProfileSpec extends SparkSpec {
     assert(again.codegenCompiles === 0)
     assert(rdd.codegenCompiles === 0)
     assert(fresh.summary.endsWith(s"${fresh.codegenCompiles} compiles"))
+  }
+
+  test("materialize writes every column, surfaces what count() prunes, and frees its pins") {
+    val sc = spark.sparkContext
+    val boom = udf((i: Long) => if (i >= 0) throw new IllegalStateException("boom") else i)
+    def withBoom(df: DataFrame) = df.select(col("id"), boom(col("id")))
+    // count() prunes the throwing column and succeeds
+    assert(withBoom(spark.range(100).toDF()).count() === 100)
+    val before = sc.getPersistentRDDs.keySet
+    // the body pins a checkpoint, then projects the throwing column
+    val e = intercept[Exception](QueryProfile.materialize(spark, "throws")(
+      withBoom(spark.range(100).toDF().localCheckpoint())))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "boom"))
+    assert(sc.getPersistentRDDs.keySet === before)
+    val (df, rec) = QueryProfile.materialize(spark, "pins") {
+      spark.range(1000).toDF().localCheckpoint().selectExpr("id * 2 AS v")
+    }
+    assert(df.columns.toSeq === Seq("v"))
+    assert(rec.jobs.nonEmpty && rec.pinnedBytes > 0)
+    assert(sc.getPersistentRDDs.keySet === before)
   }
 
   test("exchanges counts hash, range and single-partition shuffles, not broadcasts") {

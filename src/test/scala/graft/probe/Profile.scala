@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.FormattedMode
 import graft.obs.QueryProfile
 
 /** Profiles registry queries through [[QueryProfile]]. Each pass builds
-  * the query and materializes its full result through a `noop` write
-  * (never a `count()` Catalyst may prune); pass 1 is the cold pass.
+  * the query and materializes its full result through
+  * [[QueryProfile.materialize]]; pass 1 is the cold pass.
   * Passes run pass-major: pass 1 of every listed query, then pass 2 of
   * every query, and so on. Prints each pass's record, then per query
   * the last pass's slowest jobs and stages and the plan's exchange
@@ -41,17 +41,11 @@ object Profile {
       val last = scala.collection.mutable.LinkedHashMap.empty[String, (DataFrame, QueryProfile.Record)]
       val failed = scala.collection.mutable.Set.empty[String]
       for (i <- 1 to passes; q <- names if !failed(q)) try {
-        val before = spark.sparkContext.getPersistentRDDs.keySet
         val sampler = if (args.contains("driver") && i == passes) Some(new Sampler) else None
-        var df: DataFrame = null
-        val rec = QueryProfile.run(spark, s"${label(q)} pass $i${if (i == 1) " (cold)" else ""}") {
-          df = all(q)(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-        }
+        val (df, rec) = QueryProfile.materialize(spark,
+          s"${label(q)} pass $i${if (i == 1) " (cold)" else ""}")(all(q)(spark, sfDir))
         println(rec.summary)
         sampler.foreach(_.stopAndPrint())
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-          if (!before(id)) r.unpersist(blocking = false) }
         last(q) = (df, rec)
       } catch { case e: Throwable =>
         println(s"FAIL ${label(q)}: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")

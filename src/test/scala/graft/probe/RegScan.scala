@@ -1,13 +1,18 @@
 package graft
 
-/** Registry-wide timing scan: min-of-2 count() per query at sf0.1,
-  * sorted slowest-first — finds slow queries the headline bench does
-  * not cover. Text report → /tmp/regscan.txt; machine-readable JSON
-  * (per-query min seconds + total) → /tmp/regscan.json, committed
-  * per-round as REGSCAN_r{N}.json so tail regressions are diffable
-  * from driver artifacts. Optional args: comma-separated query subset;
-  * passes per query (default 2 — use 4+ for steady-state reads of a
-  * few queries: JIT ramp takes ~3 executions on heavy codegen).
+import graft.obs.QueryProfile
+
+/** Registry-wide timing scan: min-of-2 materialized runs per query at
+  * sf0.1, sorted slowest-first — finds slow queries the headline bench
+  * does not cover. Each run builds the query and writes its full result
+  * through [[QueryProfile.materialize]]; a failing query prints an `ERR`
+  * line and is left out of the timings. Text report → /tmp/regscan.txt;
+  * machine-readable JSON (per-query min seconds + total) →
+  * /tmp/regscan.json; the sf0.1 baseline is committed as
+  * `bench/regscan_sf01.json` so tail regressions are diffable. Optional
+  * args: comma-separated query subset; passes per query (default 2 —
+  * use 4+ for steady-state reads of a few queries: JIT ramp takes ~3
+  * executions on heavy codegen).
   *
   * Canary BRACKETING (r10 verdict #7): a session-start canary cannot
   * normalize a 10-minute sweep on a host whose speed moves mid-run
@@ -40,17 +45,15 @@ object RegScan {
     out.append(f"canary_job_pre $canaryJobPre%.3f (24 near-empty jobs, min-of-3)\n")
     val sel = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1)))
-    val times = sel.zipWithIndex.map { case ((name, fn), i) =>
+    val times = sel.zipWithIndex.flatMap { case ((name, fn), i) =>
       if (i > 0 && i % canaryEvery == 0)
         out.append(f"canary_mid@$i ${canary(i)}%.3f\n")
-      val samples = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-          out.append(s"ERR $name: ${e.getMessage.take(80)}\n"); -1L }
-        (System.nanoTime() - t0) / 1e9
+      val samples = (1 to passes).flatMap { _ =>
+        try Some(QueryProfile.materialize(spark, name)(fn(spark, sfDir))._2.wallSeconds)
+        catch { case e: Throwable =>
+          out.append(s"ERR $name: ${String.valueOf(e.getMessage).take(80)}\n"); None }
       }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      name -> samples.min
+      samples.minOption.map(name -> _)
     }
     val canaryPost = canary(sel.size)
     val canaryJobPost = HostCanary.canaryJobSec(spark)
@@ -65,7 +68,7 @@ object RegScan {
       .mkString("[", ",", "]")
     val json = times.sortBy(-_._2).map { case (n, s) =>
       f""""$n%s":$s%.3f""" }.mkString(
-      s"""{"sf_dir":"$sfDir","protocol":"min-of-$passes count()","n_queries":${times.size},""" +
+      s"""{"sf_dir":"$sfDir","protocol":"min-of-$passes materialized: each run builds the query and writes its full result through a noop write (QueryProfile.materialize); earlier REGSCAN artifacts timed count()","n_queries":${times.size},""" +
         f""""canary_sec":$canaryPre%.3f,"canary_pre":$canaryPre%.3f,"canary_post":$canaryPost%.3f,""" +
         f""""canary_job_pre":$canaryJobPre%.3f,"canary_job_post":$canaryJobPost%.3f,""" +
         s""""canary_series":$series,""" +

@@ -10,6 +10,7 @@
 #   probes  : code lines of src/test/scala/graft/probe/*.scala, same rule
 #   obs     : code lines of src/main/scala/graft/obs/*.scala, same rule
 #   functions: code lines of src/main/scala/graft/functions/*.scala, same rule
+#   bench   : code lines of src/main/scala/graft/Bench.scala, same rule
 cd "$(dirname "$0")/.." || exit 1
 q=$(grep -oh 'Q("q_[a-z0-9_]*"' src/main/scala/graft/queries/*.scala | sort -u | wc -l)
 t=$(grep -rhoE '^\s+(test|property)\(' src/test/scala --include='*.scala' | wc -l)
@@ -19,6 +20,7 @@ s=$(cat src/main/scala/graft/streaming/*.scala | grep -cvE "$code")
 p=$(cat src/test/scala/graft/probe/*.scala | grep -cvE "$code")
 o=$(cat src/main/scala/graft/obs/*.scala | grep -cvE "$code")
 f=$(cat src/main/scala/graft/functions/*.scala | grep -cvE "$code")
+b=$(grep -cvE "$code" src/main/scala/graft/Bench.scala)
 echo "queries: $q"
 echo "tests:   $t (registration sites; trust sbt's own total if they differ)"
 echo "engine:  $e code lines (src/main/scala/graft/engine/*.scala)"
@@ -26,3 +28,4 @@ echo "streaming: $s code lines (src/main/scala/graft/streaming/*.scala)"
 echo "probes:  $p code lines (src/test/scala/graft/probe/*.scala)"
 echo "obs:     $o code lines (src/main/scala/graft/obs/*.scala)"
 echo "functions: $f code lines (src/main/scala/graft/functions/*.scala)"
+echo "bench:   $b code lines (src/main/scala/graft/Bench.scala)"
